@@ -169,22 +169,6 @@ def merge_upsert(
     return kept.unionByName(updates)
 
 
-def overlapped_count(df: DataFrame) -> Callable[[], int]:
-    """Submit ``df.count()`` on a driver thread and return a thunk that
-    joins it — the update/delete metric counts (n_batch and friends) are
-    pure reads independent of the maintenance chain they precede, so the
-    count's job overlaps the chain's jobs instead of serializing in
-    front of them (guide §2.6; the r18 optimization round).  Values are
-    unchanged; a failing count raises at the thunk, alongside whatever
-    the chain itself would have raised over the same frame."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    fut = pool.submit(df.count)
-    pool.shutdown(wait=False)
-    return lambda: int(fut.result())
-
-
 def _require_local_path(path: str, op: str) -> None:
     """The swap protocol uses ``os.rename``/``os.listdir``, which only see
     the DRIVER-LOCAL filesystem.  A scheme-prefixed URI (hdfs://, s3a://,

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .text import tokens_col
+from ..concurrency import overlap
 from ..sources.readers import read_parquet_cached_schema as _read_pq
 
 
@@ -306,28 +307,29 @@ def update_segmentation_table(
     segmentation work proportional to NEW words only — the steady-state
     cost of tokenizing a growing corpus approaches the join-back alone.
     """
-    from ..maintenance import heal_if_interrupted, overlapped_count
+    from ..maintenance import heal_if_interrupted
     from ..sources.readers import read_parquet_if_exists
 
     spark = df.sparkSession
     wc = word_counts(df, text).select("word")
     # the batch-word metric count is independent of the segment/append
-    # chain — run it on a driver thread overlapping the chain (§2.6)
-    n_batch_of = overlapped_count(wc)
-    heal_if_interrupted(path)  # repair an interrupted compaction pre-read
-    table = read_parquet_if_exists(spark, path)  # None on first batch
-    existing = None if table is None else table.select("word")
-    new_words = (
-        wc if existing is None else wc.join(existing, "word", "left_anti")
-    )
-    seg = segment_words(new_words, merges).persist()
-    try:
-        n_new = seg.count()
-        if n_new:
-            seg.write.mode("append").parquet(path)
-    finally:
-        seg.unpersist()
-    return {"n_batch_words": n_batch_of(), "n_new_segmented": n_new}
+    # chain, so it overlaps the chain (§2.6)
+    with overlap() as o:
+        n_batch = o.submit("update_segmentation_table/n_batch", wc.count)
+        heal_if_interrupted(path)  # repair an interrupted compaction pre-read
+        table = read_parquet_if_exists(spark, path)  # None on first batch
+        existing = None if table is None else table.select("word")
+        new_words = (
+            wc if existing is None else wc.join(existing, "word", "left_anti")
+        )
+        seg = segment_words(new_words, merges).persist()
+        try:
+            n_new = seg.count()
+            if n_new:
+                seg.write.mode("append").parquet(path)
+        finally:
+            seg.unpersist()
+        return {"n_batch_words": n_batch.result(), "n_new_segmented": n_new}
 
 
 def segmentation_table_sink(

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .text import P_MOD, tokens_col
+from ..concurrency import overlap
 from ..sources.readers import read_parquet_cached_schema as _read_pq
 
 # Deterministic MinHash parameters — same series as plans/text_parity.
@@ -100,42 +101,43 @@ def upsert_latest_revisions(
     ``upsert_parquet`` staging/commit-marker swap for the winners only —
     a batch with no winners never rewrites the store.  Returns
     ``{"n_batch", "n_winners"}``."""
-    from ..maintenance import heal_if_interrupted, overlapped_count, upsert_parquet
+    from ..maintenance import heal_if_interrupted, upsert_parquet
     from ..sources.readers import read_parquet_if_exists
 
-    # the batch metric count is independent of the winner/upsert chain —
-    # run it on a driver thread overlapping the chain (§2.6)
-    n_batch_of = overlapped_count(batch)
-    winners = keep_latest_dedup(batch, key_cols, ts_col, id_col)
-    heal_if_interrupted(path)
-    store = read_parquet_if_exists(spark, path)
-    if store is not None:
-        cur = store.select(
-            *key_cols,
-            F.col(ts_col).alias("__cur_ts"),
-            F.col(id_col).alias("__cur_id"),
-        )
-        beats = (
-            F.col("__cur_ts").isNull()
-            | (F.col(ts_col) > F.col("__cur_ts"))
-            | (
-                (F.col(ts_col) == F.col("__cur_ts"))
-                & (F.col(id_col) > F.col("__cur_id"))
+    # the batch metric count is independent of the winner/upsert chain,
+    # so it overlaps the chain (§2.6)
+    with overlap() as o:
+        n_batch = o.submit("upsert_latest_revisions/n_batch", batch.count)
+        winners = keep_latest_dedup(batch, key_cols, ts_col, id_col)
+        heal_if_interrupted(path)
+        store = read_parquet_if_exists(spark, path)
+        if store is not None:
+            cur = store.select(
+                *key_cols,
+                F.col(ts_col).alias("__cur_ts"),
+                F.col(id_col).alias("__cur_id"),
             )
-        )
-        winners = (
-            winners.join(cur, key_cols, "left")
-            .filter(beats)
-            .drop("__cur_ts", "__cur_id")
-        )
-    winners = winners.localCheckpoint(eager=False)
-    n_winners = winners.count()
-    if n_winners:
-        # winners are unique per key and strictly newer than the store,
-        # so the plain key-merge (update takes the full payload) IS the
-        # max-compare merge here
-        upsert_parquet(spark, winners, path, key_cols)
-    return {"n_batch": n_batch_of(), "n_winners": int(n_winners)}
+            beats = (
+                F.col("__cur_ts").isNull()
+                | (F.col(ts_col) > F.col("__cur_ts"))
+                | (
+                    (F.col(ts_col) == F.col("__cur_ts"))
+                    & (F.col(id_col) > F.col("__cur_id"))
+                )
+            )
+            winners = (
+                winners.join(cur, key_cols, "left")
+                .filter(beats)
+                .drop("__cur_ts", "__cur_id")
+            )
+        winners = winners.localCheckpoint(eager=False)
+        n_winners = winners.count()
+        if n_winners:
+            # winners are unique per key and strictly newer than the store,
+            # so the plain key-merge (update takes the full payload) IS the
+            # max-compare merge here
+            upsert_parquet(spark, winners, path, key_cols)
+        return {"n_batch": n_batch.result(), "n_winners": int(n_winners)}
 
 
 def latest_revisions_sink(
@@ -748,31 +750,32 @@ def _update_doc_keyed_table(df, path: str, id_col: str, derive) -> dict[str, int
     "n_new_docs"}``; the second counts docs whose derivation actually ran
     (docs deriving zero rows re-check as "new" each batch but append
     nothing, so idempotence holds for them too)."""
-    from ..maintenance import heal_if_interrupted, overlapped_count
+    from ..maintenance import heal_if_interrupted
     from ..sources.readers import read_parquet_if_exists
 
     spark = df.sparkSession
     ids = df.select(id_col).distinct()
     # the batch-id metric count is independent of the derive/append
-    # chain — run it on a driver thread overlapping the chain (§2.6)
-    n_batch_of = overlapped_count(ids)
-    # heal BEFORE reading: a compaction killed mid-swap leaves the store
-    # momentarily absent — reading through that window would rebuild the
-    # table from one batch and break replay idempotence (maintenance note)
-    heal_if_interrupted(path)
-    table = read_parquet_if_exists(spark, path)  # None on first batch
-    existing = None if table is None else table.select(id_col).distinct()
-    new_docs = (
-        df if existing is None else df.join(existing, id_col, "left_anti")
-    )
-    rows = derive(new_docs).persist()
-    try:
-        n_new = rows.select(id_col).distinct().count()
-        if n_new:
-            rows.write.mode("append").parquet(path)
-    finally:
-        rows.unpersist()
-    return {"n_batch_docs": n_batch_of(), "n_new_docs": n_new}
+    # chain, so it overlaps the chain (§2.6)
+    with overlap() as o:
+        n_batch = o.submit("update_doc_keyed_table/n_batch", ids.count)
+        # heal BEFORE reading: a compaction killed mid-swap leaves the store
+        # momentarily absent — reading through that window would rebuild the
+        # table from one batch and break replay idempotence (maintenance note)
+        heal_if_interrupted(path)
+        table = read_parquet_if_exists(spark, path)  # None on first batch
+        existing = None if table is None else table.select(id_col).distinct()
+        new_docs = (
+            df if existing is None else df.join(existing, id_col, "left_anti")
+        )
+        rows = derive(new_docs).persist()
+        try:
+            n_new = rows.select(id_col).distinct().count()
+            if n_new:
+                rows.write.mode("append").parquet(path)
+        finally:
+            rows.unpersist()
+        return {"n_batch_docs": n_batch.result(), "n_new_docs": n_new}
 
 
 def update_signature_table(

@@ -59,6 +59,15 @@ MACD_FAST, MACD_SLOW, MACD_SIGNAL = 12, 26, 9
 VOL_PERIOD = 20
 TRADING_DAYS = 252
 
+# The indicator columns every path emits, in output order (ema_12/ema_26
+# in their documented slot after sma_50).
+IND_COLS = [
+    "rsi_14", "sma_20", "sma_50", "ema_12", "ema_26",
+    "bb_upper", "bb_lower", "bb_middle",
+    "macd", "macd_signal", "macd_histogram",
+    "volatility", "price_change_percent",
+]
+
 
 @dataclass(frozen=True)
 class SeriesSpec:
@@ -199,15 +208,8 @@ def with_indicators(df: DataFrame, spec: SeriesSpec | None = None) -> DataFrame:
         .withColumn("price_change_percent", price_change_pct_col(spec))
         .drop("__buf")
     )
-    # column order: keep ema_12/ema_26 in their documented slot (after sma_50)
     base = [c for c in df.columns if c != "__buf"]
-    ind_order = [
-        "rsi_14", "sma_20", "sma_50", "ema_12", "ema_26",
-        "bb_upper", "bb_lower", "bb_middle",
-        "macd", "macd_signal", "macd_histogram",
-        "volatility", "price_change_percent",
-    ]
-    return out.select(*base, *ind_order)
+    return out.select(*base, *IND_COLS)
 
 
 # ---------------------------------------------------------------------------
@@ -343,14 +345,8 @@ def indicators_apply_in_pandas(df: DataFrame, spec: SeriesSpec | None = None) ->
     time, no O(buffer) per-row arrays.  Output schema = input + indicator
     doubles (same names as ``with_indicators``)."""
     spec = spec or SeriesSpec()
-    added = [
-        "rsi_14", "sma_20", "sma_50", "ema_12", "ema_26",
-        "bb_upper", "bb_lower", "bb_middle",
-        "macd", "macd_signal", "macd_histogram",
-        "volatility", "price_change_percent",
-    ]
     schema_parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-    schema_parts += [f"`{c}` double" for c in added]
+    schema_parts += [f"`{c}` double" for c in IND_COLS]
     out_schema = ", ".join(schema_parts)
     # Pin the shuffle width: the grouped-map stage is CPU-bound per GROUP,
     # but its input is small in BYTES, so AQE would coalesce it to 2-3

@@ -27,6 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from ..concurrency import overlap
 from ..sources.readers import read_parquet_cached_schema as _read_pq
 
 
@@ -699,7 +700,6 @@ def rebuild_ivf_index(
         _require_local_path,
         _sibling_dirs,
         heal_if_interrupted,
-        overlapped_count,
     )
     from .clustering import kmeans_fit
 
@@ -717,40 +717,41 @@ def rebuild_ivf_index(
     acc = lists.select(vec_id, vec, *meta).localCheckpoint(eager=False)
     # the metric count is a pure read: overlap it with the fit unless
     # the √n rescale needs it up front (guide §2.6)
-    n_vectors_of = overlapped_count(acc)
-    if k is None:
-        k = ivf_lists_for(n_vectors_of())
-    cents_df = kmeans_fit(
-        acc.select(vec_id, vec), k=int(k), n_iter=n_iter,
-        vec_id=vec_id, vec=vec,
-    )
-    # kmeans_fit always emits a column literally named 'centroid_id' —
-    # rename to the caller's name so a custom centroid_id round-trips
-    # (r13 ADVICE: the select/collect below would otherwise raise)
-    if centroid_id != "centroid_id":
-        cents_df = cents_df.withColumnRenamed("centroid_id", centroid_id)
-    cents = _collect_codebook(cents_df, centroid_id, vec)
-    staging = f"{path}__staging_{_uuid.uuid4().hex}"
-    cents_df.select(F.col(centroid_id), F.col(vec)).write.mode(
-        "overwrite"
-    ).parquet(f"{staging}/centroids")
-    (
-        acc.select(
-            F.col(vec_id),
-            F.col(vec),
-            *[F.col(c) for c in meta],
-            centroid_argmax_pandas(cents)(F.col(vec)).alias(centroid_id),
+    with overlap() as o:
+        n_vectors = o.submit("rebuild_ivf_index/n_vectors", acc.count)
+        if k is None:
+            k = ivf_lists_for(n_vectors.result())
+        cents_df = kmeans_fit(
+            acc.select(vec_id, vec), k=int(k), n_iter=n_iter,
+            vec_id=vec_id, vec=vec,
         )
-        .write.mode("overwrite")
-        .partitionBy(centroid_id)
-        .parquet(f"{staging}/lists")
-    )
-    _mark_staging_complete(staging)
-    old = f"{path}__old_{_uuid.uuid4().hex}"
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
-    return {"n_vectors": int(n_vectors_of()), "k": int(k)}
+        # kmeans_fit always emits a column literally named 'centroid_id' —
+        # rename to the caller's name so a custom centroid_id round-trips
+        # (r13 ADVICE: the select/collect below would otherwise raise)
+        if centroid_id != "centroid_id":
+            cents_df = cents_df.withColumnRenamed("centroid_id", centroid_id)
+        cents = _collect_codebook(cents_df, centroid_id, vec)
+        staging = f"{path}__staging_{_uuid.uuid4().hex}"
+        cents_df.select(F.col(centroid_id), F.col(vec)).write.mode(
+            "overwrite"
+        ).parquet(f"{staging}/centroids")
+        (
+            acc.select(
+                F.col(vec_id),
+                F.col(vec),
+                *[F.col(c) for c in meta],
+                centroid_argmax_pandas(cents)(F.col(vec)).alias(centroid_id),
+            )
+            .write.mode("overwrite")
+            .partitionBy(centroid_id)
+            .parquet(f"{staging}/lists")
+        )
+        _mark_staging_complete(staging)
+        old = f"{path}__old_{_uuid.uuid4().hex}"
+        os.rename(path, old)
+        os.rename(staging, path)
+        shutil.rmtree(old)
+        return {"n_vectors": int(n_vectors.result()), "k": int(k)}
 
 
 def search_ivf_index(
@@ -1438,7 +1439,6 @@ def rebuild_pq_codes(
         _require_local_path,
         _sibling_dirs,
         heal_if_interrupted,
-        overlapped_count,
     )
 
     _require_local_path(path, "rebuild_pq_codes")
@@ -1456,10 +1456,10 @@ def rebuild_pq_codes(
     # rebuild_ivfpq_index discipline): pure reads, validated before any
     # write — no fs mutation on any failure path (the exception may be
     # the fit's own rather than the coverage message)
-    n_codes_of = overlapped_count(ids)
-    acc = corpus.join(ids, vec_id, "left_semi").localCheckpoint(eager=False)
-    n_acc_of = overlapped_count(acc)
-    try:
+    with overlap() as o:
+        codes_count = o.submit("rebuild_pq_codes/n_codes", ids.count)
+        acc = corpus.join(ids, vec_id, "left_semi").localCheckpoint(eager=False)
+        acc_count = o.submit("rebuild_pq_codes/n_acc", acc.count)
         cbs = pq_fit(
             acc, m=m or len(old_cbs), k=k or len(old_cbs[0]),
             vec_id=vec_id, vec=vec, n_iter=n_iter,
@@ -1467,16 +1467,7 @@ def rebuild_pq_codes(
             # the size-probe job over the corpus
             dim=len(old_cbs) * len(old_cbs[0][0]),
         )
-    except BaseException:
-        # best-effort join of the overlapped count jobs so the error
-        # path leaves no unjoined background work (r18 ADVICE)
-        for _thunk in (n_acc_of, n_codes_of):
-            try:
-                _thunk()
-            except Exception:
-                pass
-        raise
-    n_acc, n_codes = n_acc_of(), n_codes_of()
+        n_acc, n_codes = acc_count.result(), codes_count.result()
     if n_acc != n_codes:
         raise ValueError(
             f"rebuild corpus covers {n_acc} of the code table's {n_codes} "
@@ -1485,19 +1476,18 @@ def rebuild_pq_codes(
     staging = f"{path}__staging_{_uuid.uuid4().hex}"
     # the tiny staged codebook write is independent of the corpus-sized
     # encode write (disjoint staging subdirs of a not-yet-served root):
-    # overlap them on a driver thread (guide §2.6); the durability marker
-    # still lands strictly after BOTH writes return
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=1) as _pool:
-        _init_fut = _pool.submit(init_pq_index, spark, cbs, staging)
+    # overlap them (guide §2.6); the durability marker still lands
+    # strictly after BOTH writes return
+    with overlap() as o:
+        o.submit(
+            "rebuild_pq_codes/init_staging", init_pq_index, spark, cbs, staging
+        )
         (
             pq_encode(acc, cbs, vec=vec, arrow=True)
             .select(F.col(vec_id), F.col("pq_codes"))
             .write.mode("overwrite")
             .parquet(f"{staging}/codes")
         )
-        _init_fut.result()
     _mark_staging_complete(staging)
     old = f"{path}__old_{_uuid.uuid4().hex}"
     os.rename(path, old)
@@ -1770,16 +1760,14 @@ def init_ivfpq_index(spark, coarse, fine, path: str) -> None:
     ``update_ivfpq_index`` appends into.  Reuses the PQ codebook store
     for each level (coarse IS a one-subspace codebook).  The two writes
     target disjoint subdirectories of a not-yet-served root and carry
-    no session-global state, so they run on driver threads (guide §2.6
-    — two tiny fixed-overhead jobs overlap instead of serializing)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        for fut in [
-            pool.submit(init_pq_index, spark, coarse, f"{path}/coarse"),
-            pool.submit(init_pq_index, spark, fine, f"{path}/fine"),
-        ]:
-            fut.result()
+    no session-global state, so they overlap (guide §2.6 — two tiny
+    fixed-overhead jobs instead of two serialized ones)."""
+    with overlap() as o:
+        for level, cbs in (("coarse", coarse), ("fine", fine)):
+            o.submit(
+                f"init_ivfpq_index/{level}",
+                init_pq_index, spark, cbs, f"{path}/{level}",
+            )
 
 
 def load_ivfpq_quantizers(spark, path: str):
@@ -1901,7 +1889,6 @@ def rebuild_ivfpq_index(
         _require_local_path,
         _sibling_dirs,
         heal_if_interrupted,
-        overlapped_count,
     )
 
     _require_local_path(path, "rebuild_ivfpq_index")
@@ -1930,21 +1917,21 @@ def rebuild_ivfpq_index(
     # failure path (the exception may be the fit's own rather than the
     # coverage message), and the success path stops serializing two
     # full count jobs in front of the fit
-    n_index_of = overlapped_count(ids)
-    acc = corpus.join(ids, vec_id, "left_semi").localCheckpoint(eager=False)
-    n_acc_of = overlapped_count(acc)
-    if n_lists is None:
-        # the √n rescale needs the accumulated count before the fit
-        n_lists = ivf_lists_for(n_acc_of())
-    # dim is fixed by the standing codebooks (m · d_sub) — deriving it
-    # here saves pq_fit's size-probe job over the corpus
-    dim = len(old_fine) * len(old_fine[0][0])
-    # fit and encode share ONE residual pass (the ivfpq_build contract):
-    # ivfpq_fit + ivfpq_encode would re-run the coarse assignment over
-    # the full corpus a second time just to rebuild the residual frame
-    # the fine fit already materialized (guide §1.2 — at 100 TB that is
-    # an entire extra corpus pass)
-    try:
+    with overlap() as o:
+        index_count = o.submit("rebuild_ivfpq_index/n_index", ids.count)
+        acc = corpus.join(ids, vec_id, "left_semi").localCheckpoint(eager=False)
+        acc_count = o.submit("rebuild_ivfpq_index/n_acc", acc.count)
+        if n_lists is None:
+            # the √n rescale needs the accumulated count before the fit
+            n_lists = ivf_lists_for(acc_count.result())
+        # dim is fixed by the standing codebooks (m · d_sub) — deriving it
+        # here saves pq_fit's size-probe job over the corpus
+        dim = len(old_fine) * len(old_fine[0][0])
+        # fit and encode share ONE residual pass (the ivfpq_build contract):
+        # ivfpq_fit + ivfpq_encode would re-run the coarse assignment over
+        # the full corpus a second time just to rebuild the residual frame
+        # the fine fit already materialized (guide §1.2 — at 100 TB that is
+        # an entire extra corpus pass)
         coarse = pq_fit(
             acc, m=1, k=n_lists, vec_id=vec_id, vec=vec, n_iter=n_iter, dim=dim
         )
@@ -1954,7 +1941,7 @@ def rebuild_ivfpq_index(
         # joining here is ~free on the success path, while a doomed
         # rebuild no longer pays the full fine retrain before failing.
         # Still strictly before any write — no fs mutation either way.
-        n_acc, n_index = n_acc_of(), n_index_of()
+        n_acc, n_index = acc_count.result(), index_count.result()
         if n_acc != n_index:
             raise ValueError(
                 f"rebuild corpus covers {n_acc} of the index's {n_index} "
@@ -1972,25 +1959,15 @@ def rebuild_ivfpq_index(
             n_iter=n_iter,
             dim=dim,
         )
-    except BaseException:
-        # best-effort join of the overlapped count jobs so the error
-        # path leaves no unjoined background work (r18 ADVICE); the
-        # original exception — which may be the fit's own, not the
-        # coverage message — propagates unchanged
-        for _thunk in (n_acc_of, n_index_of):
-            try:
-                _thunk()
-            except Exception:
-                pass
-        raise
     staging = f"{path}__staging_{_uuid.uuid4().hex}"
     # the two tiny quantizer-level writes are independent of the
     # corpus-sized encode write (disjoint staging subdirs): overlap them
     # (guide §2.6); the durability marker lands after ALL writes return
-    from concurrent.futures import ThreadPoolExecutor as _TPE
-
-    with _TPE(max_workers=1) as _pool:
-        _init_fut = _pool.submit(init_ivfpq_index, spark, coarse, fine, staging)
+    with overlap() as o:
+        o.submit(
+            "rebuild_ivfpq_index/init_staging",
+            init_ivfpq_index, spark, coarse, fine, staging,
+        )
         (
             pq_encode(res, fine, vec="residual", arrow=True)
             .select(F.col(vec_id), F.col("list_id"), F.col("pq_codes"),
@@ -1999,7 +1976,6 @@ def rebuild_ivfpq_index(
             .partitionBy("list_id")
             .parquet(f"{staging}/index")
         )
-        _init_fut.result()
     _mark_staging_complete(staging)
     old = f"{path}__old_{_uuid.uuid4().hex}"
     os.rename(path, old)
@@ -2124,7 +2100,7 @@ def delete_from_ivfpq_index(
     column + one anti-join against the deletion-sized tombstone table +
     an append ∝ the batch.  Nothing corpus-sized is rewritten — that is
     purge's (amortized, partition-pruned) job."""
-    from ..maintenance import heal_if_interrupted, overlapped_count
+    from ..maintenance import heal_if_interrupted
     from ..sources.readers import read_parquet_if_exists
     from .takedown import _append_new_tombstones
 
@@ -2132,15 +2108,16 @@ def delete_from_ivfpq_index(
     heal_if_interrupted(f"{path}/index")
     batch = ids.select(vec_id).distinct()
     # metric count overlaps the semi-join/append chain (§2.6)
-    n_batch_of = overlapped_count(batch)
-    index = read_parquet_if_exists(spark, f"{path}/index")
-    if index is None:
-        return {"n_batch_ids": n_batch_of(), "n_new_tombstones": 0}
-    present = batch.join(index.select(vec_id), vec_id, "left_semi")
-    n_new = _append_new_tombstones(
-        spark, present, f"{path}/tombstones", vec_id
-    )
-    return {"n_batch_ids": n_batch_of(), "n_new_tombstones": n_new}
+    with overlap() as o:
+        n_batch = o.submit("delete_from_ivfpq_index/n_batch", batch.count)
+        index = read_parquet_if_exists(spark, f"{path}/index")
+        if index is None:
+            return {"n_batch_ids": n_batch.result(), "n_new_tombstones": 0}
+        present = batch.join(index.select(vec_id), vec_id, "left_semi")
+        n_new = _append_new_tombstones(
+            spark, present, f"{path}/tombstones", vec_id
+        )
+        return {"n_batch_ids": n_batch.result(), "n_new_tombstones": n_new}
 
 
 def purge_ivfpq_tombstones(
@@ -2186,7 +2163,7 @@ def delete_from_ivf_index(
     deleted vector can never be served, ``purge_ivf_tombstones`` later
     removes the rows physically.  Returns ``{"n_batch_ids",
     "n_new_tombstones"}``."""
-    from ..maintenance import heal_if_interrupted, overlapped_count
+    from ..maintenance import heal_if_interrupted
     from ..sources.readers import read_parquet_if_exists
     from .takedown import _append_new_tombstones
 
@@ -2194,15 +2171,16 @@ def delete_from_ivf_index(
     heal_if_interrupted(f"{path}/lists")
     batch = ids.select(vec_id).distinct()
     # metric count overlaps the semi-join/append chain (§2.6)
-    n_batch_of = overlapped_count(batch)
-    lists = read_parquet_if_exists(spark, f"{path}/lists")
-    if lists is None:
-        return {"n_batch_ids": n_batch_of(), "n_new_tombstones": 0}
-    present = batch.join(lists.select(vec_id), vec_id, "left_semi")
-    n_new = _append_new_tombstones(
-        spark, present, f"{path}/tombstones", vec_id
-    )
-    return {"n_batch_ids": n_batch_of(), "n_new_tombstones": n_new}
+    with overlap() as o:
+        n_batch = o.submit("delete_from_ivf_index/n_batch", batch.count)
+        lists = read_parquet_if_exists(spark, f"{path}/lists")
+        if lists is None:
+            return {"n_batch_ids": n_batch.result(), "n_new_tombstones": 0}
+        present = batch.join(lists.select(vec_id), vec_id, "left_semi")
+        n_new = _append_new_tombstones(
+            spark, present, f"{path}/tombstones", vec_id
+        )
+        return {"n_batch_ids": n_batch.result(), "n_new_tombstones": n_new}
 
 
 def purge_ivf_tombstones(
@@ -2987,7 +2965,6 @@ def rebuild_semantic_index(
         _require_local_path,
         _sibling_dirs,
         heal_if_interrupted,
-        overlapped_count,
     )
     from .clustering import kmeans_fit
 
@@ -3008,41 +2985,44 @@ def rebuild_semantic_index(
     )
     # pure-read metric count overlaps the fit unless the rescale rule
     # needs it up front (guide §2.6, the rebuild_ivf_index discipline)
-    n_vectors_of = overlapped_count(acc)
-    if k is None:
-        k = semdedup_k(n_vectors_of(), target_cluster_size)
-    cents_df = kmeans_fit(acc, k=int(k), n_iter=n_iter, vec_id=vec_id, vec=vec)
-    cents = [
-        (int(r["centroid_id"]), [float(x) for x in r[vec]])
-        for r in cents_df.collect()
-    ]
-    if arrow is None:
-        arrow = len(cents) >= SEMDEDUP_AUTO_ARROW_K
-    assigned = semantic_assignment(acc, cents, vec_id, vec, arrow)
-    # checkpoint the pair frame: .count() below and the staged write
-    # would otherwise EACH run the full within-cluster GEMM pass,
-    # doubling the "price of ONE one-shot SemDeDup" (r13 ADVICE)
-    pairs = _pairs_from_assignment(
-        assigned, threshold, vec_id, vec, arrow
-    ).localCheckpoint(eager=False)
-    staging = f"{path}__staging_{_uuid.uuid4().hex}"
-    cents_df.select(F.col("centroid_id"), F.col(vec)).write.mode(
-        "overwrite"
-    ).parquet(f"{staging}/centroids")
-    assigned.write.mode("overwrite").parquet(f"{staging}/assigned")
-    n_pairs = pairs.count()
-    if n_pairs:
-        # the pairs directory materializes with the first dup pair — the
-        # update contract's empty-store rule, preserved across rebuilds
-        pairs.write.mode("overwrite").parquet(f"{staging}/pairs")
-    _mark_staging_complete(staging)
-    old = f"{path}__old_{_uuid.uuid4().hex}"
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
-    return {
-        "n_vectors": int(n_vectors_of()), "k": int(k), "n_pairs": int(n_pairs)
-    }
+    with overlap() as o:
+        n_vectors = o.submit("rebuild_semantic_index/n_vectors", acc.count)
+        if k is None:
+            k = semdedup_k(n_vectors.result(), target_cluster_size)
+        cents_df = kmeans_fit(acc, k=int(k), n_iter=n_iter, vec_id=vec_id, vec=vec)
+        cents = [
+            (int(r["centroid_id"]), [float(x) for x in r[vec]])
+            for r in cents_df.collect()
+        ]
+        if arrow is None:
+            arrow = len(cents) >= SEMDEDUP_AUTO_ARROW_K
+        assigned = semantic_assignment(acc, cents, vec_id, vec, arrow)
+        # checkpoint the pair frame: .count() below and the staged write
+        # would otherwise EACH run the full within-cluster GEMM pass,
+        # doubling the "price of ONE one-shot SemDeDup" (r13 ADVICE)
+        pairs = _pairs_from_assignment(
+            assigned, threshold, vec_id, vec, arrow
+        ).localCheckpoint(eager=False)
+        staging = f"{path}__staging_{_uuid.uuid4().hex}"
+        cents_df.select(F.col("centroid_id"), F.col(vec)).write.mode(
+            "overwrite"
+        ).parquet(f"{staging}/centroids")
+        assigned.write.mode("overwrite").parquet(f"{staging}/assigned")
+        n_pairs = pairs.count()
+        if n_pairs:
+            # the pairs directory materializes with the first dup pair — the
+            # update contract's empty-store rule, preserved across rebuilds
+            pairs.write.mode("overwrite").parquet(f"{staging}/pairs")
+        _mark_staging_complete(staging)
+        old = f"{path}__old_{_uuid.uuid4().hex}"
+        os.rename(path, old)
+        os.rename(staging, path)
+        shutil.rmtree(old)
+        return {
+            "n_vectors": int(n_vectors.result()),
+            "k": int(k),
+            "n_pairs": int(n_pairs),
+        }
 
 
 def semantic_index_sink(

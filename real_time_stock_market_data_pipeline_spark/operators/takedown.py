@@ -57,6 +57,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..concurrency import overlap
+
 
 def tombstone_path(table_path: str) -> str:
     """Sibling tombstone dir for a FLAT table (the table path itself is
@@ -121,21 +123,22 @@ def tombstone_doc_keyed_table(
     (signature / shingle / fingerprint / segmentation stores): ids
     present in the table enter the sibling tombstone table; readers
     exclude them immediately via ``minus_tombstones``."""
-    from ..maintenance import heal_if_interrupted, overlapped_count
+    from ..maintenance import heal_if_interrupted
     from ..sources.readers import read_parquet_if_exists
 
     heal_if_interrupted(table_path)
     batch = ids.select(id_col).distinct()
     # metric count overlaps the semi-join/append chain (§2.6)
-    n_batch_of = overlapped_count(batch)
-    table = read_parquet_if_exists(spark, table_path)
-    if table is None:
-        return {"n_batch_ids": n_batch_of(), "n_new_tombstones": 0}
-    present = batch.join(table.select(id_col), id_col, "left_semi")
-    n_new = _append_new_tombstones(
-        spark, present, tombstone_path(table_path), id_col
-    )
-    return {"n_batch_ids": n_batch_of(), "n_new_tombstones": n_new}
+    with overlap() as o:
+        n_batch = o.submit("tombstone_doc_keyed_table/n_batch", batch.count)
+        table = read_parquet_if_exists(spark, table_path)
+        if table is None:
+            return {"n_batch_ids": n_batch.result(), "n_new_tombstones": 0}
+        present = batch.join(table.select(id_col), id_col, "left_semi")
+        n_new = _append_new_tombstones(
+            spark, present, tombstone_path(table_path), id_col
+        )
+        return {"n_batch_ids": n_batch.result(), "n_new_tombstones": n_new}
 
 
 def minus_tombstones(
@@ -224,20 +227,21 @@ def tombstone_semantic_index(
     ``{root}/pairs``): tombstoned ids leave serving immediately —
     ``semantic_pairs_minus_tombstones`` retracts every pair touching a
     deleted id on EITHER end (a pair is a function of both docs)."""
-    from ..maintenance import heal_if_interrupted, overlapped_count
+    from ..maintenance import heal_if_interrupted
     from ..sources.readers import read_parquet_if_exists
 
     heal_if_interrupted(root)
     heal_if_interrupted(f"{root}/assigned")
     batch = ids.select(vec_id).distinct()
     # metric count overlaps the semi-join/append chain (§2.6)
-    n_batch_of = overlapped_count(batch)
-    assigned = read_parquet_if_exists(spark, f"{root}/assigned")
-    if assigned is None:
-        return {"n_batch_ids": n_batch_of(), "n_new_tombstones": 0}
-    present = batch.join(assigned.select(vec_id), vec_id, "left_semi")
-    n_new = _append_new_tombstones(spark, present, f"{root}/tombstones", vec_id)
-    return {"n_batch_ids": n_batch_of(), "n_new_tombstones": n_new}
+    with overlap() as o:
+        n_batch = o.submit("tombstone_semantic_index/n_batch", batch.count)
+        assigned = read_parquet_if_exists(spark, f"{root}/assigned")
+        if assigned is None:
+            return {"n_batch_ids": n_batch.result(), "n_new_tombstones": 0}
+        present = batch.join(assigned.select(vec_id), vec_id, "left_semi")
+        n_new = _append_new_tombstones(spark, present, f"{root}/tombstones", vec_id)
+        return {"n_batch_ids": n_batch.result(), "n_new_tombstones": n_new}
 
 
 def semantic_assigned_minus_tombstones(
@@ -413,20 +417,20 @@ def _per_family(fn, roots: dict[str, str]) -> dict[str, dict]:
     stores — every helper touches only its own root and no session-global
     state (the dd18/dq5 thread invariant, pinned by
     tests/test_takedown.py::test_umbrella_threaded_equals_sequential) —
-    so multi-family requests run on driver threads (r18 optimization:
-    each family is a chain of tiny fixed-overhead jobs; serializing them
-    made the umbrella ≈ Σ families).  Errors re-raise in deterministic
-    family order."""
+    so multi-family requests overlap (r18 optimization: each family is a
+    chain of tiny fixed-overhead jobs; serializing them made the
+    umbrella ≈ Σ families).  Errors re-raise in deterministic family
+    order.  Each family's jobs are described ``{caller}/{family}``."""
     items = list(roots.items())
     if len(items) <= 1:
         return {family: fn(family, path) for family, path in items}
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(items)) as pool:
-        futures = [
-            (family, pool.submit(fn, family, path)) for family, path in items
+    caller = fn.__qualname__.split(".")[0]
+    with overlap() as o:
+        handles = [
+            (family, o.submit(f"{caller}/{family}", fn, family, path))
+            for family, path in items
         ]
-        return {family: f.result() for family, f in futures}
+    return {family: h.result() for family, h in handles}
 
 
 def takedown(
@@ -671,8 +675,8 @@ def takedown_compliance(
             status = "clean"
         return (family, n_req, n_tomb, n_phys, clean, status)
 
-    # audited families run on driver threads (read-only per-family checks
-    # on disjoint stores — see _per_family); output order stays sorted
+    # audited families overlap (read-only per-family checks on disjoint
+    # stores — see _per_family); output order stays sorted
     per_fam = _per_family(one, {f: roots[f] for f in sorted(roots)})
     rows = [per_fam[f] for f in sorted(roots)]
     return spark.createDataFrame(

@@ -18,6 +18,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from ..concurrency import overlap
 from ..sources.readers import read_parquet_cached_schema as _read_pq
 
 P_MOD = 1_000_000_007
@@ -358,72 +359,75 @@ def update_bm25_postings(
     _require_local_path(tf_path, "update_bm25_postings")
     heal_if_interrupted(tf_path)
     heal_if_interrupted(df_path)
-    # the batch-doc metric count is independent of the tf/df chain —
-    # run it on a driver thread overlapping the chain (§2.6)
-    from ..maintenance import overlapped_count
-
-    n_batch_of = overlapped_count(batch_df.select(id_col).distinct())
-    standing = read_parquet_if_exists(spark, tf_path)
-    new = (
-        batch_df
-        if standing is None
-        else batch_df.join(standing.select(id_col).distinct(), id_col, "left_anti")
-    )
-    counts = (
-        new.select(F.col(id_col), F.explode(F.expr(split_ws("spark", text))).alias("tok"))
-        .groupBy(id_col, "tok")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
-    )
-    dl = counts.groupBy(id_col).agg(F.sum("tf").cast("bigint").alias("dl"))
-    # feeds the delta aggregate AND the append — snapshot once
-    tf_rows = counts.join(dl, id_col).localCheckpoint(eager=False)
-    n_new = tf_rows.select(id_col).distinct().count()
-    hwm = _read_bm25_hwm(df_path)
-    df_applied = batch_id > hwm
-    if df_applied:
-        deltas = tf_rows.groupBy("tok").agg(
-            F.count(F.lit(1)).cast("bigint").alias("delta")
+    # the batch-doc metric count is independent of the tf/df chain, so
+    # it overlaps the chain (§2.6)
+    with overlap() as o:
+        n_batch = o.submit(
+            "update_bm25_postings/n_batch", batch_df.select(id_col).distinct().count
         )
-        existing = read_parquet_if_exists(spark, df_path)
-        if existing is None:
-            merged = deltas.select("tok", F.col("delta").alias("df"))
-        else:
-            from ..maintenance import merge_upsert
-
-            updates = (
-                deltas.join(existing, "tok", "left")
-                .select(
-                    "tok",
-                    (F.coalesce(F.col("df"), F.lit(0)) + F.col("delta"))
-                    .cast("bigint")
-                    .alias("df"),
-                )
+        standing = read_parquet_if_exists(spark, tf_path)
+        new = (
+            batch_df
+            if standing is None
+            else batch_df.join(standing.select(id_col).distinct(), id_col, "left_anti")
+        )
+        counts = (
+            new.select(
+                F.col(id_col), F.explode(F.expr(split_ws("spark", text))).alias("tok")
             )
-            merged = merge_upsert(existing, updates, ["tok"])
-        staging = f"{df_path}__staging_{uuid.uuid4().hex}"
-        merged.write.mode("overwrite").parquet(staging)
-        with open(os.path.join(staging, BM25_HWM_FILE), "w") as f:
-            f.write(str(batch_id))
-        # the takedown epoch hwm (purge_bm25_postings) must survive the
-        # ingest swap, or a replayed purge would re-decrement df
-        td_hwm = _read_bm25_hwm(df_path, BM25_TD_HWM_FILE)
-        if td_hwm >= 0:
-            with open(os.path.join(staging, BM25_TD_HWM_FILE), "w") as f:
-                f.write(str(td_hwm))
-        _mark_staging_complete(staging)
-        old = f"{df_path}__old_{uuid.uuid4().hex}"
-        if os.path.exists(df_path):
-            os.rename(df_path, old)
-        os.rename(staging, df_path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-    if n_new:
-        tf_rows.write.mode("append").parquet(tf_path)
-    return {
-        "n_batch_docs": n_batch_of(),
-        "n_new_docs": n_new,
-        "df_applied": df_applied,
-    }
+            .groupBy(id_col, "tok")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
+        )
+        dl = counts.groupBy(id_col).agg(F.sum("tf").cast("bigint").alias("dl"))
+        # feeds the delta aggregate AND the append — snapshot once
+        tf_rows = counts.join(dl, id_col).localCheckpoint(eager=False)
+        n_new = tf_rows.select(id_col).distinct().count()
+        hwm = _read_bm25_hwm(df_path)
+        df_applied = batch_id > hwm
+        if df_applied:
+            deltas = tf_rows.groupBy("tok").agg(
+                F.count(F.lit(1)).cast("bigint").alias("delta")
+            )
+            existing = read_parquet_if_exists(spark, df_path)
+            if existing is None:
+                merged = deltas.select("tok", F.col("delta").alias("df"))
+            else:
+                from ..maintenance import merge_upsert
+
+                updates = (
+                    deltas.join(existing, "tok", "left")
+                    .select(
+                        "tok",
+                        (F.coalesce(F.col("df"), F.lit(0)) + F.col("delta"))
+                        .cast("bigint")
+                        .alias("df"),
+                    )
+                )
+                merged = merge_upsert(existing, updates, ["tok"])
+            staging = f"{df_path}__staging_{uuid.uuid4().hex}"
+            merged.write.mode("overwrite").parquet(staging)
+            with open(os.path.join(staging, BM25_HWM_FILE), "w") as f:
+                f.write(str(batch_id))
+            # the takedown epoch hwm (purge_bm25_postings) must survive the
+            # ingest swap, or a replayed purge would re-decrement df
+            td_hwm = _read_bm25_hwm(df_path, BM25_TD_HWM_FILE)
+            if td_hwm >= 0:
+                with open(os.path.join(staging, BM25_TD_HWM_FILE), "w") as f:
+                    f.write(str(td_hwm))
+            _mark_staging_complete(staging)
+            old = f"{df_path}__old_{uuid.uuid4().hex}"
+            if os.path.exists(df_path):
+                os.rename(df_path, old)
+            os.rename(staging, df_path)
+            if os.path.exists(old):
+                shutil.rmtree(old)
+        if n_new:
+            tf_rows.write.mode("append").parquet(tf_path)
+        return {
+            "n_batch_docs": n_batch.result(),
+            "n_new_docs": n_new,
+            "df_applied": df_applied,
+        }
 
 
 def takedown_bm25_postings(
@@ -456,7 +460,6 @@ def takedown_bm25_postings(
     from ..maintenance import (
         _require_local_path,
         heal_if_interrupted,
-        overlapped_count,
     )
     from ..sources.readers import read_parquet_if_exists
 
@@ -468,28 +471,29 @@ def takedown_bm25_postings(
     t_path = os.path.join(path, "tombstones")
     batch = ids.select(id_col).distinct()
     # metric count overlaps the semi-join/epoch/append chain (§2.6)
-    n_batch_of = overlapped_count(batch)
-    tf = read_parquet_if_exists(spark, tf_path)
-    if tf is None:
-        return {"n_batch_ids": n_batch_of(), "n_new_tombstones": 0}
-    present = batch.join(tf.select(id_col), id_col, "left_semi")
-    standing = read_parquet_if_exists(spark, t_path)
-    epoch = _read_bm25_hwm(df_path, BM25_TD_HWM_FILE)
-    if standing is not None:
-        prior = standing.agg(F.max("td_epoch")).first()[0]
-        epoch = max(epoch, -1 if prior is None else int(prior))
-        present = present.join(
-            standing.select(id_col).distinct(), id_col, "left_anti"
-        )
-    new = present.withColumn("td_epoch", F.lit(epoch + 1).cast("bigint"))
-    new = new.persist()
-    try:
-        n_new = new.count()
-        if n_new:
-            new.write.mode("append").parquet(t_path)
-    finally:
-        new.unpersist()
-    return {"n_batch_ids": n_batch_of(), "n_new_tombstones": n_new}
+    with overlap() as o:
+        n_batch = o.submit("takedown_bm25_postings/n_batch", batch.count)
+        tf = read_parquet_if_exists(spark, tf_path)
+        if tf is None:
+            return {"n_batch_ids": n_batch.result(), "n_new_tombstones": 0}
+        present = batch.join(tf.select(id_col), id_col, "left_semi")
+        standing = read_parquet_if_exists(spark, t_path)
+        epoch = _read_bm25_hwm(df_path, BM25_TD_HWM_FILE)
+        if standing is not None:
+            prior = standing.agg(F.max("td_epoch")).first()[0]
+            epoch = max(epoch, -1 if prior is None else int(prior))
+            present = present.join(
+                standing.select(id_col).distinct(), id_col, "left_anti"
+            )
+        new = present.withColumn("td_epoch", F.lit(epoch + 1).cast("bigint"))
+        new = new.persist()
+        try:
+            n_new = new.count()
+            if n_new:
+                new.write.mode("append").parquet(t_path)
+        finally:
+            new.unpersist()
+        return {"n_batch_ids": n_batch.result(), "n_new_tombstones": n_new}
 
 
 def bm25_tf_minus_tombstones(spark, path: str, id_col: str = "doc_id"):
@@ -1040,56 +1044,57 @@ def update_curriculum_shards(
     n_shards = CURRICULUM_SHARDS
     batch = batch.filter(F.col(text).isNotNull())
     # metric count overlaps the score/reshard chain (§2.6)
-    from ..maintenance import overlapped_count
-
-    n_batch_of = overlapped_count(batch.select(id_col).distinct())
-    standing = read_parquet_if_exists(spark, docs_path)
-    if standing is None:
-        raise ValueError(
-            f"no curriculum store at {path!r}; run init_curriculum_store"
+    with overlap() as o:
+        n_batch = o.submit(
+            "update_curriculum_shards/n_batch", batch.select(id_col).distinct().count
         )
-    new_docs = batch.join(
-        standing.select(F.col("doc_id").alias(id_col)).distinct(),
-        id_col,
-        "left_anti",
-    )
-    bc, uc, v = load_curriculum_model(spark, path)
-    scored_new = score_under_curriculum_model(
-        new_docs, bc, uc, v, id_col, text
-    ).localCheckpoint()
-    n_new = scored_new.count()
-    if n_new == 0:
-        return {
-            "n_batch_ids": n_batch_of(), "n_new_docs": 0,
-            "n_buckets_touched": 0, "n_shards_rewritten": 0,
-        }
-    touched = sorted(
-        r[0] for r in scored_new.select("bucket").distinct().collect()
-    )
-    old = standing.select(
-        *_CURRICULUM_DOC_COLS,
-        F.col("shard_id").cast("bigint").alias("old_shard"),
-    )
-    untouched = old.filter(~F.col("bucket").isin(touched))
-    reranked = _with_wrk(
-        old.filter(F.col("bucket").isin(touched))
-        .select("doc_id", "ppl", "n_tokens", "bucket", "old_shard")
-        .unionByName(
-            scored_new.select(
-                "doc_id", "ppl", "n_tokens", "bucket",
-                F.lit(None).cast("bigint").alias("old_shard"),
+        standing = read_parquet_if_exists(spark, docs_path)
+        if standing is None:
+            raise ValueError(
+                f"no curriculum store at {path!r}; run init_curriculum_store"
+            )
+        new_docs = batch.join(
+            standing.select(F.col("doc_id").alias(id_col)).distinct(),
+            id_col,
+            "left_anti",
+        )
+        bc, uc, v = load_curriculum_model(spark, path)
+        scored_new = score_under_curriculum_model(
+            new_docs, bc, uc, v, id_col, text
+        ).localCheckpoint()
+        n_new = scored_new.count()
+        if n_new == 0:
+            return {
+                "n_batch_ids": n_batch.result(), "n_new_docs": 0,
+                "n_buckets_touched": 0, "n_shards_rewritten": 0,
+            }
+        touched = sorted(
+            r[0] for r in scored_new.select("bucket").distinct().collect()
+        )
+        old = standing.select(
+            *_CURRICULUM_DOC_COLS,
+            F.col("shard_id").cast("bigint").alias("old_shard"),
+        )
+        untouched = old.filter(~F.col("bucket").isin(touched))
+        reranked = _with_wrk(
+            old.filter(F.col("bucket").isin(touched))
+            .select("doc_id", "ppl", "n_tokens", "bucket", "old_shard")
+            .unionByName(
+                scored_new.select(
+                    "doc_id", "ppl", "n_tokens", "bucket",
+                    F.lit(None).cast("bigint").alias("old_shard"),
+                )
             )
         )
-    )
-    n_rewritten = _curriculum_reshard_swap(
-        docs_path, untouched, reranked, touched, n_shards
-    )
-    return {
-        "n_batch_ids": n_batch_of(),
-        "n_new_docs": n_new,
-        "n_buckets_touched": len(touched),
-        "n_shards_rewritten": n_rewritten,
-    }
+        n_rewritten = _curriculum_reshard_swap(
+            docs_path, untouched, reranked, touched, n_shards
+        )
+        return {
+            "n_batch_ids": n_batch.result(),
+            "n_new_docs": n_new,
+            "n_buckets_touched": len(touched),
+            "n_shards_rewritten": n_rewritten,
+        }
 
 
 def _curriculum_reshard_swap(
@@ -1194,19 +1199,18 @@ def takedown_curriculum_store(
     heal_if_interrupted(docs_path)
     batch = ids.select(id_col).distinct()
     # metric count overlaps the semi-join/append chain (§2.6)
-    from ..maintenance import overlapped_count
-
-    n_batch_of = overlapped_count(batch)
-    docs = read_parquet_if_exists(spark, docs_path)
-    if docs is None:
-        return {"n_batch_ids": n_batch_of(), "n_new_tombstones": 0}
-    present = batch.join(
-        docs.select(F.col("doc_id").alias(id_col)), id_col, "left_semi"
-    ).select(F.col(id_col).alias("doc_id"))
-    n_new = _append_new_tombstones(
-        spark, present, _os.path.join(path, "tombstones"), "doc_id"
-    )
-    return {"n_batch_ids": n_batch_of(), "n_new_tombstones": n_new}
+    with overlap() as o:
+        n_batch = o.submit("takedown_curriculum_store/n_batch", batch.count)
+        docs = read_parquet_if_exists(spark, docs_path)
+        if docs is None:
+            return {"n_batch_ids": n_batch.result(), "n_new_tombstones": 0}
+        present = batch.join(
+            docs.select(F.col("doc_id").alias(id_col)), id_col, "left_semi"
+        ).select(F.col(id_col).alias("doc_id"))
+        n_new = _append_new_tombstones(
+            spark, present, _os.path.join(path, "tombstones"), "doc_id"
+        )
+        return {"n_batch_ids": n_batch.result(), "n_new_tombstones": n_new}
 
 
 def purge_curriculum_tombstones(spark, path: str) -> dict[str, int]:
@@ -1363,23 +1367,26 @@ def rebuild_curriculum_store(
             "doc_id",
             "left_anti",
         )
-    from ..maintenance import overlapped_count
-
     # coverage-validation counts are pure reads independent of the
     # retrain: overlap them with the train (guide §2.6, the
     # rebuild_ivfpq_index discipline) and validate before any write —
     # same exception on failure, no fs mutation either way
-    n_standing_of = overlapped_count(standing)
-    acc = (
-        corpus.filter(F.col(text).isNotNull())
-        .join(
-            standing.withColumnRenamed("doc_id", id_col), id_col, "left_semi"
+    with overlap() as o:
+        standing_count = o.submit(
+            "rebuild_curriculum_store/n_standing", standing.count
         )
-        .localCheckpoint(eager=False)
-    )
-    n_acc_of = overlapped_count(acc.select(id_col).distinct())
-    bc, uc, v, bigp = _train_curriculum_model_shared(acc, id_col, text)
-    n_acc, n_standing = n_acc_of(), n_standing_of()
+        acc = (
+            corpus.filter(F.col(text).isNotNull())
+            .join(
+                standing.withColumnRenamed("doc_id", id_col), id_col, "left_semi"
+            )
+            .localCheckpoint(eager=False)
+        )
+        acc_count = o.submit(
+            "rebuild_curriculum_store/n_acc", acc.select(id_col).distinct().count
+        )
+        bc, uc, v, bigp = _train_curriculum_model_shared(acc, id_col, text)
+        n_acc, n_standing = acc_count.result(), standing_count.result()
     if n_acc != n_standing:
         raise ValueError(
             f"rebuild corpus covers {n_acc} of the store's {n_standing} "

@@ -52,6 +52,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..concurrency import overlap
 from ..operators.dedup import DECON_BAND_SIZE
 from ..operators.sampling import N_BUCKETS, SPLIT_BOUNDS
 from ..sources.readers import load_table
@@ -344,27 +345,22 @@ def _dq6_contamination_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
     # r18 optimization: the three benchmark-store builds are independent
     # leg-private file ops on disjoint paths (no session-global state —
-    # the dq9/dd18 thread invariant; dq9's identical five-build pool
-    # measured 10.4 → 7.2 s), so build them on driver threads.  The
-    # shared lazy test_docs/test_media snapshots race-materialize under
-    # the block manager exactly as dq9's slice_df does.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        builds = [
-            pool.submit(update_test_shingle_table, test_docs, p_ex),
-            pool.submit(
-                update_signature_table, test_docs, p_bd,
-                band_size=DECON_BAND_SIZE,
+    # the dq9/dd18 thread invariant; dq9's identical five-build overlap
+    # measured 10.4 → 7.2 s), so they overlap.  The shared lazy
+    # test_docs/test_media snapshots race-materialize under the block
+    # manager exactly as dq9's slice_df does.
+    with overlap() as o:
+        o.submit("dq6/build_shingles", update_test_shingle_table, test_docs, p_ex)
+        o.submit(
+            "dq6/build_signatures", update_signature_table, test_docs, p_bd,
+            band_size=DECON_BAND_SIZE,
+        )
+        o.submit(
+            "dq6/build_fingerprints",
+            lambda: update_media_fingerprint_table(
+                image_dhash(test_media).select("doc_id", "dhash"), p_mm
             ),
-            pool.submit(
-                lambda: update_media_fingerprint_table(
-                    image_dhash(test_media).select("doc_id", "dhash"), p_mm
-                )
-            ),
-        ]
-        for b in builds:
-            b.result()
+        )
 
     ex_ids = (
         contaminated_docs_from_table(train_docs, p_ex)
@@ -511,7 +507,8 @@ def _dd18_corpus_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The eight family lifecycles are INDEPENDENT (separate stores, shared
     read-only fixture checkpoints — the kmeans codebook and PQ
-    codebooks are fit ONCE before the pool and only read inside legs)
+    codebooks are fit ONCE before the legs start and only read inside
+    them)
     and each is a chain of dozens of tiny fixture-sized jobs whose cost
     is Spark's fixed per-job overhead — so, exactly like dq5's monitor
     fleet, the legs run on driver threads (measured r16: ~24 s
@@ -524,7 +521,6 @@ def _dd18_corpus_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
     import uuid
-    from concurrent.futures import ThreadPoolExecutor
 
     from ..operators.dedup import (
         keep_latest_dedup,
@@ -611,17 +607,15 @@ def _dd18_corpus_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = read_parquet_if_exists(spark, path)
         return 0 if t is None else t.count()
 
-    def count_overlapped(path: str):
-        """Pre-takedown row count submitted on a driver thread (guide
-        §2.6): the tombstone appends the takedown chain performs land in
+    def count_in(o, name: str, path: str):
+        """Pre-takedown row count submitted to scope ``o`` (guide §2.6):
+        the tombstone appends the takedown chain performs land in
         SIBLING dirs, never the counted table's files, so the count is a
-        pure read of state the chain does not touch.  Callers join the
-        thunk strictly BEFORE their purge (which does rewrite the
+        pure read of state the chain does not touch.  Callers read the
+        result strictly BEFORE their purge (which does rewrite the
         table)."""
-        from ..maintenance import overlapped_count
-
         t = read_parquet_if_exists(spark, path)
-        return (lambda: 0) if t is None else overlapped_count(t)
+        return o.submit(name, (lambda: 0) if t is None else t.count)
 
     def tbl_eq(a_path: str, b: DataFrame) -> bool:
         a = read_parquet_if_exists(spark, a_path)
@@ -637,7 +631,7 @@ def _dd18_corpus_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         return df.join(d, key, "left_semi").isEmpty()
 
     # quantizer fixtures shared across the vector legs: fit ONCE before
-    # the pool (deterministic; legs only READ them — the dq5 invariant),
+    # the legs start (deterministic; legs only READ them — the dq5 invariant),
     # and session-memoized (plans/fixtures, r18 optimization): the dd18
     # slice is a pure deterministic rendering of sf_dir's embeddings table,
     # so warm bench passes receive bit-identical codebooks without refitting
@@ -652,31 +646,26 @@ def _dd18_corpus_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def flat_leg(fam: str, sub: str, update, rebuilt_rows, prebuild=None):
         """One flat-family lifecycle.  r19 overlaps (guide §2.6): the
-        pre-takedown count rides a driver thread under the two takedown
-        calls and the serve gate (joined before the purge rewrites the
-        table), and ``prebuild`` — a rebuild-store construction that
-        depends only on the fixture frames, never on ``p``'s lifecycle —
-        runs on its own sub-thread and is joined before ``rebuilt_rows``
-        reads it."""
+        pre-takedown count runs under the two takedown calls and the
+        serve gate (read before the purge rewrites the table), and
+        ``prebuild`` — a rebuild-store construction that depends only on
+        the fixture frames, never on ``p``'s lifecycle — runs beside the
+        whole chain and is joined before ``rebuilt_rows`` reads it."""
         p = os.path.join(root, sub)
         update(p)
-        pre_fut = None
-        if prebuild is not None:
-            pre_pool = ThreadPoolExecutor(max_workers=1)
-            pre_fut = pre_pool.submit(prebuild)
-            pre_pool.shutdown(wait=False)
-        before_of = count_overlapped(p)
-        takedown(spark, doc_dels, {fam: p})
-        m2 = takedown(spark, doc_dels, {fam: p})
-        replay = m2[fam]["n_new_tombstones"] == 0
-        serve = disjoint(
-            minus_tombstones(_read_pq(spark, p), spark, p),
-            "doc_id", doc_dels, "doc_id",
-        )
-        before = before_of()  # strictly before the purge's rewrite
-        purge_takedown(spark, {fam: p})
-        if pre_fut is not None:
-            pre_fut.result()
+        with overlap() as o:
+            if prebuild is not None:
+                o.submit(f"dd18/{fam}/prebuild", prebuild)
+            before = count_in(o, f"dd18/{fam}/count", p)
+            takedown(spark, doc_dels, {fam: p})
+            m2 = takedown(spark, doc_dels, {fam: p})
+            replay = m2[fam]["n_new_tombstones"] == 0
+            serve = disjoint(
+                minus_tombstones(_read_pq(spark, p), spark, p),
+                "doc_id", doc_dels, "doc_id",
+            )
+            before = before.result()  # strictly before the purge's rewrite
+            purge_takedown(spark, {fam: p})
         return [(fam, before, count(p), replay, serve, tbl_eq(p, rebuilt_rows()))]
 
     def leg_sig():
@@ -716,33 +705,33 @@ def _dd18_corpus_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def prebuild():
             # the comparison store depends only on the fixture frames —
-            # never on p's lifecycle — so it builds on a sub-thread
-            # under the takedown chain (guide §2.6, r19) instead of
-            # serializing after the purge
+            # never on p's lifecycle — so it builds under the takedown
+            # chain (guide §2.6, r19) instead of serializing after the
+            # purge
             init_semantic_index(cents, p2)
             update_semantic_index(spark, rem_sem, p2, DD18_TAU)
 
-        pre_pool = ThreadPoolExecutor(max_workers=1)
-        pre_fut = pre_pool.submit(prebuild)
-        pre_pool.shutdown(wait=False)
-        init_semantic_index(cents, p)
-        update_semantic_index(spark, sem_corpus, p, DD18_TAU)
-        before_a_of = count_overlapped(f"{p}/assigned")
-        before_p_of = count_overlapped(f"{p}/pairs")
-        takedown(spark, vec_dels, {"semantic": p}, id_col="vec_id")
-        m2 = takedown(spark, vec_dels, {"semantic": p}, id_col="vec_id")
-        replay = m2["semantic"]["n_new_tombstones"] == 0
-        sp = semantic_pairs_minus_tombstones(spark, p)
-        serve_a = disjoint(
-            semantic_assigned_minus_tombstones(spark, p),
-            "vec_id", vec_dels, "vec_id",
-        )
-        serve_p = disjoint(sp, "vec_a", vec_dels, "vec_id") and disjoint(
-            sp, "vec_b", vec_dels, "vec_id"
-        )
-        before_a, before_p = before_a_of(), before_p_of()  # pre-purge
-        purge_takedown(spark, {"semantic": p}, id_col="vec_id")
-        pre_fut.result()
+        with overlap() as o:
+            o.submit("dd18/semantic/prebuild", prebuild)
+            init_semantic_index(cents, p)
+            update_semantic_index(spark, sem_corpus, p, DD18_TAU)
+            before_a = count_in(
+                o, "dd18/semantic/count_assigned", f"{p}/assigned"
+            )
+            before_p = count_in(o, "dd18/semantic/count_pairs", f"{p}/pairs")
+            takedown(spark, vec_dels, {"semantic": p}, id_col="vec_id")
+            m2 = takedown(spark, vec_dels, {"semantic": p}, id_col="vec_id")
+            replay = m2["semantic"]["n_new_tombstones"] == 0
+            sp = semantic_pairs_minus_tombstones(spark, p)
+            serve_a = disjoint(
+                semantic_assigned_minus_tombstones(spark, p),
+                "vec_id", vec_dels, "vec_id",
+            )
+            serve_p = disjoint(sp, "vec_a", vec_dels, "vec_id") and disjoint(
+                sp, "vec_b", vec_dels, "vec_id"
+            )
+            before_a, before_p = before_a.result(), before_p.result()  # pre-purge
+            purge_takedown(spark, {"semantic": p}, id_col="vec_id")
         return [
             (
                 "sem_assigned", before_a, count(f"{p}/assigned"), replay,
@@ -762,23 +751,21 @@ def _dd18_corpus_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         def prebuild():
             update_bm25_postings(rem_docs, p2, 0)
 
-        pre_pool = ThreadPoolExecutor(max_workers=1)
-        pre_fut = pre_pool.submit(prebuild)
-        pre_pool.shutdown(wait=False)
-        update_bm25_postings(slice_df, p, 0)
-        before_tf_of = count_overlapped(f"{p}/tf")
-        before_df_of = count_overlapped(f"{p}/df")
-        takedown(spark, doc_dels, {"bm25": p})
-        m2 = takedown(spark, doc_dels, {"bm25": p})
-        replay = m2["bm25"]["n_new_tombstones"] == 0
-        # df serves only idf weights until the purge; recall (which doc
-        # can surface) flows through the tombstone-aware tf read
-        serve = disjoint(
-            bm25_tf_minus_tombstones(spark, p), "doc_id", doc_dels, "doc_id"
-        )
-        before_tf, before_df = before_tf_of(), before_df_of()  # pre-purge
-        purge_takedown(spark, {"bm25": p})
-        pre_fut.result()
+        with overlap() as o:
+            o.submit("dd18/bm25/prebuild", prebuild)
+            update_bm25_postings(slice_df, p, 0)
+            before_tf = count_in(o, "dd18/bm25/count_tf", f"{p}/tf")
+            before_df = count_in(o, "dd18/bm25/count_df", f"{p}/df")
+            takedown(spark, doc_dels, {"bm25": p})
+            m2 = takedown(spark, doc_dels, {"bm25": p})
+            replay = m2["bm25"]["n_new_tombstones"] == 0
+            # df serves only idf weights until the purge; recall (which
+            # doc can surface) flows through the tombstone-aware tf read
+            serve = disjoint(
+                bm25_tf_minus_tombstones(spark, p), "doc_id", doc_dels, "doc_id"
+            )
+            before_tf, before_df = before_tf.result(), before_df.result()  # pre-purge
+            purge_takedown(spark, {"bm25": p})
         return [
             (
                 "bm25_tf", before_tf, count(f"{p}/tf"), replay, serve,
@@ -802,26 +789,25 @@ def _dd18_corpus_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
             init_ivf_index(cents, p2)
             update_ivf_index(spark, rem_sem, p2)
 
-        pre_pool = ThreadPoolExecutor(max_workers=1)
-        pre_fut = pre_pool.submit(prebuild)
-        pre_pool.shutdown(wait=False)
-        init_ivf_index(cents, p)
-        update_ivf_index(spark, sem_corpus, p)
-        before_of = count_overlapped(f"{p}/lists")
-        takedown(spark, vec_dels, {"ivf": p}, id_col="vec_id")
-        m2 = takedown(spark, vec_dels, {"ivf": p}, id_col="vec_id")
-        replay = m2["ivf"]["n_new_tombstones"] == 0
-        # serve through the REAL reader: query the index with the deleted
-        # vectors themselves, all lists probed — a still-served deleted
-        # vector would be its own (distance-0) top hit
-        dq = sem_corpus.join(vec_dels, "vec_id", "left_semi").selectExpr(
-            "vec_id AS query_id", "embedding"
-        )
-        hits = search_ivf_index(spark, p, dq, k=1, n_probe=DD18_K)
-        serve = disjoint(hits, "vec_id", vec_dels, "vec_id")
-        before = before_of()  # pre-purge
-        purge_takedown(spark, {"ivf": p}, id_col="vec_id")
-        pre_fut.result()
+        with overlap() as o:
+            o.submit("dd18/ivf/prebuild", prebuild)
+            init_ivf_index(cents, p)
+            update_ivf_index(spark, sem_corpus, p)
+            before = count_in(o, "dd18/ivf/count", f"{p}/lists")
+            takedown(spark, vec_dels, {"ivf": p}, id_col="vec_id")
+            m2 = takedown(spark, vec_dels, {"ivf": p}, id_col="vec_id")
+            replay = m2["ivf"]["n_new_tombstones"] == 0
+            # serve through the REAL reader: query the index with the
+            # deleted vectors themselves, all lists probed — a
+            # still-served deleted vector would be its own (distance-0)
+            # top hit
+            dq = sem_corpus.join(vec_dels, "vec_id", "left_semi").selectExpr(
+                "vec_id AS query_id", "embedding"
+            )
+            hits = search_ivf_index(spark, p, dq, k=1, n_probe=DD18_K)
+            serve = disjoint(hits, "vec_id", vec_dels, "vec_id")
+            before = before.result()  # pre-purge
+            purge_takedown(spark, {"ivf": p}, id_col="vec_id")
         return [(
             "ivf_lists", before, count(f"{p}/lists"), replay, serve,
             tbl_eq(f"{p}/lists", _read_pq(spark, f"{p2}/lists")),
@@ -838,19 +824,19 @@ def _dd18_corpus_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
             init_pq_index(spark, pq_cbs, p2)
             update_pq_codes(spark, rem_sem, p2)
 
-        pre_pool = ThreadPoolExecutor(max_workers=1)
-        pre_fut = pre_pool.submit(prebuild)
-        pre_pool.shutdown(wait=False)
-        init_pq_index(spark, pq_cbs, p)
-        update_pq_codes(spark, sem_corpus, p)
-        before_of = count_overlapped(f"{p}/codes")
-        takedown(spark, vec_dels, {"pq": p}, id_col="vec_id")
-        m2 = takedown(spark, vec_dels, {"pq": p}, id_col="vec_id")
-        replay = m2["pq"]["n_new_tombstones"] == 0
-        serve = disjoint(read_pq_codes(spark, p), "vec_id", vec_dels, "vec_id")
-        before = before_of()  # pre-purge
-        purge_takedown(spark, {"pq": p}, id_col="vec_id")
-        pre_fut.result()
+        with overlap() as o:
+            o.submit("dd18/pq/prebuild", prebuild)
+            init_pq_index(spark, pq_cbs, p)
+            update_pq_codes(spark, sem_corpus, p)
+            before = count_in(o, "dd18/pq/count", f"{p}/codes")
+            takedown(spark, vec_dels, {"pq": p}, id_col="vec_id")
+            m2 = takedown(spark, vec_dels, {"pq": p}, id_col="vec_id")
+            replay = m2["pq"]["n_new_tombstones"] == 0
+            serve = disjoint(
+                read_pq_codes(spark, p), "vec_id", vec_dels, "vec_id"
+            )
+            before = before.result()  # pre-purge
+            purge_takedown(spark, {"pq": p}, id_col="vec_id")
         return [(
             "pq_codes", before, count(f"{p}/codes"), replay, serve,
             tbl_eq(f"{p}/codes", _read_pq(spark, f"{p2}/codes")),
@@ -872,16 +858,17 @@ def _dd18_corpus_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text",
         ).localCheckpoint(eager=False)
         upsert_latest_revisions(spark, snaps, p, ["url"], "ts", "doc_id")
-        before_of = count_overlapped(p)
-        takedown(spark, doc_dels, {"latest_revisions": p})
-        m2 = takedown(spark, doc_dels, {"latest_revisions": p})
-        replay = m2["latest_revisions"]["n_new_tombstones"] == 0
-        serve = disjoint(
-            minus_tombstones(_read_pq(spark, p), spark, p),
-            "doc_id", doc_dels, "doc_id",
-        )
-        before = before_of()  # pre-purge
-        purge_takedown(spark, {"latest_revisions": p})
+        with overlap() as o:
+            before = count_in(o, "dd18/latest_revisions/count", p)
+            takedown(spark, doc_dels, {"latest_revisions": p})
+            m2 = takedown(spark, doc_dels, {"latest_revisions": p})
+            replay = m2["latest_revisions"]["n_new_tombstones"] == 0
+            serve = disjoint(
+                minus_tombstones(_read_pq(spark, p), spark, p),
+                "doc_id", doc_dels, "doc_id",
+            )
+            before = before.result()  # pre-purge
+            purge_takedown(spark, {"latest_revisions": p})
         after = count(p)
         recrawl = snaps.join(doc_dels, "doc_id", "left_anti")
         upsert_latest_revisions(spark, recrawl, p, ["url"], "ts", "doc_id")
@@ -914,9 +901,9 @@ def _dd18_corpus_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         def prebuild():
             # the comparison frame depends only on the FROZEN model
             # (written at init, untouched by takedown/purge — the store's
-            # module contract) and the fixture docs: materialize it on a
-            # sub-thread under the takedown chain (guide §2.6, r19)
-            # instead of serializing the whole score pass after the purge
+            # module contract) and the fixture docs: materialize it under
+            # the takedown chain (guide §2.6, r19) instead of serializing
+            # the whole score pass after the purge
             bc, uc, v = load_curriculum_model(spark, p)
             return _with_shards(
                 _with_wrk(score_under_curriculum_model(rem_docs, bc, uc, v)),
@@ -925,58 +912,31 @@ def _dd18_corpus_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "doc_id", "ppl", "n_tokens", "bucket", "wrk", "shard_id"
             ).localCheckpoint()
 
-        pre_pool = ThreadPoolExecutor(max_workers=1)
-        rebuilt_fut = pre_pool.submit(prebuild)
-        pre_pool.shutdown(wait=False)
-        before_of = count_overlapped(f"{p}/docs")
-        takedown(spark, doc_dels, {"curriculum": p})
-        m2 = takedown(spark, doc_dels, {"curriculum": p})
-        replay = m2["curriculum"]["n_new_tombstones"] == 0
-        serve = disjoint(
-            read_curriculum_docs(spark, p), "doc_id", doc_dels, "doc_id"
-        )
-        before = before_of()  # pre-purge
-        purge_takedown(spark, {"curriculum": p})
-        rebuilt = rebuilt_fut.result()
+        with overlap() as o:
+            rebuilt = o.submit("dd18/curriculum/prebuild", prebuild)
+            before = count_in(o, "dd18/curriculum/count", f"{p}/docs")
+            takedown(spark, doc_dels, {"curriculum": p})
+            m2 = takedown(spark, doc_dels, {"curriculum": p})
+            replay = m2["curriculum"]["n_new_tombstones"] == 0
+            serve = disjoint(
+                read_curriculum_docs(spark, p), "doc_id", doc_dels, "doc_id"
+            )
+            before = before.result()  # pre-purge
+            purge_takedown(spark, {"curriculum": p})
         return [(
             "curriculum", before, count(f"{p}/docs"), replay, serve,
-            tbl_eq(f"{p}/docs", rebuilt),
+            tbl_eq(f"{p}/docs", rebuilt.result()),
         )]
 
-    # measurement hook (guide §1.5): per-leg wall times to stderr when
-    # $SPARK_GRAFT_DD18_LEG_TIMING is set — names the floor leg the
-    # threaded umbrella's wall clock sits on; zero effect otherwise
-    import json as _json
-    import sys as _sys
-    import time as _time
-
-    _leg_s: dict[str, float] = {}
-
-    def _timed(leg):
-        if not os.environ.get("SPARK_GRAFT_DD18_LEG_TIMING"):
-            return leg
-
-        def run():
-            spark.sparkContext.setJobGroup(f"dd18:{leg.__name__}", leg.__name__)
-            t0 = _time.perf_counter()
-            try:
-                return leg()
-            finally:
-                _leg_s[leg.__name__] = round(_time.perf_counter() - t0, 3)
-
-        return run
-
-    with ThreadPoolExecutor(max_workers=9) as pool:
-        futures = [
-            pool.submit(_timed(leg))
+    with overlap() as o:
+        legs = [
+            o.submit(f"dd18/{leg.__name__}", leg)
             for leg in (
                 leg_sig, leg_sh, leg_fp, leg_sem, leg_bm,
                 leg_ivf, leg_pq, leg_rev, leg_cur,
             )
         ]
-        rows = [row for f in futures for row in f.result()]
-    if _leg_s:
-        print(_json.dumps({"dd18_leg_s": _leg_s}), file=_sys.stderr, flush=True)
+    rows = [row for leg in legs for row in leg.result()]
     rows.sort(key=lambda r: r[0])
     return spark.createDataFrame(
         rows,
@@ -1365,26 +1325,27 @@ def _dq8_release_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     OUTPUT frames in-plan (each snapshotted once — it feeds several card
     rows).  No new computation anywhere: a card number IS its source
     query's number."""
-    from concurrent.futures import ThreadPoolExecutor
-
     from ..functions.scalars import r6
     from .text_parity import _dd7_dedup_summary, _sp11_domain_mixture
 
     # r18 optimization: the four source pipelines are INDEPENDENT pure
     # functions of sf_dir, and each mixes eager driver-side build work
     # (dq6's benchmark stores, dd7's iterative cluster map) with its final
-    # lazy frame — so they run on driver threads (the dq5/dd18 monitor-
-    # fleet pattern, guide §2.6) with each result eagerly checkpointed
-    # inside its thread; the card assembly below reads the pinned
-    # snapshots.  Previously they ran sequentially and dq8 ≈ Σ(sources).
+    # lazy frame — so they overlap (the dq5/dd18 monitor-fleet pattern,
+    # guide §2.6) with each result eagerly checkpointed inside its task;
+    # the card assembly below reads the pinned snapshots.  Previously
+    # they ran sequentially and dq8 ≈ Σ(sources).
     # Thread-safety: the only session-global state any builder touches is
     # createOrReplaceTempView("documents"/"embeddings") with byte-identical
     # pure load_table definitions (pinned by tests/test_plans.py::
     # test_dq8_source_builders_register_only_identical_views); every other
     # operator they call is covered by the dq5/dd18 no-session-state pins.
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        f_card, f_flags, f_ddup, f_mix = [
-            pool.submit(lambda b=b: b(spark, sf_dir).localCheckpoint())
+    with overlap() as o:
+        sources = [
+            o.submit(
+                f"dq8/{b.__name__.lstrip('_')}",
+                lambda b=b: b(spark, sf_dir).localCheckpoint(),
+            )
             for b in (
                 _dq7_dataset_card,
                 _dq6_contamination_audit,
@@ -1392,10 +1353,7 @@ def _dq8_release_card(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _sp11_domain_mixture,
             )
         ]
-        card = f_card.result()
-        flags = f_flags.result()
-        ddup = f_ddup.result()
-        mix = f_mix.result()
+    card, flags, ddup, mix = (h.result() for h in sources)
 
     ns = F.lit(None).cast("string")
 
@@ -1693,20 +1651,16 @@ def _dq9_takedown_compliance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the five store builds are independent leg-private file ops (no
     # session-global state — the dd18/dq5 thread invariant holds), and
-    # each is a chain of tiny fixed-overhead jobs: build them on driver
-    # threads (measured 10.4 → 7.2 s solo-warm at sf0.1 with four)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=5) as pool:
-        futures = [
-            pool.submit(update_signature_table, slice_df, p_sig),
-            pool.submit(update_test_shingle_table, slice_df, p_sh),
-            pool.submit(build_fp),
-            pool.submit(update_test_shingle_table, slice_df, p_seg),
-            pool.submit(build_cur),
-        ]
-        for f in futures:
-            f.result()
+    # each is a chain of tiny fixed-overhead jobs: overlap them
+    # (measured 10.4 → 7.2 s solo-warm at sf0.1 with four)
+    with overlap() as o:
+        o.submit("dq9/build_signatures", update_signature_table, slice_df, p_sig)
+        o.submit("dq9/build_shingles", update_test_shingle_table, slice_df, p_sh)
+        o.submit("dq9/build_fingerprints", build_fp)
+        o.submit(
+            "dq9/build_segmentations", update_test_shingle_table, slice_df, p_seg
+        )
+        o.submit("dq9/build_curriculum", build_cur)
     # signatures: tombstone only; shingles: tombstone + purge;
     # fingerprints: request never ingested; segmentations: request
     # never applied at all; curriculum: tombstone only (pending_purge

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..concurrency import overlap
 from ..sources.readers import load_table
 from .dialect import (
     cosine_expr,
@@ -580,23 +581,20 @@ def _emb17_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     atexit.register(shutil.rmtree, root, ignore_errors=True)
     path = os.path.join(root, "index")
     # the one-shot gate twin depends only on (corpus, cents) — never on
-    # the store — so it materializes on a driver thread overlapping the
-    # three sequential ingest batches (guide §2.6, emb21's twin pattern)
-    from concurrent.futures import ThreadPoolExecutor
-
+    # the store — so it materializes overlapping the three sequential
+    # ingest batches (guide §2.6, emb21's twin pattern)
     def _build_oneshot():
-        spark.sparkContext.setJobGroup("emb17:oneshot", "one-shot gate twin")
         return semantic_dedup_pairs(
             corpus, cents, threshold=SEMDEDUP_THRESHOLD
         ).select("vec_a", "vec_b").localCheckpoint()
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        oneshot_fut = pool.submit(_build_oneshot)
+    with overlap() as o:
+        oneshot = o.submit("emb17/oneshot", _build_oneshot)
         init_semantic_index(cents_df, path)
         update_semantic_index(spark, originals, path, SEMDEDUP_THRESHOLD)
         update_semantic_index(spark, twins, path, SEMDEDUP_THRESHOLD)
         m3 = update_semantic_index(spark, twins, path, SEMDEDUP_THRESHOLD)
-        oneshot = oneshot_fut.result()
+    oneshot = oneshot.result()
     acc = (
         _read_pq(spark, f"{path}/pairs")
         .select("vec_a", "vec_b")
@@ -1246,8 +1244,6 @@ def _dq5_serving_drift_monitors(spark: SparkSession, sf_dir: str) -> DataFrame:
         update_semantic_index,
     )
 
-    from concurrent.futures import ThreadPoolExecutor
-
     emb = load_table(spark, sf_dir, "embeddings")
     emb.createOrReplaceTempView("embeddings")
     # EAGER checkpoints: three fit pipelines + three rebuilds + two
@@ -1260,29 +1256,31 @@ def _dq5_serving_drift_monitors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three overlapped ones (guide §2.6), and corpus stays a LAZY union
     # of the two pinned frames (its own eager checkpoint was a third
     # serial fixture pass that re-wrote bytes both inputs already hold).
-    with ThreadPoolExecutor(max_workers=3) as fixture_pool:
-        max_id_fut = fixture_pool.submit(
-            lambda: emb.agg(F.max("vec_id")).first()[0]
+    with overlap() as o:
+        max_id = o.submit(
+            "dq5/max_id", lambda: emb.agg(F.max("vec_id")).first()[0]
         )
-        old_fut = fixture_pool.submit(
+        old = o.submit(
+            "dq5/old_era",
             lambda: spark.sql(
                 _dq4_planted_groups(0, DQ4_GROUPS - 1, DQ4_PLANT_BASE)
-            ).localCheckpoint()
+            ).localCheckpoint(),
         )
-        new_fut = fixture_pool.submit(
+        new = o.submit(
+            "dq5/new_era",
             lambda: spark.sql(
                 _dq4_planted_groups(
                     DQ4_GROUPS, 2 * DQ4_GROUPS - 1, 2 * DQ4_PLANT_BASE
                 )
-            ).localCheckpoint()
+            ).localCheckpoint(),
         )
-        max_id = max_id_fut.result()
+        max_id = max_id.result()
         if max_id is not None and max_id >= DQ4_PLANT_BASE:
             raise ValueError(
                 f"dq5 fixture: corpus vec_ids reach {max_id} >= the "
                 f"planted-id offset {DQ4_PLANT_BASE}"
             )
-        old, new = old_fut.result(), new_fut.result()
+    old, new = old.result(), new.result()
     corpus = old.unionByName(new)
 
     root = os.path.join(
@@ -1335,12 +1333,9 @@ def _dq5_serving_drift_monitors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def _build_exact() -> DataFrame:
             # the exact top-10 reference depends only on the fixture
-            # corpus — never the store — so it materializes on a driver
-            # thread overlapping the fit/init/ingest chain (guide §2.6)
-            # instead of riding the standing gate's first action (r19)
-            spark.sparkContext.setJobGroup(
-                "dq5:exact", "ivfpq exact top-10 reference"
-            )
+            # corpus — never the store — so it materializes overlapping
+            # the fit/init/ingest chain (guide §2.6) instead of riding
+            # the standing gate's first action (r19)
             return (
                 queries.alias("q")
                 .join(
@@ -1359,8 +1354,8 @@ def _dq5_serving_drift_monitors(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .localCheckpoint()
             )
 
-        with ThreadPoolExecutor(max_workers=1) as exact_pool:
-            exact_fut = exact_pool.submit(_build_exact)
+        with overlap() as o:
+            exact = o.submit("dq5/leg_ivfpq/exact", _build_exact)
             # memoized per (applicationId, sf_dir, params) — the planted
             # fixture fit is deterministic, so warm bench passes skip the
             # ivfpq leg's ~7 s serial-chain fit (r17 verdict item 4)
@@ -1373,7 +1368,7 @@ def _dq5_serving_drift_monitors(spark: SparkSession, sf_dir: str) -> DataFrame:
             # MONITORS, so the fixture ingests once (the accumulated
             # state is identical)
             update_ivfpq_index(spark, corpus, ivfp)
-            exact = exact_fut.result()
+        exact = exact.result()
 
         def ivfpq_recall(phase: str) -> DataFrame:
             got = search_ivfpq_index(
@@ -1503,37 +1498,12 @@ def _dq5_serving_drift_monitors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mutate session-global state (fixed-name temp views, conf.set /
     # _scoped_conf) — the legs share one SparkSession; pinned by
     # tests/test_plans.py::test_dq5_leg_operators_touch_no_session_global_state.
-    # Measurement hook (guide §1.5): per-leg wall times to stderr when
-    # $SPARK_GRAFT_DQ5_LEG_TIMING is set; zero effect otherwise.
-    import json as _json
-    import sys as _sys
-    import time as _time
-
-    _leg_s: dict[str, float] = {}
-
-    def _timed(leg):
-        if not os.environ.get("SPARK_GRAFT_DQ5_LEG_TIMING"):
-            return leg
-
-        def run():
-            spark.sparkContext.setJobGroup(f"dq5:{leg.__name__}", leg.__name__)
-            t0 = _time.perf_counter()
-            try:
-                return leg()
-            finally:
-                _leg_s[leg.__name__] = round(_time.perf_counter() - t0, 3)
-
-        return run
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [
-            pool.submit(_timed(leg)) for leg in (leg_ivfpq, leg_pq, leg_sem)
+    with overlap() as o:
+        legs = [
+            o.submit(f"dq5/{leg.__name__}", leg)
+            for leg in (leg_ivfpq, leg_pq, leg_sem)
         ]
-        legs = [f.result() for f in futures]
-    if _leg_s:
-        print(_json.dumps({"dq5_leg_s": _leg_s}), file=_sys.stderr, flush=True)
-
-    out = [df for leg in legs for df in leg]
+    out = [df for leg in legs for df in leg.result()]
     res = out[0]
     for df in out[1:]:
         res = res.unionByName(df)
@@ -1792,15 +1762,12 @@ def _emb21_index_deletion(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(root, "main")
     # The deletion twin (gate B's reference index) touches ONLY its own
     # store root — independent of the main chain until the gate join —
-    # so it builds on a driver thread overlapping ingest/delete/serve
-    # (guide §2.6, the dd18/dq5 fleet pattern); its serving result is
-    # pinned eagerly in-thread so gate B reads a snapshot.
-    from concurrent.futures import ThreadPoolExecutor
-
+    # so it builds overlapping ingest/delete/serve (guide §2.6, the
+    # dd18/dq5 fleet pattern); its serving result is pinned eagerly in
+    # its task so gate B reads a snapshot.
     twin_path = os.path.join(root, "twin")
 
     def _build_twin():
-        spark.sparkContext.setJobGroup("emb21:twin", "deletion twin build")
         init_ivfpq_index(spark, coarse, fine, twin_path)
         update_ivfpq_index(
             spark, emb.join(dels, "vec_id", "left_anti"), twin_path
@@ -1809,8 +1776,8 @@ def _emb21_index_deletion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "vec_id", "rk"
         ).localCheckpoint()
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        twin_fut = pool.submit(_build_twin)
+    with overlap() as o:
+        twin = o.submit("emb21/twin", _build_twin)
         init_ivfpq_index(spark, coarse, fine, path)
         ing = update_ivfpq_index(spark, emb, path)
         m1 = delete_from_ivfpq_index(spark, dels, path)
@@ -1820,9 +1787,9 @@ def _emb21_index_deletion(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=False)
         # gate A: no deleted id is ever served (one action)
         n_served_deleted = post.join(dels, "vec_id", "left_semi").count()
-        # gate B: tombstone-aware serving ≡ the deletion twin (same
-        # quantizers, corpus minus deleted) — full outer join, one action
-        twin = twin_fut.result()
+    # gate B: tombstone-aware serving ≡ the deletion twin (same
+    # quantizers, corpus minus deleted) — full outer join, one action
+    twin = twin.result()
     diff_row = (
         post.withColumn("__t", F.lit(1))
         .join(

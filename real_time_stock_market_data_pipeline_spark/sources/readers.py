@@ -51,6 +51,7 @@ _STORE_SCHEMA_CACHE: dict = {}
 
 
 def _is_uri(path: str) -> bool:
+    # 2+ char scheme: a Windows drive path ("C:\\tables\\t") is NOT a URI
     import re
 
     return re.match(r"^[A-Za-z][A-Za-z0-9+.-]+:", path) is not None
@@ -114,15 +115,13 @@ def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     (``hdfs://``, ``s3a://``, and the single-slash ``file:/`` form —
     anything ``os.path`` can't see) skip the stat check."""
     import os
-    import re
 
     from pyspark.sql.utils import AnalysisException
 
-    # 2+ char scheme: a Windows drive path ("C:\\tables\\t") is NOT a URI
-    # and must take the cheap stat-check branch, not the logged-exception
-    # fallback this helper exists to avoid
-    is_uri = re.match(r"^[A-Za-z][A-Za-z0-9+.-]+:", path) is not None
-    if not is_uri and not os.path.exists(path):
+    # a Windows drive path is not a URI (see _is_uri), so it takes the
+    # cheap stat-check branch, not the logged-exception fallback this
+    # helper exists to avoid
+    if not _is_uri(path) and not os.path.exists(path):
         return None
     try:
         # schema-memoized construction (witness-guarded; see module note)

@@ -29,16 +29,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import TimestampNTZType
 
-from ..operators.indicators import BUFFER_SIZE, SeriesSpec, indicator_frame
+from ..operators.indicators import BUFFER_SIZE, IND_COLS, SeriesSpec, indicator_frame
 from ..operators.relational import valid_tick_predicate
-
-IND_COLS = [
-    "rsi_14", "sma_20", "sma_50", "ema_12", "ema_26",
-    "bb_upper", "bb_lower", "bb_middle",
-    "macd", "macd_signal", "macd_histogram",
-    "volatility", "price_change_percent",
-]
 
 STATE_SCHEMA = "prices array<double>, n_seen long"
 
@@ -125,6 +119,17 @@ def observed(ticks: DataFrame, observer: Any = "tick_metrics") -> DataFrame:
     )
 
 
+def _as_timestamp(ticks: DataFrame) -> DataFrame:
+    """Parquet-nanos sources arrive with ``trade_datetime`` as
+    TIMESTAMP_NTZ, but watermarks require TIMESTAMP; the cast is identity
+    under the engine's UTC session TZ."""
+    if isinstance(ticks.schema["trade_datetime"].dataType, TimestampNTZType):
+        return ticks.withColumn(
+            "trade_datetime", F.col("trade_datetime").cast("timestamp")
+        )
+    return ticks
+
+
 def streaming_indicators(
     ticks: DataFrame, dedup_watermark: str | None = "10 minutes"
 ) -> DataFrame:
@@ -145,15 +150,7 @@ def streaming_indicators(
     """
     valid = ticks.filter(valid_tick_predicate())
     if dedup_watermark is not None and valid.isStreaming:
-        import pyspark.sql.types as T
-
-        if isinstance(valid.schema["trade_datetime"].dataType, T.TimestampNTZType):
-            # parquet-nanos sources arrive as TIMESTAMP_NTZ, but watermarks
-            # require TIMESTAMP; identity under the engine's UTC session TZ
-            valid = valid.withColumn(
-                "trade_datetime", F.col("trade_datetime").cast("timestamp")
-            )
-        valid = valid.withWatermark(
+        valid = _as_timestamp(valid).withWatermark(
             "trade_datetime", dedup_watermark
         ).dropDuplicatesWithinWatermark(["company_id", "trade_datetime"])
     return valid.groupBy("company_id").applyInPandasWithState(
@@ -182,13 +179,7 @@ def ohlc_candles_stream(ticks: DataFrame, watermark: str = "30 minutes") -> Data
     later ones are dropped (T4 semantics).  Batch inputs skip the
     watermark and emit every window; stream ≡ batch ≡ a13 is pinned by
     tests/test_streaming.py on a bounded replay."""
-    valid = ticks.filter(valid_tick_predicate())
-    import pyspark.sql.types as T
-
-    if isinstance(valid.schema["trade_datetime"].dataType, T.TimestampNTZType):
-        valid = valid.withColumn(
-            "trade_datetime", F.col("trade_datetime").cast("timestamp")
-        )
+    valid = _as_timestamp(ticks.filter(valid_tick_predicate()))
     if valid.isStreaming:
         valid = valid.withWatermark("trade_datetime", watermark)
     key = F.struct(F.col("trade_datetime"), F.col("tick_id"))
@@ -221,15 +212,9 @@ def vwap_stream(ticks: DataFrame, watermark: str = "30 minutes") -> DataFrame:
     tests/test_streaming.py under the shared 6-decimal rounding."""
     # volume-bearing ticks only — w11's contract (zero/NULL-volume ticks
     # carry no execution weight and would only distort avg_price/n_ticks)
-    valid = ticks.filter(
+    valid = _as_timestamp(ticks.filter(
         valid_tick_predicate() & F.col("volume").isNotNull() & (F.col("volume") > 0)
-    )
-    import pyspark.sql.types as T
-
-    if isinstance(valid.schema["trade_datetime"].dataType, T.TimestampNTZType):
-        valid = valid.withColumn(
-            "trade_datetime", F.col("trade_datetime").cast("timestamp")
-        )
+    ))
     if valid.isStreaming:
         valid = valid.withWatermark("trade_datetime", watermark)
     pv = F.col("current_price") * F.col("volume").cast("double")
@@ -281,7 +266,6 @@ def run_bounded_pipeline(
     ticks: DataFrame,
     out_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
 ):
     """Bounded end-to-end run (availableNow ≈ the reference's MAX_MESSAGES):
     analytics rows → parquet, alerts side-output → parquet, exactly-once via

@@ -559,6 +559,28 @@ def test_dd18_leg_operators_touch_no_session_global_state():
         )
 
 
+def test_threads_start_only_in_the_concurrency_module():
+    """Driver-side overlap has one mechanism, ``concurrency.overlap``: it
+    joins every task on exit, raises errors in submission order and
+    hands the caller's job group to its threads.  A hand-rolled pool or
+    thread elsewhere would orphan its Spark jobs on failure and escape
+    the caller's job group; pin the package free of them."""
+    import pathlib
+
+    import real_time_stock_market_data_pipeline_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "concurrency.py":
+            continue
+        src = path.read_text()
+        for pat in ("ThreadPoolExecutor", "threading.Thread", "InheritableThread"):
+            assert pat not in src, (
+                f"{pat!r} entered {path.relative_to(root)} — overlap Spark "
+                "work with concurrency.overlap instead"
+            )
+
+
 def test_sp18_doc_level_windows_are_bucket_partitioned(spark, sf_dir):
     """sp18's greedy runs on the ~80-row slice table (the documented
     sp14 K-row window exception), but its DOC-LEVEL stage — the boundary

@@ -1,25 +1,12 @@
 """Focused pins for the r18 optimization-round operator internals:
-``overlapped_count`` (threaded metric counts), ``_observed_count``
-(counts riding the chain's own action), and ``_memo_store_read`` (the
-persisted-codebook session memo with fs-token invalidation).  Each
-changes HOW a value is produced, never the value — these tests pin
-that."""
+``_observed_count`` (counts riding the chain's own action) and
+``_memo_store_read`` (the persisted-codebook session memo with fs-token
+invalidation).  Each changes HOW a value is produced, never the value —
+these tests pin that."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-
-
-def test_overlapped_count_matches_count(spark):
-    from real_time_stock_market_data_pipeline_spark.maintenance import (
-        overlapped_count,
-    )
-
-    df = spark.range(1234).filter("id % 3 != 0")
-    get = overlapped_count(df)
-    assert get() == df.count()
-    # the thunk is stable across joins (Future.result caches)
-    assert get() == df.count()
 
 
 def test_observed_count_rides_the_consuming_action(spark):

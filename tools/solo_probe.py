@@ -5,7 +5,8 @@ OPTIMIZATION_r18.md is adjudicated in.
 
 Usage: python tools/solo_probe.py q1 q2 ...  [env: SPARK_GRAFT_SF_DIR,
 SPARK_GRAFT_CPUS, SPARK_GRAFT_PROBE_RUNS (default 3)]
-Prints one JSON line per query: {"name", "warm", "timed": [...], "median"}.
+Prints one JSON line per query: {"name", "warm", "timed": [...], "median",
+"n_jobs": [...]}.
 """
 
 from __future__ import annotations
@@ -64,9 +65,8 @@ def main() -> None:
             t0 = time.perf_counter()
             _force(fn(spark, sf_dir))
             timed.append(round(time.perf_counter() - t0, 3))
-            # jobs submitted from worker threads (dq5/dd18-style legs)
-            # carry their own group, so this undercounts threaded
-            # queries — still the right relative signal
+            # leg threads inherit this group (concurrency.overlap), so
+            # the count covers every job the query submits
             n_jobs.append(len(tracker.getJobIdsForGroup(group)))
             _release(spark)
         print(
