@@ -27,6 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from .. import store_cache
 from ..concurrency import overlap
 from ..sources.readers import read_parquet_cached_schema as _read_pq
 
@@ -349,91 +350,13 @@ def ivf_topk(
     return scored.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
 
 
-# --- r18 optimization: session memo for PERSISTED-codebook reads ------------
-# Every update/search/delete call against a persisted index re-collected the
-# store's codebooks (one driver collect — one Spark job — per quantizer
-# level) even though codebooks are FIXED for the life of an index path by
-# the module contract: a re-train is a NEW path, and rebuild_* replaces the
-# whole directory through the staged swap.  Memoize the bounded driver-side
-# value per (applicationId, absolute store dir), guarded by an fs-token —
-# the sorted (name, size, mtime_ns) listing of the codebook directory,
-# computed with os.scandir, no Spark job.  Any rewrite (rebuild's staged
-# swap, a manual overwrite) yields new part filenames, so the token changes
-# and the next call re-reads: the memo is value-invisible, and a miss reads
-# exactly as before.  Values are treated as immutable by every consumer
-# (literal-expression builders / numpy copies); one entry per path, so the
-# cache is bounded by the number of live index paths in the session.
-# Threaded callers (the dq5/dd18/takedown fleets) may race a miss — both
-# compute the same deterministic value; last write wins.
-_STORE_CODEBOOK_CACHE: dict = {}
-
-
-def _store_dir_token(path: str):
-    try:
-        with os.scandir(path) as it:
-            return tuple(sorted(
-                (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-                for e in it if e.is_file()
-            ))
-    except (FileNotFoundError, NotADirectoryError):
-        return None
-
-
-def _memo_store_read(spark, dir_path: str, read):
-    token = _store_dir_token(dir_path)
-    if token is None:  # absent store: behave exactly as the raw read
-        return read()
-    key = (spark.sparkContext.applicationId, os.path.abspath(dir_path))
-    hit = _STORE_CODEBOOK_CACHE.get(key)
-    if hit is not None and hit[0] == token:
-        return hit[1]
-    val = read()
-    _STORE_CODEBOOK_CACHE[key] = (token, val)
-    return val
-
-
-def _prime_pq_codebook_memo(spark, dir_path: str, codebooks) -> None:
-    """Install just-WRITTEN PQ codebooks into the persisted-read memo so
-    the first load after an init/rebuild skips its collect job (r19
-    optimization; guide §1.2 — every init→update and rebuild→search
-    chain paid one driver collect per quantizer level to re-read values
-    the writer held in hand).  Value-invisible by construction, PQ
-    codebooks ONLY: ``load_pq_codebooks`` reconstructs by
-    (sub_id, centroid_id) INDEXING — collect order cannot matter — and
-    parquet round-trips doubles exactly, so the primed value is
-    bit-identical to what the next read would return (pinned by
-    tests/test_r19_opt_internals.py).  The IVF/semantic centroid stores
-    are NOT primed: ``_collect_codebook`` returns rows in collect order,
-    which Spark's file-split scheduling does not promise to match write
-    order.  The fs-token is computed AFTER the write, so any later
-    rewrite still invalidates exactly as for a collected entry."""
-    token = _store_dir_token(dir_path)
-    if token is None:
-        return
-    key = (spark.sparkContext.applicationId, os.path.abspath(dir_path))
-    # deep-copy: the memo value must stay immutable even if the caller
-    # mutates its own nested lists afterwards
-    val = [[[float(x) for x in c] for c in cb] for cb in codebooks]
-    _STORE_CODEBOOK_CACHE[key] = (token, val)
-
-
-def _drop_pq_codebook_memo(spark, dir_path: str) -> None:
-    """Discard a memo entry for a path that no longer exists (a rebuild's
-    renamed-away staging dir) — bounded-cache hygiene, not correctness:
-    a stale entry can never be served (its path has no files, so
-    ``_store_dir_token`` returns None and reads bypass the memo)."""
-    _STORE_CODEBOOK_CACHE.pop(
-        (spark.sparkContext.applicationId, os.path.abspath(dir_path)), None
-    )
-
-
 def _collect_store_centroids(
     spark, store_dir: str, centroid_id: str = "centroid_id",
     vec: str = "embedding",
 ) -> list[tuple[int, list[float]]]:
-    """``_collect_codebook`` over a PERSISTED centroids dir, memoized per
-    (application, path, fs-token) — see _STORE_CODEBOOK_CACHE."""
-    return _memo_store_read(
+    """``_collect_codebook`` over a PERSISTED centroids dir, memoized
+    while the store is unchanged (``store_cache.store_value``)."""
+    return store_cache.store_value(
         spark, store_dir,
         lambda: _collect_codebook(
             _read_pq(spark, store_dir), centroid_id, vec
@@ -1297,15 +1220,14 @@ def init_pq_index(
         rows, "sub_id int, centroid_id int, centroid array<double>"
     ).write.mode("overwrite").parquet(f"{path}/codebooks")
     # the first load after init (every update_*'s quantizer read) skips
-    # its collect job — see _prime_pq_codebook_memo for the
-    # value-invisibility argument
-    _prime_pq_codebook_memo(spark, f"{path}/codebooks", codebooks)
+    # its collect job
+    _prime_pq_codebooks(spark, f"{path}/codebooks", codebooks)
 
 
 def load_pq_codebooks(spark, path: str) -> list[list[list[float]]]:
     """Read the persisted codebooks back into the nested-list form every
     PQ operator consumes (m·k·d_sub doubles — bounded collect), memoized
-    per (application, path, fs-token) — see _STORE_CODEBOOK_CACHE."""
+    while the store is unchanged (``store_cache.store_value``)."""
 
     def read() -> list[list[list[float]]]:
         rows = _read_pq(spark, f"{path}/codebooks").collect()
@@ -1316,7 +1238,20 @@ def load_pq_codebooks(spark, path: str) -> list[list[list[float]]]:
             cbs[r.sub_id][r.centroid_id] = [float(x) for x in r.centroid]
         return cbs
 
-    return _memo_store_read(spark, f"{path}/codebooks", read)
+    return store_cache.store_value(spark, f"{path}/codebooks", read)
+
+
+def _prime_pq_codebooks(spark, dir_path: str, codebooks) -> None:
+    """Prime the just-written PQ codebooks as ``load_pq_codebooks``'s
+    value.  Exact for PQ codebooks only: the read rebuilds them by
+    (sub_id, centroid_id) index and parquet round-trips doubles, so the
+    value equals a fresh read.  The IVF and semantic centroid stores are
+    not primed: ``_collect_codebook`` keeps collect order, which need not
+    match write order.  The copy keeps the entry immune to the caller
+    mutating its lists."""
+    store_cache.prime(
+        spark, dir_path, [[[float(x) for x in c] for c in cb] for cb in codebooks]
+    )
 
 
 def update_pq_codes(
@@ -1496,8 +1431,8 @@ def rebuild_pq_codes(
     # repoint the codebook memo at the installed path (the staging-path
     # entry init_pq_index primed was renamed away): the rebuilt index's
     # first search/update skips its re-collect job
-    _drop_pq_codebook_memo(spark, f"{staging}/codebooks")
-    _prime_pq_codebook_memo(spark, f"{path}/codebooks", cbs)
+    store_cache.forget(spark, f"{staging}/codebooks")
+    _prime_pq_codebooks(spark, f"{path}/codebooks", cbs)
     return {"n_vectors": int(n_acc), "m": int(m or len(old_cbs))}
 
 
@@ -1985,8 +1920,8 @@ def rebuild_ivfpq_index(
     # index's first search (the dq5/dq4 rebuilt gate, emb14's post-
     # rebuild serve) skips two re-collect jobs
     for _lvl, _cbs in (("coarse", coarse), ("fine", fine)):
-        _drop_pq_codebook_memo(spark, f"{staging}/{_lvl}/codebooks")
-        _prime_pq_codebook_memo(spark, f"{path}/{_lvl}/codebooks", _cbs)
+        store_cache.forget(spark, f"{staging}/{_lvl}/codebooks")
+        _prime_pq_codebooks(spark, f"{path}/{_lvl}/codebooks", _cbs)
     return {"n_vectors": int(n_acc), "n_lists": int(n_lists)}
 
 

@@ -936,11 +936,10 @@ def load_curriculum_model(spark, path: str) -> tuple[DataFrame, DataFrame, int]:
     bc = _read_pq(spark, f"{path}/model/bc")
     uc = _read_pq(spark, f"{path}/model/uc")
     # the scalar meta row is fixed for the model's life (rebuild swaps
-    # the directory) — memoize the one-row collect per (app, path,
-    # fs-token) like every persisted-codebook read
-    from .similarity import _memo_store_read
+    # the directory)
+    from .. import store_cache
 
-    v = _memo_store_read(
+    v = store_cache.store_value(
         spark,
         f"{path}/model/meta",
         lambda: int(_read_pq(spark, f"{path}/model/meta").first()[0]),

@@ -1356,7 +1356,7 @@ def _dq5_serving_drift_monitors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         with overlap() as o:
             exact = o.submit("dq5/leg_ivfpq/exact", _build_exact)
-            # memoized per (applicationId, sf_dir, params) — the planted
+            # memoized per (application, sf_dir, params) — the planted
             # fixture fit is deterministic, so warm bench passes skip the
             # ivfpq leg's ~7 s serial-chain fit (r17 verdict item 4)
             coarse, fine = dq5_fixture_ivfpq_fit(

@@ -1,35 +1,21 @@
-"""Session-memoized fixture artifacts shared across verification queries.
+"""Session-memoized fixture fits shared across verification queries.
 
-The ANN verification league (emb13 / emb19 / emb21) each train the SAME
-default IVF-PQ quantizer pair on the SAME full embeddings table inside
-their query — deliberate per-query self-containment that costs one
-redundant k-means fit per query in a bench/driver session (the r15
-verdict's remaining structural trim).  The fit is a pure deterministic
-function of the corpus (k-means seeding is partition-offset based over
-the same single-source scan), so memoizing it per (Spark application,
-sf_dir) is VALUE-INVISIBLE: every consumer receives bit-identical
-codebooks whether it hits or misses, queries stay independently runnable
-(a miss just trains as before), and no cross-query state can leak
-because the cache key pins both the session and the corpus.
+Many queries train the same quantizers on the same input inside their
+plan: the ANN league (emb13 / emb19 / emb21) fits one default IVF-PQ pair
+on the full embeddings table, dq4/dq5 fit their own parameters on a
+planted fixture segment, and a bench or driver session re-enters each
+query per pass.  Every fit here is a pure deterministic function of
+``sf_dir`` and its parameters, so it is memoized per (application,
+sf_dir, tag, params) through ``store_cache.memo``: a consumer receives
+bit-identical values whether it hits or misses, and a miss trains
+exactly as before, so each query stays independently runnable.  A caller
+passing a fixture frame names its rendering with ``tag`` and owns the
+invariant that the frame derives from ``sf_dir`` alone.
 
-Only the DRIVER-SIDE codebook pair is cached — never a DataFrame:
-bench.py unpersists every cached RDD between samples, which makes a
-session-held localCheckpoint'd frame irrecoverable (truncated lineage,
-blocks gone), so a cached index frame would crash its consumer on the
-next pass.  Consumers that need the encoded index (emb13) re-encode
-per call under the cached quantizers (deterministic, map-only) and
-hold their own per-execution checkpoint, which each query releases
-normally.
-
-dq4/dq5 keep their own fit PARAMETERS on purpose (custom n_lists/m/k on
-a fixture SEGMENT, not the full table) — nothing to share with the
-league cache above.  But dq5's pre-drift-era fit is still a pure
-deterministic function of (sf_dir, params) — the planted fixture SQL
-derives from the embeddings table alone — so it gets its OWN memo under
-the identical (applicationId, sf_dir) contract (r17 verdict item 4):
-a bench session re-enters dq5 per pass and re-trained the same
-quantizers every time (~7 s, the ivfpq leg's serial-chain floor).
-Same value-invisibility argument, same driver-side-only rule.
+Only driver-side codebook values are cached, never a DataFrame (see
+``store_cache``).  Consumers that need the encoded index (emb13)
+re-encode per call under the cached quantizers and hold their own
+per-execution checkpoint.
 """
 
 from __future__ import annotations
@@ -37,8 +23,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..sources.readers import load_table
-
-_IVFPQ_FIT_CACHE: dict[tuple[str, str], tuple] = {}
+from ..store_cache import memo
 
 
 def shared_ivfpq_fit(spark: SparkSession, sf_dir: str, n_iter: int = 2):
@@ -50,16 +35,10 @@ def shared_ivfpq_fit(spark: SparkSession, sf_dir: str, n_iter: int = 2):
     under the SAME quantizers, so codebook quality is irrelevant to it)."""
     from ..operators.similarity import ivfpq_fit
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_iter)
-    got = _IVFPQ_FIT_CACHE.get(key)
-    if got is None:
-        emb = load_table(spark, sf_dir, "embeddings")
-        got = ivfpq_fit(emb, n_iter=n_iter)
-        _IVFPQ_FIT_CACHE[key] = got
-    return got
-
-
-_DQ5_FIT_CACHE: dict[tuple, tuple] = {}
+    return memo(
+        spark, ("shared_ivfpq_fit", sf_dir, n_iter),
+        lambda: ivfpq_fit(load_table(spark, sf_dir, "embeddings"), n_iter=n_iter),
+    )
 
 
 def dq5_fixture_ivfpq_fit(
@@ -76,31 +55,10 @@ def dq5_fixture_ivfpq_fit(
     cached, per the module rule."""
     from ..operators.similarity import ivfpq_fit
 
-    key = (spark.sparkContext.applicationId, sf_dir, n_lists, m, k, n_iter)
-    got = _DQ5_FIT_CACHE.get(key)
-    if got is None:
-        got = ivfpq_fit(old, n_lists=n_lists, m=m, k=k, n_iter=n_iter)
-        _DQ5_FIT_CACHE[key] = got
-    return got
-
-
-# --- r18 optimization round: the league memo generalized -------------------
-# Measurement (OPTIMIZATION_r18.md "quantizer training"): beyond the three
-# shared_ivfpq_fit consumers, ELEVEN queries still trained their own
-# quantizers per call — identical deterministic fits over either the full
-# embeddings table or a planted fixture that derives from it — so a bench
-# session re-paid the same fit on every interleaved pass.  Same contract as
-# above, verbatim: the fit input must be a PURE DETERMINISTIC function of
-# sf_dir (the caller names it via ``tag`` when it is a fixture rendering,
-# e.g. dq4's planted eras), the cache key pins (applicationId, sf_dir, tag,
-# params), only DRIVER-SIDE codebook values are cached (never a DataFrame
-# — bench.py unpersists cached RDDs between samples), and a miss trains
-# exactly as before, so every consumer receives bit-identical values
-# whether it hits or misses and queries stay independently runnable.
-
-_KMEANS_FIT_CACHE: dict[tuple, list] = {}
-_PQ_FIT_CACHE: dict[tuple, list] = {}
-_FIXTURE_COUNT_CACHE: dict[tuple, int] = {}
+    return memo(
+        spark, ("dq5_fixture_ivfpq_fit", sf_dir, n_lists, m, k, n_iter),
+        lambda: ivfpq_fit(old, n_lists=n_lists, m=m, k=k, n_iter=n_iter),
+    )
 
 
 def planted_semdedup_fit(
@@ -114,12 +72,7 @@ def planted_semdedup_fit(
     bit-identical values whether they hit or miss."""
     from ..operators.similarity import semdedup_k
 
-    ckey = (spark.sparkContext.applicationId, sf_dir, "semplant_n")
-    n = _FIXTURE_COUNT_CACHE.get(ckey)
-    if n is None:
-        n = corpus.count()
-        _FIXTURE_COUNT_CACHE[ckey] = n
-    k = semdedup_k(n)
+    k = semdedup_k(memo(spark, ("semplant_n", sf_dir), corpus.count))
     rows = fixture_kmeans_fit_rows(spark, sf_dir, "semplant", corpus, k, 2)
     return k, rows
 
@@ -139,15 +92,13 @@ def fixture_kmeans_fit_rows(
     exact list this cache already holds."""
     from ..operators.clustering import kmeans_fit
 
-    key = (spark.sparkContext.applicationId, sf_dir, tag, k, n_iter)
-    rows = _KMEANS_FIT_CACHE.get(key)
-    if rows is None:
-        rows = [
+    return memo(
+        spark, ("fixture_kmeans_fit", sf_dir, tag, k, n_iter),
+        lambda: [
             (int(r.centroid_id), [float(x) for x in r.embedding])
             for r in kmeans_fit(df, k=k, n_iter=n_iter).collect()
-        ]
-        _KMEANS_FIT_CACHE[key] = rows
-    return rows
+        ],
+    )
 
 
 def fixture_kmeans_fit(
@@ -193,12 +144,10 @@ def fixture_pq_fit(
     deterministic-input contract as ``fixture_kmeans_fit``."""
     from ..operators.similarity import pq_fit
 
-    key = (spark.sparkContext.applicationId, sf_dir, tag, m, k, n_iter)
-    got = _PQ_FIT_CACHE.get(key)
-    if got is None:
-        got = pq_fit(df, m=m, k=k, n_iter=n_iter)
-        _PQ_FIT_CACHE[key] = got
-    return got
+    return memo(
+        spark, ("fixture_pq_fit", sf_dir, tag, m, k, n_iter),
+        lambda: pq_fit(df, m=m, k=k, n_iter=n_iter),
+    )
 
 
 def shared_pq_fit(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:

@@ -2859,6 +2859,18 @@ def _mm13_image_text_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .filter(F.col("text").isNotNull())
     )
+
+    def ascii_len(col: str):
+        # the BMP payload and the text-side ascii() walk both take a
+        # character for a byte, so a non-ASCII caption must fail loudly
+        n = F.octet_length(col).cast("bigint")
+        return F.when(n == F.char_length(col), n).otherwise(
+            F.raise_error(F.format_string(
+                f"mm13: non-ASCII {col} in pair (doc_id %d, media_src_id %d)",
+                "doc_id", "media_src_id",
+            ))
+        )
+
     pair = (
         docs.alias("a")
         .join(docs.alias("b"), F.expr(_mm13_pair_geometry_sql()))
@@ -2868,8 +2880,8 @@ def _mm13_image_text_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("b.doc_id").alias("media_src_id"),
             F.col("b.text").alias("media_text"),
         )
-        .withColumn("lt", F.expr("CAST(octet_length(text) AS BIGINT)"))
-        .withColumn("lm", F.expr("CAST(octet_length(media_text) AS BIGINT)"))
+        .withColumn("lt", ascii_len("text"))
+        .withColumn("lm", ascii_len("media_text"))
         .withColumn("w", F.expr("4 * (pmod(lm, 3) + 1)"))
         .withColumn("h", F.expr("(lm + 3 * w - 1) DIV (3 * w)"))
         .withColumn("stride", F.expr("((w * 3 + 3) DIV 4) * 4"))
@@ -2886,13 +2898,12 @@ def _mm13_image_text_alignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         + _le_bytes_sql("n", 4)
         + ", X'" + "00" * 16 + "')"
     )
-    # payload = the caption's bytes + a zero tail: the corpus is pure
-    # ASCII (parity-pinned — the per-character ascii() indexing this
-    # replaces was already only correct under that invariant), so
-    # encode() emits exactly the codepoint bytes the old per-byte
-    # hex-string walk assembled one position at a time, and the tail is
-    # one repeat instead of n−lm lambda steps (guide §1.2; measured
-    # payload assembly ~1.9 s → ~0.1 s at sf0.1, bit-identical bytes)
+    # payload = the caption's bytes + a zero tail: the captions are pure
+    # ASCII (checked by ascii_len above), so encode() emits exactly the
+    # codepoint bytes the old per-byte hex-string walk assembled one
+    # position at a time, and the tail is one repeat instead of n−lm
+    # lambda steps (guide §1.2; measured payload assembly ~1.9 s →
+    # ~0.1 s at sf0.1, bit-identical bytes)
     payload = F.expr(
         "concat(encode(media_text, 'UTF-8'), "
         "unhex(repeat('00', CAST(n - lm AS INT))))"

@@ -18,36 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..store_cache import read_parquet_cached_schema
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
-
-
-# --- r19 optimization: session memo for parquet SCHEMA inference ------------
-# Measured (OPTIMIZATION_r19.md "schema-inference jobs"): every
-# ``spark.read.parquet(path)`` CONSTRUCTION submits one footer-reading
-# Spark job before any action runs — ~0.1-0.5 s of fixed overhead per read
-# site on this box, paid again on every re-read of the same store (the
-# incremental tables are re-read per batch, and every query re-reads its
-# sf_dir tables per bench pass).  The engine's stores have a FIXED schema
-# for the life of their path (single-writer module contract: appends are
-# schema-checked loudly, rebuild/compaction/purge swaps preserve columns
-# by construction, and the sf_dir testdata tables are immutable), so the
-# inferred StructType is memoized per (applicationId, absolute path) and
-# later constructions pass it explicitly — ``spark.read.schema(s)`` skips
-# the inference job, returning a frame with the IDENTICAL schema object
-# the inference path produced (pinned by test).
-#
-# Safety guard: the memo entry carries a WITNESS — the (relpath, size,
-# mtime_ns) set of the data files present at inference time (driver-side
-# os.walk, no Spark job).  A later read validates witness ⊆ current
-# files: appends keep the witness (cache hit — the hot path), while any
-# REWRITE (overwrite, compaction, purge, staged swap) replaces part
-# files, breaks the subset, and forces a fresh inference — so even an
-# out-of-contract schema change re-infers.  Scheme-prefixed URIs skip
-# the memo entirely (no local stat access), same rule as
-# ``read_parquet_if_exists``'s stat check.
-_STORE_SCHEMA_CACHE: dict = {}
 
 
 def _is_uri(path: str) -> bool:
@@ -55,48 +30,6 @@ def _is_uri(path: str) -> bool:
     import re
 
     return re.match(r"^[A-Za-z][A-Za-z0-9+.-]+:", path) is not None
-
-
-def _schema_witness(path: str) -> frozenset | None:
-    import os
-
-    files = []
-    try:
-        for root, _dirs, names in os.walk(path):
-            rel = os.path.relpath(root, path)
-            for n in names:
-                if n.startswith(("_", ".")):
-                    continue  # markers/_SUCCESS churn carries no schema
-                st = os.stat(os.path.join(root, n))
-                files.append((os.path.join(rel, n), st.st_size, st.st_mtime_ns))
-    except OSError:
-        return None
-    return frozenset(files) if files else None
-
-
-def read_parquet_cached_schema(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` with the schema-inference job skipped
-    on re-reads of a store this application already inferred — see the
-    module note above for the witness-guarded value-invisibility
-    argument.  Falls back to plain inference for URIs, absent paths, or
-    any witness mismatch."""
-    import os
-
-    if _is_uri(path):
-        return spark.read.parquet(path)
-    key = (spark.sparkContext.applicationId, os.path.abspath(path))
-    hit = _STORE_SCHEMA_CACHE.get(key)
-    if hit is not None:
-        witness, schema = hit
-        current = _schema_witness(path)
-        if current is not None and witness <= current:
-            return spark.read.schema(schema).parquet(path)
-        _STORE_SCHEMA_CACHE.pop(key, None)
-    witness = _schema_witness(path)
-    df = spark.read.parquet(path)
-    if witness:
-        _STORE_SCHEMA_CACHE[key] = (witness, df.schema)
-    return df
 
 
 def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
@@ -124,9 +57,6 @@ def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
     if not _is_uri(path) and not os.path.exists(path):
         return None
     try:
-        # schema-memoized construction (witness-guarded; see module note)
-        # — the incremental stores are re-read every batch and paid one
-        # footer-inference job per read
         return read_parquet_cached_schema(spark, path)
     except AnalysisException:
         return None
@@ -135,8 +65,6 @@ def read_parquet_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    # sf_dir tables are immutable for a bench/driver session: the schema
-    # memo removes one footer-inference job from EVERY query's table load
     df = read_parquet_cached_schema(spark, f"{sf_dir}/{name}.parquet")
     # events.ts is parquet TIMESTAMP(NANOS): with
     # spark.sql.legacy.parquet.nanosAsLong it arrives as LongType; truncate to

@@ -517,9 +517,11 @@ def test_dq5_leg_operators_touch_no_session_global_state():
 
     import real_time_stock_market_data_pipeline_spark.operators.similarity as sim
     import real_time_stock_market_data_pipeline_spark.plans.fixtures as fx
+    import real_time_stock_market_data_pipeline_spark.store_cache as sc
 
     for mod, where in ((sim, "operators/similarity.py"),
-                       (fx, "plans/fixtures.py")):
+                       (fx, "plans/fixtures.py"),
+                       (sc, "store_cache.py")):
         src = inspect.getsource(mod)
         for pat in (
             "createOrReplaceTempView",
@@ -579,6 +581,25 @@ def test_threads_start_only_in_the_concurrency_module():
                 f"{pat!r} entered {path.relative_to(root)} — overlap Spark "
                 "work with concurrency.overlap instead"
             )
+
+
+def test_session_memo_lives_only_in_store_cache():
+    """Caching has one mechanism, ``store_cache``: one dict keyed by the
+    application id, one file witness, one rule per entry kind.  A memo
+    keyed by the application id anywhere else would bring back a second
+    invalidation scheme; pin the package free of them."""
+    import pathlib
+
+    import real_time_stock_market_data_pipeline_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "store_cache.py":
+            continue
+        assert "applicationId" not in path.read_text(), (
+            f"'applicationId' entered {path.relative_to(root)} — memoize "
+            "through store_cache instead"
+        )
 
 
 def test_sp18_doc_level_windows_are_bucket_partitioned(spark, sf_dir):

@@ -197,6 +197,24 @@ def test_mm13_matched_pairs_score_exactly_one(spark, sf_dir):
     assert all(r.media_src_id == r.doc_id for r in matched)
 
 
+def test_mm13_non_ascii_caption_fails_loudly(spark, sf_dir, tmp_path):
+    """A caption with a multi-byte character would misalign the BMP
+    payload against the per-character text walk; the plan must raise in
+    its own projection instead of scoring a wrong alignment."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    t = pq.read_table(f"{sf_dir}/documents.parquet")
+    texts = t.column("text").to_pylist()
+    i = next(j for j, x in enumerate(texts) if x)
+    texts[i] = texts[i] + " caf\u00e9"
+    t = t.set_column(t.schema.get_field_index("text"), "text", pa.array(texts))
+    pq.write_table(t, tmp_path / "documents.parquet")
+    with pytest.raises(Exception, match="mm13: non-ASCII"):
+        QUERIES["mm13_image_text_alignment"](spark, str(tmp_path)).collect()
+
+
 def test_mm13_corpus_is_ascii_at_every_sf():
     """r14 ADVICE pin: mm13's BMP payload hex-encodes ONE byte per
     character (``lpad(hex(ascii(ch)), 2, '0')`` silently truncates a

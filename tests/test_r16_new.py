@@ -44,28 +44,3 @@ def test_sp18_budget_exact_and_greedy_shape(spark, sf_dir):
     # value order is a total order: strictly decreasing after tie-break
     keys = [(-r.value_scaled, r.epoch, r.domain) for r in rows]
     assert keys == sorted(keys)
-
-
-def test_league_fixture_survives_bench_unpersist(spark, sf_dir):
-    """bench.py unpersists EVERY cached RDD between samples; a
-    session-cached localCheckpoint'd frame would be irrecoverable on the
-    next pass (truncated lineage, blocks gone).  The league fixture
-    therefore caches only driver-side codebooks — pin that emb13 (the
-    one consumer that needs the encoded index) still runs after a full
-    unpersist, i.e. the exact bench pass-2 situation."""
-    from real_time_stock_market_data_pipeline_spark.plans import QUERIES
-    from real_time_stock_market_data_pipeline_spark.plans.fixtures import (
-        _IVFPQ_FIT_CACHE,
-    )
-
-    first = QUERIES["emb13_ivfpq_recall"](spark, sf_dir).collect()
-    assert _IVFPQ_FIT_CACHE  # the fixture populated
-    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-        rdd.unpersist()
-    second = QUERIES["emb13_ivfpq_recall"](spark, sf_dir).collect()
-    assert sorted(map(tuple, first)) == sorted(map(tuple, second))
-    # the cached artifacts are plain driver-side data, never DataFrames
-    from pyspark.sql import DataFrame
-
-    for got in _IVFPQ_FIT_CACHE.values():
-        assert not any(isinstance(x, DataFrame) for x in got)

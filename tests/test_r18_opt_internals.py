@@ -1,8 +1,9 @@
 """Focused pins for the r18 optimization-round operator internals:
-``_observed_count`` (counts riding the chain's own action) and
-``_memo_store_read`` (the persisted-codebook session memo with fs-token
-invalidation).  Each changes HOW a value is produced, never the value —
-these tests pin that."""
+``_observed_count`` (counts riding the chain's own action), the shared
+curriculum training and semantic dedup's ``centroids`` parameter.  Each
+changes HOW a value is produced, never the value — these tests pin
+that.  The persisted-codebook memo is pinned in
+tests/test_store_cache.py."""
 
 from __future__ import annotations
 
@@ -47,31 +48,6 @@ def test_observed_count_in_update_replay_keeps_n_batch(spark, tmp_path):
     assert first == {"n_batch": n, "n_new": n}
     replay = update_pq_codes(spark, emb, path)
     assert replay == {"n_batch": n, "n_new": 0}
-
-
-def test_store_codebook_memo_hits_and_invalidates_on_rewrite(spark, tmp_path):
-    from real_time_stock_market_data_pipeline_spark.operators.similarity import (
-        _collect_store_centroids,
-    )
-
-    path = str(tmp_path / "centroids")
-    df1 = spark.createDataFrame(
-        [(0, [1.0, 2.0]), (1, [3.0, 4.0])],
-        "centroid_id int, embedding array<double>",
-    )
-    df1.coalesce(1).write.mode("overwrite").parquet(path)
-    got1 = _collect_store_centroids(spark, path)
-    got2 = _collect_store_centroids(spark, path)
-    assert got1 is got2  # unchanged fs-token: served from the memo
-    assert sorted(got1) == [(0, [1.0, 2.0]), (1, [3.0, 4.0])]
-    # a rewrite (rebuild's staged swap) changes part filenames/mtimes:
-    # the token no longer matches and the next call re-reads
-    df2 = spark.createDataFrame(
-        [(0, [9.0, 9.0])], "centroid_id int, embedding array<double>"
-    )
-    df2.coalesce(1).write.mode("overwrite").parquet(path)
-    got3 = _collect_store_centroids(spark, path)
-    assert sorted(got3) == [(0, [9.0, 9.0])]
 
 
 def test_curriculum_shared_train_scores_identically(spark):

@@ -1,12 +1,10 @@
 """Focused pins for the r19 optimization-round operator internals:
-the written-codebook memo prime (``_prime_pq_codebook_memo`` — the value
-a primed entry serves must equal what a collect would return, and a
-later rewrite must still invalidate), the single-scan purge metrics
-(values ≡ the old two-scan formulas), the rebuild coverage validation
-now raising BETWEEN the coarse and fine fits, and the clear
-dim-mismatch errors on the arrow encode paths.  Each change alters HOW
-a value is produced or WHEN an error surfaces, never the value — these
-tests pin that."""
+the single-scan purge metrics (values ≡ the old two-scan formulas), the
+rebuild coverage validation now raising BETWEEN the coarse and fine
+fits, and the clear dim-mismatch errors on the arrow encode paths.  Each
+change alters HOW a value is produced or WHEN an error surfaces, never
+the value — these tests pin that.  The written-codebook prime is pinned
+in tests/test_store_cache.py."""
 
 from __future__ import annotations
 
@@ -24,89 +22,6 @@ def _fixture_vectors(spark, n=64, dim=8):
             lambda j: (F.col("id") * 7 + j * 3).cast("double") % 11.0,
         ).alias("embedding"),
     )
-
-
-def _memo_key(spark, dir_path):
-    import os
-
-    return (spark.sparkContext.applicationId, os.path.abspath(dir_path))
-
-
-def test_init_pq_index_prime_equals_fresh_read(spark, tmp_path):
-    """The primed entry must be bit-identical to what the collect path
-    returns — the value-invisibility contract of the prime."""
-    df = _fixture_vectors(spark)
-    cbs = sim.pq_fit(df, m=2, k=4, n_iter=1)
-    path = str(tmp_path / "pqidx")
-    sim.init_pq_index(spark, cbs, path)
-    key = _memo_key(spark, f"{path}/codebooks")
-    primed = sim._STORE_CODEBOOK_CACHE.get(key)
-    assert primed is not None, "init_pq_index must prime the memo"
-    # force the collect path and compare values exactly
-    sim._STORE_CODEBOOK_CACHE.pop(key)
-    fresh = sim.load_pq_codebooks(spark, path)
-    assert fresh == primed[1]
-    # and the token matches what a fresh read stores, so the primed
-    # entry would have been served verbatim
-    assert sim._STORE_CODEBOOK_CACHE[key][0] == primed[0]
-
-
-def test_prime_still_invalidates_on_rewrite(spark, tmp_path):
-    """A rewrite BYPASSING init (new part files) must defeat the primed
-    entry exactly as it defeats a collected one (fs-token contract)."""
-    df = _fixture_vectors(spark)
-    cbs = sim.pq_fit(df, m=2, k=4, n_iter=1)
-    path = str(tmp_path / "pqidx")
-    sim.init_pq_index(spark, cbs, path)
-    assert sim.load_pq_codebooks(spark, path) == [
-        [[float(x) for x in c] for c in cb] for cb in cbs
-    ]
-    # out-of-band rewrite with DIFFERENT values
-    rows = [(j, c, [float(j + c + 1)] * 4) for j in range(2) for c in range(4)]
-    spark.createDataFrame(
-        rows, "sub_id int, centroid_id int, centroid array<double>"
-    ).write.mode("overwrite").parquet(f"{path}/codebooks")
-    got = sim.load_pq_codebooks(spark, path)
-    assert got == [[[float(j + c + 1)] * 4 for c in range(4)] for j in range(2)]
-
-
-def test_rebuild_pq_codes_primes_installed_path(spark, tmp_path):
-    df = _fixture_vectors(spark)
-    cbs = sim.pq_fit(df, m=2, k=4, n_iter=1)
-    path = str(tmp_path / "pqstore")
-    sim.init_pq_index(spark, cbs, path)
-    sim.update_pq_codes(spark, df, path)
-    sim.rebuild_pq_codes(spark, df, path, n_iter=1)
-    key = _memo_key(spark, f"{path}/codebooks")
-    primed = sim._STORE_CODEBOOK_CACHE.get(key)
-    assert primed is not None
-    sim._STORE_CODEBOOK_CACHE.pop(key)
-    assert sim.load_pq_codebooks(spark, path) == primed[1]
-    # no stale staging entries survive the swap
-    import os
-
-    stale = [
-        k for k in sim._STORE_CODEBOOK_CACHE
-        if isinstance(k, tuple) and "__staging_" in str(k[1])
-        and str(tmp_path) in str(k[1])
-    ]
-    assert stale == []
-    assert os.path.isdir(f"{path}/codes")
-
-
-def test_rebuild_ivfpq_primes_both_levels(spark, tmp_path):
-    df = _fixture_vectors(spark)
-    coarse, fine = sim.ivfpq_fit(df, n_lists=4, m=2, k=4, n_iter=1)
-    path = str(tmp_path / "ivfpq")
-    sim.init_ivfpq_index(spark, coarse, fine, path)
-    sim.update_ivfpq_index(spark, df, path)
-    sim.rebuild_ivfpq_index(spark, df, path, n_lists=4, n_iter=1)
-    for lvl in ("coarse", "fine"):
-        key = _memo_key(spark, f"{path}/{lvl}/codebooks")
-        primed = sim._STORE_CODEBOOK_CACHE.get(key)
-        assert primed is not None, lvl
-        sim._STORE_CODEBOOK_CACHE.pop(key)
-        assert sim.load_pq_codebooks(spark, f"{path}/{lvl}") == primed[1], lvl
 
 
 def test_rebuild_ivfpq_coverage_raises_before_fine_fit(spark, tmp_path, monkeypatch):
