@@ -20,6 +20,15 @@ Layout (SURVEY.md §7.1):
     streaming   — stateful tick pipeline (applyInPandasWithState), alerting,
                   time-cooldown throttle
     ml          — linear-regression features/train/score, ARIMA grouped map
+
+Importing the package makes the invalidation of zip-archive import caches
+lazy on Python < 3.13 (``lazy_zip``): a Spark Python worker imports the package
+when it unpickles any of its functions, and from then on each task skips
+re-reading ``pyspark.zip`` and the jars on ``sys.path``.
 """
+
+from . import lazy_zip
+
+lazy_zip.install()
 
 __version__ = "0.1.0"

@@ -15,8 +15,11 @@ implementations, cross-checked in tests:
 
 2. **Grouped-map pandas path** (``indicators_apply_in_pandas``): one linear
    pass per symbol via ``applyInPandas`` — the scale path for very long
-   per-symbol histories (the HOF EMA materializes an O(buffer) array per row)
-   and the exact engine used by the streaming stateful handler.
+   per-symbol histories (the HOF EMA materializes an O(buffer) array per row).
+   Its kernel is ``indicator_arrays`` (prices in, one array per indicator
+   out); ``indicator_frame`` sorts a symbol's ticks, runs it and appends the
+   columns, and the streaming stateful handler runs it directly on the
+   buffered + new prices.
 
 Exact reference semantics reproduced (documented quirks, SURVEY §7.3):
   * RSI uses a SIMPLE mean of the last ``period`` deltas, not Wilder
@@ -236,8 +239,8 @@ def get_indicator(name: str) -> IndicatorBuilder:
 
 
 # ---------------------------------------------------------------------------
-# Grouped-map pandas path — linear-time per symbol; used by the streaming
-# stateful handler and as the scale path for very long histories.
+# Grouped-map pandas path — linear-time per symbol; the scale path for very
+# long histories.  ``indicator_arrays`` also serves the streaming state handler.
 # ---------------------------------------------------------------------------
 
 
@@ -269,13 +272,10 @@ def ema_series(prices: np.ndarray, period: int, buffer: int = BUFFER_SIZE) -> np
     return out
 
 
-def indicator_frame(pdf: pd.DataFrame, spec: SeriesSpec) -> pd.DataFrame:
-    """Compute all indicators for ONE symbol's ticks (already sorted input not
-    required — sorts by (ts, tiebreak)).  Mirrors ``with_indicators`` exactly;
-    cross-checked in tests/test_indicators.py.
-    """
-    pdf = pdf.sort_values([spec.ts, spec.tiebreak], kind="mergesort").reset_index(drop=True)
-    p = pdf[spec.price].to_numpy(dtype=np.float64)
+def indicator_arrays(prices: np.ndarray) -> dict[str, np.ndarray]:
+    """Every indicator of ONE symbol's prices, in time order: one float64
+    array per ``IND_COLS`` name, aligned with ``prices``."""
+    p = np.asarray(prices, dtype=np.float64)
     n = len(p)
     idx = np.arange(1, n + 1)
     buflen = np.minimum(idx, BUFFER_SIZE)
@@ -323,21 +323,32 @@ def indicator_frame(pdf: pd.DataFrame, spec: SeriesSpec) -> pd.DataFrame:
 
     pct = (p - prev) / prev * 100.0
 
-    out = pdf.copy()
-    out["rsi_14"] = rsi
-    out["sma_20"] = sma20
-    out["sma_50"] = sma50
-    out["ema_12"] = ema12
-    out["ema_26"] = ema26
-    out["bb_upper"] = bb_upper
-    out["bb_lower"] = bb_lower
-    out["bb_middle"] = bb_middle
-    out["macd"] = macd
-    out["macd_signal"] = macd
-    out["macd_histogram"] = np.where(np.isnan(macd), np.nan, 0.0)
-    out["volatility"] = vol
-    out["price_change_percent"] = pct
-    return out
+    return {
+        "rsi_14": rsi,
+        "sma_20": sma20,
+        "sma_50": sma50,
+        "ema_12": ema12,
+        "ema_26": ema26,
+        "bb_upper": bb_upper,
+        "bb_lower": bb_lower,
+        "bb_middle": bb_middle,
+        "macd": macd,
+        "macd_signal": macd,
+        "macd_histogram": np.where(np.isnan(macd), np.nan, 0.0),
+        "volatility": vol,
+        "price_change_percent": pct,
+    }
+
+
+def indicator_frame(pdf: pd.DataFrame, spec: SeriesSpec) -> pd.DataFrame:
+    """Compute all indicators for ONE symbol's ticks (already sorted input not
+    required — sorts by (ts, tiebreak)): ``pdf`` in that order with the
+    ``IND_COLS`` appended.  Mirrors ``with_indicators`` exactly;
+    cross-checked in tests/test_indicators.py.
+    """
+    pdf = pdf.sort_values([spec.ts, spec.tiebreak], kind="mergesort").reset_index(drop=True)
+    ind = indicator_arrays(pdf[spec.price].to_numpy(dtype=np.float64))
+    return pd.concat([pdf, pd.DataFrame(ind)], axis=1)
 
 
 def indicators_apply_in_pandas(df: DataFrame, spec: SeriesSpec | None = None) -> DataFrame:

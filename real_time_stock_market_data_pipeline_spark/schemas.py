@@ -15,9 +15,13 @@ from pyspark.sql import types as T
 # Canonical tick message — the Kafka contract between producer and consumers
 # (reference producer/producer.py:101-127).  Prices compute in float64 exactly
 # like the reference's numpy math; DECIMAL is a sink-side cast only.
+# ``tick_id`` is the engine's tick sequence number (``ticks_from_events``
+# maps event ids to it), the tie-break of every per-symbol time order that
+# the stateful stream sorts on; a message without it decodes to NULL.
 TICK_SCHEMA = T.StructType(
     [
         T.StructField("company_id", T.StringType()),
+        T.StructField("tick_id", T.LongType()),
         T.StructField("ticker_symbol", T.StringType()),
         T.StructField("company_name", T.StringType()),
         T.StructField("industry", T.StringType()),

@@ -45,8 +45,10 @@ def get_spark(
         # JSON contract bench.py prints (observed as BENCH parsed=None)
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # the driver's events.parquet stores TIMESTAMP(NANOS) which vanilla
-        # Spark rejects; read as long and convert (sources.readers)
+        # events.ts is TIMESTAMP(MICROS) in the local testdata (sf0.001,
+        # sf0.01, sf0.1); this serves drivers that write TIMESTAMP(NANOS),
+        # which vanilla Spark rejects: read as long and convert
+        # (sources.readers)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
     for k, v in (extra_conf or {}).items():

@@ -26,11 +26,20 @@ from pyspark.sql import functions as F
 from ..schemas import TICK_SCHEMA
 
 
+# Timestamps go on the wire with all six fractional digits: ``to_json``'s
+# default format keeps milliseconds, which would shift every µs tick time
+# (``from_json``'s default parser reads up to microseconds).
+_WIRE_TIME = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+}
+
+
 def encode_ticks_to_kafka(df: DataFrame, key_col: str = "ticker_symbol") -> DataFrame:
     """tick rows → (key, value) Kafka-shaped frame (S2)."""
     return df.select(
         F.col(key_col).cast("string").alias("key"),
-        F.to_json(F.struct(*df.columns)).alias("value"),
+        F.to_json(F.struct(*df.columns), _WIRE_TIME).alias("value"),
     )
 
 

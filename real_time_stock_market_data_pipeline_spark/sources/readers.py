@@ -66,9 +66,10 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
     df = read_parquet_cached_schema(spark, f"{sf_dir}/{name}.parquet")
-    # events.ts is parquet TIMESTAMP(NANOS): with
-    # spark.sql.legacy.parquet.nanosAsLong it arrives as LongType; truncate to
-    # microseconds exactly like DuckDB casts nanos → its native µs TIMESTAMP.
+    # A driver that writes events.ts as parquet TIMESTAMP(NANOS) (the local
+    # testdata has MICROS) gets it as LongType under
+    # spark.sql.legacy.parquet.nanosAsLong; truncate to microseconds exactly
+    # like DuckDB casts nanos → its native µs TIMESTAMP.
     for f in df.schema.fields:
         if name == "events" and f.name == "ts" and f.dataType.simpleString() == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

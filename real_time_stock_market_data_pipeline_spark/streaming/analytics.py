@@ -13,11 +13,15 @@ Dataflow:
                                      ↘ alert filter (T6) → alert sink
                                      ↘ invalid rows → error sink (T8)
 
-The state handler reuses ``operators.indicators.indicator_frame`` — the same
-math as the batch paths, so a stream replayed as a batch produces identical
-values (tested in tests/test_streaming.py).  Each micro-batch appends the
-new ticks to the buffered prices, computes indicators over the combined
-series, emits only the new rows, and truncates state back to 1000.
+The state handler runs ``operators.indicators.indicator_arrays`` — the
+array kernel under ``indicator_frame`` and so the same math as the batch
+paths: a stream replayed as a batch produces identical values (tested in
+tests/test_streaming.py).  Each micro-batch sorts the new ticks by
+(trade_datetime, tick_id), appends their prices to the buffered ones as one
+float64 array, computes the indicators over it, emits only the new ticks'
+rows, and truncates the state back to 1000 prices.  The state holds prices
+only: the buffered history is already in time order, so it is never
+re-sorted or rebuilt as a frame.
 """
 
 from __future__ import annotations
@@ -25,25 +29,25 @@ from __future__ import annotations
 from collections.abc import Iterable, Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import TimestampNTZType
 
-from ..operators.indicators import BUFFER_SIZE, IND_COLS, SeriesSpec, indicator_frame
+from ..operators.indicators import BUFFER_SIZE, IND_COLS, indicator_arrays
 from ..operators.relational import valid_tick_predicate
 
 STATE_SCHEMA = "prices array<double>, n_seen long"
+
+_ROW_COLS = ["company_id", "tick_id", "trade_datetime", "current_price", "volume"]
 
 OUT_SCHEMA = (
     "company_id string, tick_id long, trade_datetime timestamp, "
     "current_price double, volume long, "
     + ", ".join(f"{c} double" for c in IND_COLS)
 )
-
-_SPEC = SeriesSpec(key="company_id", ts="trade_datetime",
-                   tiebreak="tick_id", price="current_price")
 
 
 def _update_symbol(
@@ -56,32 +60,23 @@ def _update_symbol(
     new = new.sort_values(["trade_datetime", "tick_id"], kind="mergesort")
 
     prices_prev, n_seen = state.get if state.exists else ([], 0)
-    prior = pd.DataFrame(
-        {
-            "company_id": key[0],
-            "tick_id": -1,
-            "trade_datetime": pd.Timestamp(0),
-            "current_price": list(prices_prev),
-            "volume": 0,
-        }
-    ) if len(prices_prev) else None
+    # Combined series = buffered history (already in time order) + this
+    # batch in (ts, tick_id) order; only the new ticks' rows are emitted.
+    prices = np.concatenate([
+        np.asarray(prices_prev, dtype=np.float64),
+        new["current_price"].to_numpy(dtype=np.float64),
+    ])
+    ind = indicator_arrays(prices)
+    first_new = len(prices_prev)
+    emitted = pd.concat(
+        [
+            new[_ROW_COLS].reset_index(drop=True),
+            pd.DataFrame({c: ind[c][first_new:] for c in IND_COLS}),
+        ],
+        axis=1,
+    )
 
-    # Combined series = buffered history + this batch, in arrival order.
-    # indicator_frame sorts by (ts, tiebreak); buffered rows use the epoch
-    # sentinel so they stay ahead of any real tick.  (prior is None when the
-    # state is empty — avoids pandas' all-NA concat deprecation.)
-    if prior is not None:
-        prior = prior.astype(new.dtypes.to_dict(), errors="ignore")
-        combined = pd.concat([prior, new], ignore_index=True)
-    else:
-        combined = new
-    out = indicator_frame(combined, _SPEC)
-    emitted = out.iloc[len(prices_prev):][
-        ["company_id", "tick_id", "trade_datetime", "current_price", "volume"] + IND_COLS
-    ]
-
-    prices_all = list(prices_prev) + new["current_price"].astype(float).tolist()
-    state.update((prices_all[-BUFFER_SIZE:], n_seen + len(new)))
+    state.update((prices[-BUFFER_SIZE:].tolist(), n_seen + len(new)))
     yield emitted
 
 

@@ -1058,3 +1058,22 @@ def test_sp19_staged_text_in_sync():
         assert _sp19_stream_ctes(dialect) in sql_resume_manifest(dialect)
         assert _sp19_rollup_sql() in sql_launch_manifest(dialect)
         assert _sp20_tail(dialect) in sql_resume_manifest(dialect)
+
+
+def test_zip_import_caches_are_touched_only_in_lazy_zip():
+    """``lazy_zip`` is the one place that changes how the interpreter's zip
+    importer caches archive directories (lazy invalidation before 3.13).
+    A second patch elsewhere would fight it over the same class; pin the
+    package free of them."""
+    import pathlib
+
+    import real_time_stock_market_data_pipeline_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "lazy_zip.py":
+            continue
+        assert "zipimport" not in path.read_text(), (
+            f"'zipimport' entered {path.relative_to(root)} — change the zip "
+            "importer in lazy_zip instead"
+        )

@@ -158,6 +158,123 @@ def test_stream_dedup_within_watermark_matches_batch(spark, tmp_path):
         assert np.allclose(a, b, rtol=1e-12, atol=1e-12, equal_nan=True), c
 
 
+def test_wire_decoded_stream_matches_typed_stream(spark, sf_dir, tmp_path):
+    """The tick pipeline end to end: ticks → ``encode_ticks_to_kafka`` → wire
+    files → ``decode_kafka_ticks`` → ``run_bounded_pipeline`` emits exactly
+    the analytics rows of the same ticks read as typed files, over two
+    micro-batches (the decoded ticks carry ``tick_id``, the handler's
+    tie-break, and their µs times)."""
+    import pandas as pd
+
+    ticks = (
+        ticks_from_events(spark, sf_dir)
+        .filter(F.col("company_id") < 5)
+        .select("company_id", "tick_id", "trade_datetime", "current_price", "volume")
+        .withColumn("company_id", F.col("company_id").cast("string"))
+        .withColumn("trade_datetime", F.col("trade_datetime").cast("timestamp"))
+    )
+    ep = F.unix_micros(F.col("trade_datetime"))
+    anchor = ticks.agg(F.percentile(ep, F.lit(0.5))).collect()[0][0]
+    for name, half in (("f1", ticks.filter(ep <= anchor)), ("f2", ticks.filter(ep > anchor))):
+        half.coalesce(1).write.parquet(str(tmp_path / "typed" / name))
+        encode_ticks_to_kafka(half, key_col="company_id").coalesce(1).write.parquet(
+            str(tmp_path / "wire" / name)
+        )
+        time.sleep(1.1)
+
+    def analytics(name, stream):
+        out = tmp_path / f"{name}_out"
+        run_bounded_pipeline(stream, str(out), str(tmp_path / f"{name}_ckpt"))
+        return (
+            spark.read.parquet(f"{out}/analytics")
+            .toPandas()
+            .sort_values(["company_id", "trade_datetime", "tick_id"])
+            .reset_index(drop=True)
+        )
+
+    typed = analytics(
+        "typed",
+        spark.readStream.schema(ticks.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{tmp_path}/typed/*/"),
+    )
+    wire = analytics(
+        "wire",
+        decode_kafka_ticks(
+            spark.readStream.schema("key string, value string")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{tmp_path}/wire/*/")
+        ),
+    )
+    assert len(typed) > 0
+    pd.testing.assert_frame_equal(wire, typed)
+
+
+class _StubState:
+    """The slice of ``GroupState`` the indicator handler uses."""
+
+    def __init__(self):
+        self.value = None
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+
+def test_update_symbol_carries_state_across_batches():
+    """The stateful handler without Spark: over batches whose ticks arrive
+    out of order (split over several frames, with tied times), each batch
+    emits its new ticks in (time, tick_id) order with the indicators of the
+    whole series so far (while the state still holds all of it), the state
+    keeps the last ``min(n, 1000)`` prices
+    and ``n_seen`` counts every tick."""
+    import pandas as pd
+
+    from real_time_stock_market_data_pipeline_spark.operators.indicators import (
+        BUFFER_SIZE,
+        indicator_frame,
+    )
+    from real_time_stock_market_data_pipeline_spark.streaming.analytics import (
+        _update_symbol,
+    )
+
+    rng = np.random.default_rng(7)
+    n = 1_700
+    secs = np.sort(rng.integers(0, 3 * n, n))  # repeats: tied times
+    ticks = pd.DataFrame({
+        "company_id": "A",
+        "tick_id": np.arange(n, dtype=np.int64),
+        "trade_datetime": pd.Timestamp("2024-01-02") + pd.to_timedelta(secs, unit="s"),
+        "current_price": rng.exponential(50.0, n).round(2) + 0.01,
+        "volume": rng.integers(0, 100, n),
+    })
+    whole = indicator_frame(ticks, TICK_SPEC)
+
+    state = _StubState()
+    cuts = [0, 300, 700, 950, 1_450, n]  # 950 → 1 450 crosses BUFFER_SIZE
+    for lo, hi in zip(cuts, cuts[1:]):
+        batch = ticks.iloc[lo:hi].sample(frac=1.0, random_state=lo)
+        frames = [batch.iloc[: len(batch) // 3], batch.iloc[len(batch) // 3:]]
+        (emitted,) = _update_symbol(("A",), iter(frames), state)
+
+        assert list(emitted["tick_id"]) == list(range(lo, hi))
+        if lo <= BUFFER_SIZE:  # the state still holds the whole series
+            for c in IND_COLS:
+                assert np.array_equal(
+                    emitted[c].to_numpy(), whole[c].to_numpy()[lo:hi], equal_nan=True
+                ), c
+        prices, n_seen = state.get
+        assert n_seen == hi
+        assert list(prices) == ticks["current_price"].tolist()[max(0, hi - BUFFER_SIZE):hi]
+
+
 def test_kafka_roundtrip_preserves_ticks(spark):
     rows = [
         ("c1", "AAPL", "2024-01-01T10:00:00Z", 101.5, 1000),
