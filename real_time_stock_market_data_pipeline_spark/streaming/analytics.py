@@ -234,27 +234,44 @@ def vwap_stream(ticks: DataFrame, watermark: str = "30 minutes") -> DataFrame:
 
 def alerts_from_analytics(analytics: DataFrame) -> DataFrame:
     """T6 threshold alerts — same predicates/severities as the oracle-checked
-    t6_alerts plan (RSI>70 / <30 → HIGH; volatility>0.05 → MEDIUM)."""
+    t6_alerts plan (RSI>70 / <30 → HIGH; volatility>0.05 → MEDIUM).
+
+    One pass: each row that fires explodes an [rsi, volatility] struct
+    array, NULL for the alert it does not fire.  A ``unionAll`` of one
+    select per alert kind would scan the input twice and, in the stream's
+    sink, write two tasks (and part files) per input partition.  Rows,
+    column names, order and types equal that union's; ``alert_type``,
+    ``threshold_value``, ``severity`` and ``alert_message`` are nullable
+    here, as every column of a parquet sink is."""
     rsi, vol = F.col("rsi_14"), F.col("volatility")
-    rsi_alerts = analytics.filter(rsi.isNotNull() & ((rsi > 70.0) | (rsi < 30.0))).select(
-        "company_id",
-        F.col("trade_datetime").alias("created_at"),
+    rsi_hit = rsi.isNotNull() & ((rsi > 70.0) | (rsi < 30.0))
+    vol_hit = vol.isNotNull() & (vol > 0.05)
+    rsi_alert = F.when(rsi_hit, F.struct(
         F.when(rsi > 70.0, F.lit("RSI_OVERBOUGHT")).otherwise(F.lit("RSI_OVERSOLD")).alias("alert_type"),
         rsi.alias("indicator_value"),
         F.when(rsi > 70.0, F.lit(70.0)).otherwise(F.lit(30.0)).alias("threshold_value"),
         F.lit("HIGH").alias("severity"),
         F.format_string("RSI alert: %.2f", rsi).alias("alert_message"),
-    )
-    vol_alerts = analytics.filter(vol.isNotNull() & (vol > 0.05)).select(
-        "company_id",
-        F.col("trade_datetime").alias("created_at"),
+    ))
+    vol_alert = F.when(vol_hit, F.struct(
         F.lit("HIGH_VOLATILITY").alias("alert_type"),
         vol.alias("indicator_value"),
         F.lit(0.05).alias("threshold_value"),
         F.lit("MEDIUM").alias("severity"),
         F.format_string("High volatility detected: %.4f", vol).alias("alert_message"),
+    ))
+    return (
+        analytics.filter(rsi_hit | vol_hit)
+        .select(
+            "company_id",
+            F.col("trade_datetime").alias("created_at"),
+            F.explode(F.filter(F.array(rsi_alert, vol_alert), lambda a: a.isNotNull())).alias("_a"),
+        )
+        .select(
+            "company_id", "created_at", "_a.alert_type", "_a.indicator_value",
+            "_a.threshold_value", "_a.severity", "_a.alert_message",
+        )
     )
-    return rsi_alerts.unionAll(vol_alerts)
 
 
 def run_bounded_pipeline(
@@ -264,8 +281,13 @@ def run_bounded_pipeline(
 ):
     """Bounded end-to-end run (availableNow ≈ the reference's MAX_MESSAGES):
     analytics rows → parquet, alerts side-output → parquet, exactly-once via
-    checkpoint.  foreachBatch fans one computed micro-batch into both sinks.
-    Returns the finished StreamingQuery; per-batch A8 counters are in
+    checkpoint.  foreachBatch fans one computed micro-batch into both sinks:
+    the batch is cached once, and each sink writes one task (at most one
+    part file) per batch partition, the alerts in one pass over the cache.
+    The checkpoint's logs and state deltas go through the session's
+    checkpoint file manager (``session.get_spark`` sets a rename that
+    forks no process on a local path).  Returns the finished
+    StreamingQuery; per-batch A8 counters are in
     ``q.recentProgress[*].observedMetrics['tick_metrics']``."""
     analytics = streaming_indicators(observed(ticks))
 

@@ -64,3 +64,30 @@ def test_changed_archive_is_seen_after_invalidation(tmp_path, monkeypatch):
             sys.modules.pop(name, None)
         sys.path_importer_cache.pop(archive, None)
         zipimport._zip_directory_cache.pop(archive, None)
+
+
+def test_iter_modules_lists_a_zip_after_invalidation(tmp_path, monkeypatch):
+    """A caller that reads the zip directory cache directly —
+    ``pkgutil.iter_modules`` over an archive on ``sys.path`` — finds the
+    archive re-read after ``invalidate_caches()``, including a module added
+    after the last import from it, instead of a ``KeyError``."""
+    import pkgutil
+
+    import real_time_stock_market_data_pipeline_spark  # noqa: F401
+
+    archive = str(tmp_path / "listed.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("lazy_zip_listed_a.py", "VALUE = 1\n")
+    monkeypatch.syspath_prepend(archive)
+    try:
+        assert importlib.import_module("lazy_zip_listed_a").VALUE == 1
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr("lazy_zip_listed_a.py", "VALUE = 1\n")
+            z.writestr("lazy_zip_listed_b.py", "VALUE = 2\n")
+        importlib.invalidate_caches()
+        names = {m.name for m in pkgutil.iter_modules([archive])}
+        assert names == {"lazy_zip_listed_a", "lazy_zip_listed_b"}
+    finally:
+        sys.modules.pop("lazy_zip_listed_a", None)
+        sys.path_importer_cache.pop(archive, None)
+        zipimport._zip_directory_cache.pop(archive, None)

@@ -30,6 +30,7 @@ from real_time_stock_market_data_pipeline_spark.sources.synthetic import (
 )
 from real_time_stock_market_data_pipeline_spark.streaming.analytics import (
     IND_COLS,
+    alerts_from_analytics,
     run_bounded_pipeline,
 )
 
@@ -67,9 +68,9 @@ def test_stateful_stream_matches_batch(spark, sf_dir, tmp_path):
         .sort_values(["company_id", "trade_datetime", "tick_id"])
         .reset_index(drop=True)
     )
+    twin = indicators_apply_in_pandas(ticks.filter(valid_tick_predicate()), TICK_SPEC)
     exp = (
-        indicators_apply_in_pandas(ticks.filter(valid_tick_predicate()), TICK_SPEC)
-        .toPandas()
+        twin.toPandas()
         .sort_values(["company_id", "trade_datetime", "tick_id"])
         .reset_index(drop=True)
     )
@@ -82,6 +83,97 @@ def test_stateful_stream_matches_batch(spark, sf_dir, tmp_path):
     alerts = spark.read.parquet(f"{out}/alerts")
     assert alerts.count() > 0
     assert set(alerts.select("severity").distinct().toPandas()["severity"]) <= {"HIGH", "MEDIUM"}
+    # the stream's alerts are the batch twin's, row for row
+    keys = ["company_id", "created_at", "alert_type"]
+    got_a = alerts.toPandas().sort_values(keys).reset_index(drop=True)
+    exp_a = alerts_from_analytics(twin).toPandas().sort_values(keys).reset_index(drop=True)
+    assert list(got_a.columns) == list(exp_a.columns)
+    text = keys + ["severity", "alert_message"]
+    assert got_a[text].equals(exp_a[text])
+    for c in ("indicator_value", "threshold_value"):
+        assert np.allclose(got_a[c].to_numpy(float), exp_a[c].to_numpy(float),
+                           rtol=1e-12, atol=1e-12), c
+
+    # every state-store delta keeps Spark's checkpoint checksum file and
+    # Hadoop's .crc beside it, under the session's checkpoint file manager
+    deltas = sorted((tmp_path / "ckpt" / "state").rglob("*.delta"))
+    assert deltas
+    for d in deltas:
+        assert d.with_name(d.name + ".crc").is_file(), d
+        assert d.with_name(f".{d.name}.crc").is_file(), d
+
+
+def test_checkpoint_renames_use_the_filesystem_manager(spark, tmp_path):
+    """The session's streaming checkpoints rename temp files with
+    ``FileSystem.rename`` (rename(2) on a local path), not the default
+    FileContext manager, whose rename forks ``readlink`` for every file
+    when Hadoop has no native library."""
+    jvm = spark._jvm
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    created = manager.create(
+        jvm.org.apache.hadoop.fs.Path(tmp_path.as_uri()),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    assert created.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
+def _alerts_by_union(analytics):
+    """The two-select reference for ``alerts_from_analytics``: one select
+    per alert kind, unioned."""
+    rsi, vol = F.col("rsi_14"), F.col("volatility")
+    rsi_alerts = analytics.filter(rsi.isNotNull() & ((rsi > 70.0) | (rsi < 30.0))).select(
+        "company_id",
+        F.col("trade_datetime").alias("created_at"),
+        F.when(rsi > 70.0, F.lit("RSI_OVERBOUGHT")).otherwise(F.lit("RSI_OVERSOLD")).alias("alert_type"),
+        rsi.alias("indicator_value"),
+        F.when(rsi > 70.0, F.lit(70.0)).otherwise(F.lit(30.0)).alias("threshold_value"),
+        F.lit("HIGH").alias("severity"),
+        F.format_string("RSI alert: %.2f", rsi).alias("alert_message"),
+    )
+    vol_alerts = analytics.filter(vol.isNotNull() & (vol > 0.05)).select(
+        "company_id",
+        F.col("trade_datetime").alias("created_at"),
+        F.lit("HIGH_VOLATILITY").alias("alert_type"),
+        vol.alias("indicator_value"),
+        F.lit(0.05).alias("threshold_value"),
+        F.lit("MEDIUM").alias("severity"),
+        F.format_string("High volatility detected: %.4f", vol).alias("alert_message"),
+    )
+    return rsi_alerts.unionAll(vol_alerts)
+
+
+def test_alerts_one_pass_matches_two_select_union(spark):
+    """``alerts_from_analytics`` in one pass equals the union of one select
+    per alert kind: rows (both ways, with multiplicity), column names and
+    types — on NULL indicators, values exactly at 70.0 / 30.0 / 0.05 (no
+    alert) and rows that fire an RSI and a volatility alert at once."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1, 10, 0, 0)
+    rows = [
+        # (rsi_14, volatility): expected alerts
+        (None, None),      # none
+        (None, 0.07),      # HIGH_VOLATILITY
+        (85.0, None),      # RSI_OVERBOUGHT
+        (12.5, None),      # RSI_OVERSOLD
+        (70.0, 0.05),      # none: both exactly at the threshold
+        (30.0, 0.02),      # none
+        (50.0, 0.05),      # none
+        (70.0000001, 0.0500001),  # both
+        (29.9999999, 0.3),  # both
+        (95.0, 0.06),      # both
+        (95.0, 0.06),      # both, a duplicate row
+        (45.0, None),      # none
+    ]
+    df = spark.createDataFrame(
+        [(f"S{i % 3}", t0 + dt.timedelta(minutes=i), r, v) for i, (r, v) in enumerate(rows)],
+        "company_id string, trade_datetime timestamp, rsi_14 double, volatility double",
+    ).repartition(3)
+    got, exp = alerts_from_analytics(df), _alerts_by_union(df)
+    assert [(f.name, f.dataType) for f in got.schema] == [(f.name, f.dataType) for f in exp.schema]
+    assert got.exceptAll(exp).count() == 0
+    assert exp.exceptAll(got).count() == 0
+    assert got.count() == 1 + 1 + 1 + 4 * 2 == exp.count()
 
 
 def test_stream_dedup_within_watermark_matches_batch(spark, tmp_path):
