@@ -15,57 +15,35 @@ ORACLES.update(AUDIT_ORACLES)
 # CORRECTNESS file records rows for the FIRST 50 registrations only, so
 # ordering is part of the correctness-evidence budget.  The window is
 # ROTATED each round so every query gets a fresh driver row at least every
-# fourth round.  Round-19 rotation policy (executes the "R19 WINDOW PLAN"
-# committed in round 18 exactly — CORRECTNESS_r18 was 50/50 green, so the
-# freshness blocks are 50 r18 / 50 r17 / 50 r16 / 26 r15):
-#   1. the 26 r15-green entries displaced past slot 50 by the r18 window
-#      (the "FROZEN FOR R19" block — the oldest evidence in the registry,
-#      four rounds stale) lead, in r15-window order;
-#   2. round 19 is an optimization round and registers NO new queries, so
-#      the remaining 24 slots fill from the r16-green block in its
-#      r16-window order (oldest evidence after the r15 tail; inside/outside
-#      evidence both bottom out at r16 once the r15 block is inside, so
-#      max(inside) <= min(outside) holds).
-#   FROZEN FOR R20 (named, deliberate): the r16-green tail entries past
+# fourth round.  Round-20 rotation policy (executes the "R20 WINDOW PLAN"
+# committed in round 19 exactly — CORRECTNESS_r19 was 50/50 green, so the
+# freshness blocks are 50 r19 / 50 r18 / 50 r17 / 26 r16):
+#   1. the 26 r16-green entries displaced past slot 50 by the r19 window
+#      (the "FROZEN FOR R20" block — the oldest evidence in the registry,
+#      four rounds stale) lead, in r16-window order;
+#   2. round 20 registers NO new queries, so the remaining 24 slots fill
+#      from the r17-green block in its r17-window order (oldest evidence
+#      after the r16 tail; inside/outside evidence both bottom out at r17
+#      once the r16 tail is inside, so max(inside) <= min(outside) holds).
+#   Both steps are one rule: oldest green round first, ties keep the
+#   previous order — a stable sort of the r19 list on each query's newest
+#   green round in CORRECTNESS_r01..r19 gives exactly this list.
+#   FROZEN FOR R21 (named, deliberate): the r17-green tail entries past
 #   slot 50 wait one round — each is pytest-parity-pinned at sf0.001
 #   every run.
-#   R20 WINDOW PLAN (committed r19): once CORRECTNESS_r19 lands, the
-#   freshest-evidence blocks are 50 r19 / 50 r18 / 50 r17 / 26 r16 (the
-#   displaced r16 tail).  At r20: lead with the displaced r16-green
-#   entries, fill with the r17-green block in its r17-window order to
-#   exactly 50 (each NEW r20 query displaces one r17 fill); the r18-green
-#   then r19-green blocks form the tail in their window orders.  The
+#   R21 WINDOW PLAN (committed r20): once CORRECTNESS_r20 lands, the
+#   freshest-evidence blocks are 50 r20 / 50 r19 / 50 r18 / 26 r17 (the
+#   displaced r17 tail).  At r21: lead with the displaced r17-green
+#   entries, fill with the r18-green block in its r18-window order to
+#   exactly 50 (each NEW r21 query displaces one r18 fill); the r19-green
+#   then r20-green blocks form the tail in their window orders.  The
 #   whole registry stays covered every run by tests/test_parity.py at
 #   sf0.001 and the pre-commit parity harness at sf0.01.
 # ---------------------------------------------------------------------------
 _PRIORITY = [
-    # 1 — the 26 r15-green entries displaced past slot 50 by the r18
-    #     window ("FROZEN FOR R19"): oldest evidence in the registry,
-    #     mandatory leads, in r15-window order
-    "p9_dedup_ticks", "j6_region_revenue",
-    "j7_orders_without_big_lineitems", "j8_industry_rollup",
-    "a4_daily_summary", "w1_latest_per_day", "w_all_indicators",
-    "o3_training_fetch", "sk1_salted_daily_summary", "q1_pricing_summary",
-    "t9_session_windows", "j10_asof_quote", "s13_model_roundtrip",
-    "u2_arima_forecast", "u3_linreg_metrics", "u4_linreg_predictions",
-    "txt8_bpe_tokenize", "txt9_bpe_incremental", "t10_throttle",
-    "sp5_sequence_packing", "dd6_dup_clusters", "dd7_dedup_summary",
-    "txt17_span_dedup", "txt18_quality_classifier", "sp10_domain_caps",
-    "sp11_domain_mixture",
-    # 2 — green in CORRECTNESS_r16, r16-window order (first 24 fill the
-    #     window to exactly 50; no new queries this round)
-    "emb19_filtered_ivfpq", "txt19_incremental_span_dedup",
-    "sp12_curated_corpus", "p3_time_window_filter", "p4_recent_window",
-    "p5_equality_filter", "p6_flag_filter", "a7_dup_detection",
-    "o1_top_events", "o4_latest_row", "o5_price_history",
-    "o6_sorted_rollup",
-    "dd18_corpus_takedown", "sp18_data_constrained_mixture",
-    "emb24_probe_curve", "txt24_gopher_rules", "dq7_dataset_card",
-    "a1_grouped_max", "a2_global_max", "a6_hourly_counts",
-    "d1_distinct_event_types", "su1_set_ops", "j1_tick_dashboard",
-    "mm1_media_meta",
-    # 3 — the r16-green tail past slot 50: FROZEN FOR R20, r16-window
-    #     order preserved
+    # 1 — the 26 r16-green entries displaced past slot 50 by the r19
+    #     window ("FROZEN FOR R20"): oldest evidence in the registry,
+    #     mandatory leads, in r16-window order
     "emb12_incremental_pq", "dq3_embedding_audit",
     "emb13_ivfpq_recall", "txt14_doc_retrieval",
     "dd12_neardup_decontamination", "mm10_crossmodal_decontamination",
@@ -76,7 +54,8 @@ _PRIORITY = [
     "txt11_pii_redaction", "dd9_incremental_minhash",
     "emb7_embedding_clusters", "dd2_ngram_jaccard", "txt5_bpe_tokens",
     "f1_scalar_suite", "w4_rsi", "w5_bollinger", "w6_macd", "w7_volatility",
-    # 4 — green in CORRECTNESS_r17 (zero failures), r17-window order
+    # 2 — green in CORRECTNESS_r17, r17-window order (first 24 fill the
+    #     window to exactly 50; no new queries this round)
     "w8_price_change", "w9_ml_features", "txt2_quality", "txt3_langid",
     "w10_throttled_volatility", "p8_extreme_filter", "j5_dim_lookup",
     "emb20_d4_prototypes", "dd14_snapshot_dedup", "mm12_multimodal_packing",
@@ -85,8 +64,10 @@ _PRIORITY = [
     "mm4_wav_stats", "mm5_avi_frame_stats",
     "sp19_launch_manifest", "dq8_release_card", "txt25_retrieval_eval",
     "dd19_lsh_operating_curve", "dq9_takedown_compliance",
-    "mm6_png_roundtrip_stats", "flagship", "s14_arima_registry",
-    "mm2_image_dims", "t6_alerts", "j3_alert_feed",
+    "mm6_png_roundtrip_stats", "flagship",
+    # 3 — the r17-green tail past slot 50: FROZEN FOR R21, r17-window
+    #     order preserved
+    "s14_arima_registry", "mm2_image_dims", "t6_alerts", "j3_alert_feed",
     "emb4_ivf_topk", "emb5_ivf_trained_recall", "s9_analytics_upsert",
     "sp1_hash_split", "dq1_expectations", "a9_sketch_rollup",
     "dd8_contamination", "txt6_vocab", "txt7_bpe_merges",
@@ -96,7 +77,7 @@ _PRIORITY = [
     "emb16_semdedup_keep_policy", "mm11_triad_decontamination",
     "sp9_dup_aware_split", "emb17_incremental_semdedup",
     "txt15_perplexity_filter",
-    # 5 — green in CORRECTNESS_r18 (zero failures), r18-window order:
+    # 4 — green in CORRECTNESS_r18 (zero failures), r18-window order:
     #     the 22 displaced-r14 leads, the 4 new-in-r18 queries, then the
     #     r15 fills that sat inside the r18 window
     "emb18_filtered_ann",
@@ -121,6 +102,29 @@ _PRIORITY = [
     "emb2_label_centroids", "emb3_lsh_near_dup", "emb6_centered_lsh",
     "j2_analytics_dashboard", "j4_prediction_dashboard", "j11_range_join",
     "p7_validated_ticks",
+    # 5 — green in CORRECTNESS_r19 (zero failures), r19-window order:
+    #     the 26 displaced-r15 leads, then the 24 r16 fills that sat
+    #     inside the r19 window
+    "p9_dedup_ticks", "j6_region_revenue",
+    "j7_orders_without_big_lineitems", "j8_industry_rollup",
+    "a4_daily_summary", "w1_latest_per_day", "w_all_indicators",
+    "o3_training_fetch", "sk1_salted_daily_summary", "q1_pricing_summary",
+    "t9_session_windows", "j10_asof_quote", "s13_model_roundtrip",
+    "u2_arima_forecast", "u3_linreg_metrics", "u4_linreg_predictions",
+    "txt8_bpe_tokenize", "txt9_bpe_incremental", "t10_throttle",
+    "sp5_sequence_packing", "dd6_dup_clusters", "dd7_dedup_summary",
+    "txt17_span_dedup", "txt18_quality_classifier", "sp10_domain_caps",
+    "sp11_domain_mixture",
+    "emb19_filtered_ivfpq", "txt19_incremental_span_dedup",
+    "sp12_curated_corpus", "p3_time_window_filter", "p4_recent_window",
+    "p5_equality_filter", "p6_flag_filter", "a7_dup_detection",
+    "o1_top_events", "o4_latest_row", "o5_price_history",
+    "o6_sorted_rollup",
+    "dd18_corpus_takedown", "sp18_data_constrained_mixture",
+    "emb24_probe_curve", "txt24_gopher_rules", "dq7_dataset_card",
+    "a1_grouped_max", "a2_global_max", "a6_hourly_counts",
+    "d1_distinct_event_types", "su1_set_ops", "j1_tick_dashboard",
+    "mm1_media_meta",
 ]
 
 _missing = [n for n in _PRIORITY if n not in QUERIES]
