@@ -2779,7 +2779,7 @@ MM13_MISMATCH_STRIDE = 5   # every 5th doc carries its NEIGHBOR's image
 MM13_TAU = "0.8"           # exact 6-decimal literal — measured gap: matched
                            # alignment = 1.0 EXACTLY (the decode is lossless
                            # by construction), mismatched <= 0.766 at all
-                           # three SFs (see tests/test_r15_promoted.py)
+                           # three SFs (see tests/test_multimodal.py)
 
 
 def _mm13_pair_geometry_sql() -> str:

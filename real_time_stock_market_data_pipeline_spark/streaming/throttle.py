@@ -7,38 +7,25 @@ flapping symbol cannot page someone 400 times a minute.  The greedy rule —
 emit iff ``ts >= last_emitted_ts + cooldown`` — is inherently stateful and
 order-sensitive: per-key state is ONE timestamp.
 
-Two streaming implementations:
-
-* ``throttled_stream`` — ``applyInPandasWithState`` (the API the indicator
-  pipeline uses, streaming/analytics.py): 8-bytes-of-state-per-key in the
-  state store, one shuffle on the key (the same exchange the alert filter
-  already needs), rows processed in event-time order inside each
-  micro-batch.  Idle keys are evicted via EVENT-TIME timeout at
-  ``last_emit + cooldown``: once the watermark passes that point no
-  future row (which must sit at/after the watermark) can still be
-  suppressed, so eviction is provably lossless — at ANY replay speed.  A
-  processing-time TTL here would be wrong, not just loose: in a backfill
-  the wall clock races ahead of event time and would evict state that
-  still suppresses (caught by the restart-equivalence test).  The
-  watermark also bounds state for keys that stop alerting.
-* ``CooldownThrottle`` / ``throttled_stream_tws`` — the same operator on
-  Spark 4's ``transformWithStateInPandas`` (typed ``ValueState`` + native
-  state TTL).  ENVIRONMENT-BLOCKED here: the API's Python↔JVM state
-  protocol imports ``google.protobuf``, which this container lacks (the
-  stream fails with "TransformWithStateInPySpark driver worker exited");
-  the implementation is complete and runs wherever protobuf is installed —
-  tests/test_streaming.py gates its equivalence test on
-  ``pytest.importorskip("google.protobuf")``, same waiver pattern as the
-  Kafka broker (KAFKA.md).
+``throttled_stream`` runs it on ``applyInPandasWithState`` (the API the
+indicator pipeline uses, streaming/analytics.py): 8-bytes-of-state-per-key
+in the state store, one shuffle on the key (the same exchange the alert
+filter already needs), rows processed in event-time order inside each
+micro-batch.  Idle keys are evicted via EVENT-TIME timeout at
+``last_emit + cooldown``: once the watermark passes that point no future
+row (which must sit at/after the watermark) can still be suppressed, so
+eviction is provably lossless — at ANY replay speed.  A processing-time TTL
+here would be wrong, not just loose: in a backfill the wall clock races
+ahead of event time and would evict state that still suppresses (caught by
+the restart-equivalence test).  The watermark also bounds state for keys
+that stop alerting.
 
 Cross-batch ordering is the streaming contract: micro-batches arrive in
 trigger order, so within-batch disorder is sorted away and cross-batch
 late data should be dropped upstream by a watermark.
 
 ``throttle_batch`` is the batch-mode twin (same greedy rule over a sorted
-group) used by backfills and the stream ≡ batch equivalence test;
-``throttle_batch_sql`` is a cheaper JVM-only variant with ALIGNED-window
-(not greedy) semantics for callers that accept bucket alignment.
+group) used by backfills and the stream ≡ batch equivalence test.
 """
 
 from __future__ import annotations
@@ -48,7 +35,6 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 THROTTLE_OUT_SCHEMA = (
@@ -161,86 +147,3 @@ def throttle_batch(alerts: DataFrame, cooldown_s: float) -> DataFrame:
         .sortWithinPartitions("company_id", "trade_datetime", "tick_id")
         .mapInPandas(walk, THROTTLE_OUT_SCHEMA)
     )
-
-
-def throttle_batch_sql(df: DataFrame, cooldown_s: float) -> DataFrame:
-    """JVM-side batch variant for FIXED windows: one row per key per
-    floor(ts / cooldown) bucket.  NOTE: bucket alignment is a DIFFERENT
-    rule than the greedy scan (greedy cooldown windows start at each
-    emitted alert); kept for callers that prefer the cheaper,
-    Python-free contract."""
-    from pyspark.sql import Window
-
-    bucket = F.floor(F.unix_timestamp("trade_datetime") / F.lit(float(cooldown_s)))
-    w = Window.partitionBy("company_id", bucket).orderBy(
-        F.col("trade_datetime").asc(), F.col("tick_id").asc()
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter("__rn = 1")
-        .drop("__rn")
-        .select(*_COLS)
-    )
-
-
-# --------------------------------------------------------------------------
-# Spark 4 transformWithState path (typed state + native TTL) — complete but
-# environment-blocked here; see module docstring.
-# --------------------------------------------------------------------------
-try:  # pragma: no cover - import guard mirrors the optional API surface
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class CooldownThrottle(StatefulProcessor):
-        """Greedy cooldown throttle as a typed-state processor: per-key
-        ``ValueState`` of one epoch-seconds double with native state TTL
-        (``ttl_factor × cooldown``).
-
-        CAVEAT vs ``throttled_stream``: the typed-state TTL is
-        PROCESSING-time — safe for live streams (event ≈ wall clock) but
-        not for fast replays, where wall time races event time and TTL
-        eviction could drop still-suppressing state.  The
-        applyInPandasWithState path evicts on EVENT time (watermark) and
-        is the replay-safe default; revisit when transformWithState grows
-        event-time TTLs."""
-
-        def __init__(self, cooldown_s: float, ttl_factor: float = 4.0):
-            self._cooldown = float(cooldown_s)
-            self._ttl_ms = int(cooldown_s * ttl_factor * 1000)
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._last = handle.getValueState(
-                "last_emit", _STATE_SCHEMA, ttlDurationMs=self._ttl_ms
-            )
-
-        def handleInputRows(
-            self, key, rows: Iterator[pd.DataFrame], timerValues
-        ) -> Iterator[pd.DataFrame]:
-            last = self._last.get()[0] if self._last.exists() else None
-            pdf = pd.concat(list(rows), ignore_index=True)
-            out, last = _greedy_keep(pdf, self._cooldown, last)
-            if last is not None:
-                self._last.update((float(last),))
-            yield out
-
-        def close(self) -> None:
-            pass
-
-    def throttled_stream_tws(
-        alerts: DataFrame, cooldown_s: float, ttl_factor: float = 4.0
-    ) -> DataFrame:
-        """``throttled_stream`` on transformWithStateInPandas.  Requires
-        protobuf in the Python environment and the RocksDB state store
-        provider."""
-        return alerts.groupBy("company_id").transformWithStateInPandas(
-            CooldownThrottle(cooldown_s, ttl_factor),
-            outputStructType=THROTTLE_OUT_SCHEMA,
-            outputMode="Append",
-            timeMode="ProcessingTime",
-        )
-
-except ImportError:  # pragma: no cover
-    CooldownThrottle = None  # type: ignore[assignment]
-    throttled_stream_tws = None  # type: ignore[assignment]

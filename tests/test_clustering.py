@@ -1,10 +1,13 @@
-"""Deterministic KMeans (IVF centroid trainer) invariants."""
+"""Deterministic KMeans (IVF centroid trainer) invariants, and the IVF,
+IVF-PQ, PQ and semantic-dedup index lifecycles built on it."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
+from real_time_stock_market_data_pipeline_spark.operators import similarity as sim
 from real_time_stock_market_data_pipeline_spark.operators.clustering import kmeans_fit
 
 
@@ -1433,3 +1436,100 @@ def test_emb23_funnel_dominates_head_only_serving(spark, sf_dir):
         assert 0 <= r.head_overlap <= r.funnel_overlap <= 10
         assert r.funnel_recall >= r.head_recall
     assert max(r.head_recall for r in rows) <= 0.5  # untrained prefix
+
+
+def _fixture_vectors(spark, n=64, dim=8):
+    return spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(dim - 1)),
+            lambda j: (F.col("id") * 7 + j * 3).cast("double") % 11.0,
+        ).alias("embedding"),
+    )
+
+
+def test_rebuild_ivfpq_coverage_raises_before_fine_fit(spark, tmp_path, monkeypatch):
+    """The r18 verdict's failure-path item: a doomed rebuild must raise
+    the coverage mismatch after the COARSE fit, never paying the fine
+    retrain — and still mutate nothing on disk."""
+    import os
+
+    df = _fixture_vectors(spark)
+    coarse, fine = sim.ivfpq_fit(df, n_lists=4, m=2, k=4, n_iter=1)
+    path = str(tmp_path / "ivfpq")
+    sim.init_ivfpq_index(spark, coarse, fine, path)
+    sim.update_ivfpq_index(spark, df, path)
+    calls = []
+    real_fit = sim.pq_fit
+
+    def counting_fit(*args, **kwargs):
+        calls.append(kwargs.get("m", args[1] if len(args) > 1 else None))
+        return real_fit(*args, **kwargs)
+
+    monkeypatch.setattr(sim, "pq_fit", counting_fit)
+    before = sorted(os.listdir(str(tmp_path)))
+    with pytest.raises(ValueError, match="covers"):
+        # corpus missing half the accumulated ids — partial coverage
+        sim.rebuild_ivfpq_index(
+            spark, df.filter("vec_id % 2 = 0"), path, n_lists=4, n_iter=1
+        )
+    assert len(calls) == 1, "fine fit must not run on the doomed path"
+    assert sorted(os.listdir(str(tmp_path))) == before  # no fs mutation
+
+
+def test_semantic_dedup_centroids_param_identical(spark):
+    """semantic_dedup(centroids=...) with the exact kmeans_fit rows must
+    equal the in-operator fit path row-for-row (the emb15/emb16 memo's
+    value-invisibility), for BOTH keep policies; a k-mismatched codebook
+    fails loudly."""
+    import pytest as _pytest
+
+    from real_time_stock_market_data_pipeline_spark.operators.clustering import (
+        kmeans_fit,
+    )
+    from real_time_stock_market_data_pipeline_spark.operators.similarity import (
+        semantic_dedup,
+        semdedup_k,
+    )
+    from real_time_stock_market_data_pipeline_spark.sources.readers import (
+        load_table,
+    )
+
+    corpus = (
+        load_table(spark, "/root/testdata/sf0.001", "embeddings")
+        .selectExpr(
+            "vec_id",
+            "transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding",
+        )
+        .localCheckpoint()
+    )
+    k = semdedup_k(corpus.count())
+    rows = [
+        (int(r["centroid_id"]), [float(x) for x in r["embedding"]])
+        for r in kmeans_fit(corpus, k=k, n_iter=2).collect()
+    ]
+    for policy in ("min_id", "farthest"):
+        plain = sorted(
+            map(tuple, semantic_dedup(corpus, keep_policy=policy).collect())
+        )
+        with_cents = sorted(
+            map(
+                tuple,
+                semantic_dedup(
+                    corpus, k=k, keep_policy=policy, centroids=rows
+                ).collect(),
+            )
+        )
+        assert plain == with_cents, policy
+    with _pytest.raises(ValueError, match="centroids has"):
+        semantic_dedup(corpus, k=k, centroids=rows[:-1])
+
+
+def test_pq_encode_dim_mismatch_is_loud(spark):
+    """A dim-changing rebuild corpus must die with the CLEAR error, not
+    numpy's opaque reshape message (r18 ADVICE)."""
+    df = _fixture_vectors(spark, dim=8)
+    cbs = sim.pq_fit(df, m=2, k=4, n_iter=1)
+    wider = _fixture_vectors(spark, dim=12)
+    with pytest.raises(Exception, match="dim-changing rebuild"):
+        sim.pq_encode(wider, cbs, arrow=True).select("pq_codes").collect()

@@ -900,3 +900,43 @@ def test_recover_still_full_swaps_flat_marked_staging(tmp_path):
     mnt.recover_upsert(str(store))
     assert (store / "part-0.parquet").read_bytes() == b"new"
     assert not stg.exists()
+
+
+def test_observed_count_rides_the_consuming_action(spark):
+    from real_time_stock_market_data_pipeline_spark.operators.similarity import (
+        _observed_count,
+    )
+
+    base = spark.range(500).withColumn("v", F.col("id") * 2)
+    obs_df, get = _observed_count(base)
+    # downstream filter drops every row — the observation still sees the
+    # full pre-filter cardinality because the scan runs under the action
+    assert obs_df.filter("id < 0").count() == 0
+    assert get() == 500
+
+
+def test_observed_count_in_update_replay_keeps_n_batch(spark, tmp_path):
+    """update_pq_codes' replay appends nothing (n_new=0) but n_batch must
+    still count the DELIVERED batch — the dropped-row monitor signal —
+    now that it rides the encode action instead of a dedicated count."""
+    from real_time_stock_market_data_pipeline_spark.operators.similarity import (
+        init_pq_index,
+        pq_fit,
+        update_pq_codes,
+    )
+    from real_time_stock_market_data_pipeline_spark.sources.readers import (
+        load_table,
+    )
+
+    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").selectExpr(
+        "vec_id", "transform(embedding, x -> CAST(x AS DOUBLE)) AS embedding"
+    )
+    n = emb.count()
+    path = str(tmp_path / "pq")
+    init_pq_index(
+        spark, pq_fit(emb.filter("vec_id < 100"), m=4, k=8, n_iter=1), path
+    )
+    first = update_pq_codes(spark, emb, path)
+    assert first == {"n_batch": n, "n_new": n}
+    replay = update_pq_codes(spark, emb, path)
+    assert replay == {"n_batch": n, "n_new": 0}

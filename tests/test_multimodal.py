@@ -5,6 +5,7 @@ Spark-side contract (schema, batching, pruning) is exercised for real."""
 
 from __future__ import annotations
 
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,6 +14,7 @@ from real_time_stock_market_data_pipeline_spark.operators.multimodal import (
     sample_frames,
     with_media_columns,
 )
+from real_time_stock_market_data_pipeline_spark.plans.queries import QUERIES
 from real_time_stock_market_data_pipeline_spark.sources.readers import load_table
 
 
@@ -908,3 +910,67 @@ def test_position_embedding_is_container_invariant(spark):
                 pos = (h - 1 - r_) * stride + c * 3 + (2 - ch)
                 expect[pos % 16] += int(px[r_, c, ch])
     assert out[1] == expect
+
+
+def test_mm13_matched_pairs_score_exactly_one(spark, sf_dir):
+    """The alignment gate's two halves: every matched pair scores EXACTLY
+    1.0 (the BMP geometry is padding-free and the tail filler is zero, so
+    the decoded position-class sums equal the caption's bit-for-bit — a
+    losslessness pin on encode → real decode → file-position
+    reconstruction), and every planted wrong-caption pair falls under the
+    0.8 gate (mismatched max 0.766 across all three SFs, measured)."""
+    rows = QUERIES["mm13_image_text_alignment"](spark, sf_dir).collect()
+    assert rows
+    matched = [r for r in rows if not r.is_planted_mismatch]
+    planted = [r for r in rows if r.is_planted_mismatch]
+    assert matched and planted
+    assert all(r.alignment == 1.0 and r.aligned for r in matched)
+    assert all(r.alignment < 0.8 and not r.aligned for r in planted)
+    # planted pairs really carry the NEIGHBOR's image
+    assert all(r.media_src_id == r.doc_id + 1 for r in planted)
+    assert all(r.media_src_id == r.doc_id for r in matched)
+
+
+def test_mm13_non_ascii_caption_fails_loudly(spark, sf_dir, tmp_path):
+    """A caption with a multi-byte character would misalign the BMP
+    payload against the per-character text walk; the plan must raise in
+    its own projection instead of scoring a wrong alignment."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    t = pq.read_table(f"{sf_dir}/documents.parquet")
+    texts = t.column("text").to_pylist()
+    i = next(j for j, x in enumerate(texts) if x)
+    texts[i] = texts[i] + " caf\u00e9"
+    t = t.set_column(t.schema.get_field_index("text"), "text", pa.array(texts))
+    pq.write_table(t, tmp_path / "documents.parquet")
+    with pytest.raises(Exception, match="mm13: non-ASCII"):
+        QUERIES["mm13_image_text_alignment"](spark, str(tmp_path)).collect()
+
+
+def test_mm13_corpus_is_ascii_at_every_sf():
+    """r14 ADVICE pin: mm13's BMP payload hex-encodes ONE byte per
+    character (``lpad(hex(ascii(ch)), 2, '0')`` silently truncates a
+    codepoint > 255 to its low hex digits) and ``lt``/``lm`` are octet
+    lengths indexed per character, while the DuckDB oracle reads full
+    ``unicode()`` codepoints — the construction is sound only while the
+    documents corpus is pure ASCII.  Pin that explicitly at all three
+    SFs: octet_length == length for every text (single-byte UTF-8 ⇔
+    every codepoint < 128), so a future corpus regeneration with
+    non-ASCII text fails HERE instead of as an opaque parity mismatch."""
+    import os
+
+    con = duckdb.connect()
+    checked = 0
+    for sf in ("sf0.001", "sf0.01", "sf0.1"):
+        path = f"/root/testdata/{sf}/documents.parquet"
+        if not os.path.exists(path):
+            continue
+        bad = con.execute(
+            f"SELECT count(*) FROM '{path}' "
+            "WHERE text IS NOT NULL AND octet_length(encode(text)) <> length(text)"
+        ).fetchone()[0]
+        assert bad == 0, f"{sf}: {bad} non-ASCII documents"
+        checked += 1
+    assert checked > 0

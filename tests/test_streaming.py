@@ -544,7 +544,6 @@ def test_throttle_stream_matches_batch(spark, tmp_path):
     suppress batch 2's early rows)."""
     from real_time_stock_market_data_pipeline_spark.streaming.throttle import (
         throttle_batch,
-        throttle_batch_sql,
         throttled_stream,
     )
 
@@ -592,50 +591,6 @@ def test_throttle_stream_matches_batch(spark, tmp_path):
     # greedy keeps every-5th-second for A (0,5,10,15) and every emit for B
     a_ticks = [t for (k, t, *_r) in got if k == "A"]
     assert a_ticks == [0, 5, 10, 15]
-
-    # the SQL bucket variant keeps the FIRST row per aligned 5s bucket —
-    # a deliberately different contract than greedy (B's t=10 vs greedy's
-    # t=12: greedy windows restart at each emit, buckets don't)
-    sql_rows = sorted(map(tuple, throttle_batch_sql(df, 5.0).collect()))
-    assert [t for (k, t, *_r) in sql_rows if k == "A"] == [0, 5, 10, 15]
-    assert [t for (k, t, *_r) in sql_rows if k == "B"] == [100, 103, 105, 108]
-
-
-def test_throttle_transform_with_state_requires_protobuf(spark, tmp_path):
-    """The transformWithStateInPandas path is complete but its Python state
-    protocol needs protobuf — absent here (same waiver pattern as the Kafka
-    broker).  Where protobuf exists this test runs the equivalence."""
-    pytest.importorskip("google.protobuf")
-    from real_time_stock_market_data_pipeline_spark.streaming.throttle import (
-        throttle_batch,
-        throttled_stream_tws,
-    )
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    rows = [("A", i, f"2024-01-01 00:00:{i:02d}", 100.0 + i, "HIGH") for i in range(20)]
-    schema = (
-        "company_id string, tick_id long, trade_datetime string, "
-        "current_price double, alert_type string"
-    )
-    df = spark.createDataFrame(rows, schema).withColumn(
-        "trade_datetime", F.to_timestamp("trade_datetime")
-    )
-    df.write.parquet(str(tmp_path / "wsrc" / "f1"))
-    stream = spark.readStream.schema(df.schema).parquet(f"{tmp_path}/wsrc/*/")
-    q = (
-        throttled_stream_tws(stream, 5.0)
-        .writeStream.format("parquet")
-        .option("path", str(tmp_path / "wout"))
-        .option("checkpointLocation", str(tmp_path / "wckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = sorted(map(tuple, spark.read.parquet(str(tmp_path / "wout")).collect()))
-    assert got == sorted(map(tuple, throttle_batch(df, 5.0).collect()))
 
 
 def test_throttle_survives_restart(spark, tmp_path):

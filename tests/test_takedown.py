@@ -14,6 +14,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from real_time_stock_market_data_pipeline_spark import maintenance as mnt
+from real_time_stock_market_data_pipeline_spark.operators import similarity as sim
 from real_time_stock_market_data_pipeline_spark.operators import takedown as td
 from real_time_stock_market_data_pipeline_spark.operators.dedup import (
     update_signature_table,
@@ -860,3 +861,79 @@ def test_umbrella_threaded_equals_sequential(spark, docs, tmp_path):
             spark.read.parquet(stores["thr"][fam]),
             spark.read.parquet(stores["seq"][fam]),
         )
+
+
+def _fixture_vectors(spark, n=64, dim=8):
+    return spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(dim - 1)),
+            lambda j: (F.col("id") * 7 + j * 3).cast("double") % 11.0,
+        ).alias("embedding"),
+    )
+
+
+def test_purge_partitioned_single_scan_metrics(spark, tmp_path):
+    """touched/n_purged from the one-job groupBy must equal the old
+    collect+count pair's values."""
+    df = _fixture_vectors(spark)
+    coarse, fine = sim.ivfpq_fit(df, n_lists=4, m=2, k=4, n_iter=1)
+    path = str(tmp_path / "ivfpq")
+    sim.init_ivfpq_index(spark, coarse, fine, path)
+    sim.update_ivfpq_index(spark, df, path)
+    dels = df.filter("vec_id % 5 = 0").select("vec_id")
+    n_dels = dels.count()
+    sim.delete_from_ivfpq_index(spark, dels, path)
+    res = sim.purge_ivfpq_tombstones(spark, path)
+    assert res["n_purged"] == n_dels
+    idx = spark.read.parquet(f"{path}/index")
+    assert idx.count() == 64 - n_dels
+    assert idx.join(dels, "vec_id", "left_semi").count() == 0
+
+
+def test_purge_doc_keyed_single_scan_metrics(spark, tmp_path):
+    from real_time_stock_market_data_pipeline_spark.operators.takedown import (
+        purge_doc_keyed_table,
+        tombstone_doc_keyed_table,
+    )
+
+    path = str(tmp_path / "tab")
+    tab = spark.range(40).select(
+        F.col("id").alias("doc_id"), (F.col("id") * 2).alias("v")
+    )
+    tab.write.parquet(path)
+    ids = spark.range(40).filter("id % 4 = 0").select(F.col("id").alias("doc_id"))
+    tombstone_doc_keyed_table(spark, ids, path)
+    res = purge_doc_keyed_table(spark, path)
+    assert res["n_purged"] == 10
+    left = spark.read.parquet(path)
+    assert left.count() == 30
+    assert left.filter("doc_id % 4 = 0").count() == 0
+
+
+def test_purge_semantic_single_scan_metrics(spark, tmp_path):
+    """n_purged_assigned / n_purged_pairs from the one-scan aggregates
+    must match the old two-scan formulas, including the either-end pair
+    retraction."""
+    from real_time_stock_market_data_pipeline_spark.operators.takedown import (
+        purge_semantic_index,
+        tombstone_semantic_index,
+    )
+
+    root = str(tmp_path / "sem")
+    assigned = spark.range(20).select(
+        F.col("id").alias("vec_id"), F.lit(0).alias("cid")
+    )
+    assigned.write.parquet(f"{root}/assigned")
+    pairs = spark.createDataFrame(
+        [(0, 1), (2, 3), (4, 5), (6, 7), (8, 9)], "vec_a long, vec_b long"
+    )
+    pairs.write.parquet(f"{root}/pairs")
+    # delete 0 (pair end a), 3 (pair end b), 11 (no pair)
+    dels = spark.createDataFrame([(0,), (3,), (11,)], "vec_id long")
+    tombstone_semantic_index(spark, dels, root)
+    res = purge_semantic_index(spark, root)
+    assert res["n_purged_assigned"] == 3
+    assert res["n_purged_pairs"] == 2  # (0,1) and (2,3)
+    left = spark.read.parquet(f"{root}/pairs")
+    assert sorted(tuple(r) for r in left.collect()) == [(4, 5), (6, 7), (8, 9)]

@@ -1,6 +1,5 @@
 """Dump ``.explain("formatted")`` for named queries (default: all) into
-plans/<round>/<query>_<tag>.txt (round via $SPARK_GRAFT_PLAN_ROUND, default r19) — the judge-checkable evidence files behind
-OPTIMIZATION_r18.md's plan claims.
+plans/<tag>/<query>.txt, one directory per run.
 
 Usage: python tools/dump_plans.py <tag> [query ...]
 
@@ -26,13 +25,12 @@ def main() -> None:
     names = sys.argv[2:] or list(QUERIES)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans",
-        os.environ.get("SPARK_GRAFT_PLAN_ROUND", "r19")
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("dump_plans")
     for name in names:
-        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        path = os.path.join(out_dir, f"{name}.txt")
         try:
             df = QUERIES[name](spark, sf_dir)
             text = df._sc._jvm.PythonSQLUtils.explainString(

@@ -1,7 +1,5 @@
-"""Solo-warm probe for one or more named queries (the r16/r17 verdict
-protocol: 1 warmup + N timed runs, persisted RDDs released between runs,
-no concurrent Spark work on the box).  The unit every optimization in
-OPTIMIZATION_r18.md is adjudicated in.
+"""Solo-warm probe for one or more named queries: 1 warmup + N timed runs,
+persisted RDDs released between runs, no concurrent Spark work on the box.
 
 Usage: python tools/solo_probe.py q1 q2 ...  [env: SPARK_GRAFT_SF_DIR,
 SPARK_GRAFT_CPUS, SPARK_GRAFT_PROBE_RUNS (default 3)]
