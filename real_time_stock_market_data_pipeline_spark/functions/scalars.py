@@ -40,30 +40,3 @@ def dsum(c: Column) -> Column:
 
 def dsum_sql(expr: str) -> str:
     return f"CAST(SUM(CAST(({expr}) AS DECIMAL(18,6))) AS DOUBLE)"
-
-
-def davg(c: Column) -> Column:
-    """Order-independent mean: exact decimal sum / count, rounded to 6."""
-    return r6(dsum(c) / F.count(c))
-
-
-def davg_sql(expr: str) -> str:
-    return r6_sql(f"{dsum_sql(expr)} / COUNT({expr})")
-
-
-def severity_col(indicator_value: Column, hi: float, med: float) -> Column:
-    """CASE-style severity tagging used by the alerting path
-    (reference analytics/analytics_consumer.py:241-268)."""
-    mag = F.abs(indicator_value)
-    return (
-        F.when(mag >= hi, F.lit("HIGH"))
-        .when(mag >= med, F.lit("MEDIUM"))
-        .otherwise(F.lit("LOW"))
-    )
-
-
-def aic_confidence(aic: Column) -> Column:
-    """AIC → [0,1] confidence transform (reference
-    analytics/analytics_consumer.py:374-377): max(0, min(1, 1/(1+|aic|/100)))."""
-    raw = F.lit(1.0) / (F.lit(1.0) + F.abs(aic) / F.lit(100.0))
-    return F.greatest(F.lit(0.0), F.least(F.lit(1.0), raw))

@@ -4,22 +4,19 @@ The reference computes each indicator imperatively over the last N prices of a
 per-symbol ``deque(maxlen=1000)`` (reference analytics/technical_indicators.py:
 229-252).  Semantically each one is a sliding window function over rows
 ordered by time, partitioned by symbol — windows count ROWS, not time.  Two
-implementations, cross-checked in tests:
+implementations, cross-checked in tests/test_indicators.py:
 
-1. **Column/Window builders** (this module's ``*_col`` functions and
-   ``with_indicators``): pure Spark SQL expressions — JVM-side, whole-stage
-   codegen, no Python in the hot path.  EMA is the one indicator with no
-   closed-form window aggregate (it is a seeded recursion over the visible
-   buffer, reference technical_indicators.py:124-130); we express it with the
-   ``aggregate`` higher-order function over a bounded ``collect_list`` frame.
+1. **Dual-dialect SQL** (``plans/indicator_parity.py``): the oracle-checked
+   path behind W2–W9, ``w_all_indicators``, T6 and J3.  One SQL text runs on
+   Spark and DuckDB with sequential list folds, so both engines give
+   bit-identical doubles.
 
-2. **Grouped-map pandas path** (``indicators_apply_in_pandas``): one linear
-   pass per symbol via ``applyInPandas`` — the scale path for very long
-   per-symbol histories (the HOF EMA materializes an O(buffer) array per row).
+2. **Grouped-map pandas path** (this module): one linear pass per symbol.
    Its kernel is ``indicator_arrays`` (prices in, one array per indicator
    out); ``indicator_frame`` sorts a symbol's ticks, runs it and appends the
-   columns, and the streaming stateful handler runs it directly on the
-   buffered + new prices.
+   columns; ``indicators_apply_in_pandas`` runs that per symbol via
+   ``applyInPandas`` (the ``flagship`` query), and the streaming stateful
+   handler runs the kernel directly on the buffered + new prices.
 
 Exact reference semantics reproduced (documented quirks, SURVEY §7.3):
   * RSI uses a SIMPLE mean of the last ``period`` deltas, not Wilder
@@ -42,13 +39,11 @@ Exact reference semantics reproduced (documented quirks, SURVEY §7.3):
 from __future__ import annotations
 
 import math
-from collections.abc import Callable
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 # Reference CACHE_SIZE (shared/config.py:135): per-symbol deque maxlen.
 BUFFER_SIZE = 1000
@@ -80,168 +75,6 @@ class SeriesSpec:
     ts: str = "trade_datetime"
     tiebreak: str = "tick_id"
     price: str = "current_price"
-
-    def window(self) -> Window:
-        return Window.partitionBy(self.key).orderBy(
-            F.col(self.ts).asc(), F.col(self.tiebreak).asc()
-        )
-
-
-def _buflen(spec: SeriesSpec) -> Column:
-    """Number of prices currently in the reference's bounded deque."""
-    rn = F.row_number().over(spec.window())
-    return F.least(rn, F.lit(BUFFER_SIZE))
-
-
-def sma_col(spec: SeriesSpec, period: int) -> Column:
-    w = spec.window().rowsBetween(-(period - 1), 0)
-    gated = F.avg(spec.price).over(w)
-    return F.when(_buflen(spec) >= period, gated)
-
-
-def _ema_over_buffer(buf_col: str, period: int) -> Column:
-    """Seeded recursion ema = x*m + ema*(1-m) over a collected buffer.
-
-    The multiplier is written as ``CAST(2.0 AS DOUBLE)/CAST(p+1 AS DOUBLE)``
-    — bare decimal literals are DECIMAL in Spark SQL (and DuckDB), and decimal
-    division would silently truncate the multiplier to 6 digits.  With double
-    ops throughout, IEEE-754 makes the fold bit-reproducible across engines
-    given the same expression shape.
-    """
-    m = f"(CAST(2.0 AS DOUBLE) / CAST({period + 1}.0 AS DOUBLE))"
-    return F.expr(
-        f"aggregate(slice({buf_col}, 2, size({buf_col}) - 1), "
-        f"cast(element_at({buf_col}, 1) as double), "
-        f"(acc, x) -> x * {m} + acc * (CAST(1.0 AS DOUBLE) - {m}))"
-    )
-
-
-def rsi_col(spec: SeriesSpec, period: int = RSI_PERIOD) -> Column:
-    """Simple-mean RSI over the last ``period`` deltas; 100.0 when avg loss=0."""
-    w = spec.window()
-    delta = F.col(spec.price) - F.lag(spec.price, 1).over(w)
-    frame = w.rowsBetween(-(period - 1), 0)
-    # Build over a projected delta: callers get a single Column, so inline it.
-    gains = F.when(delta > 0, delta).otherwise(F.lit(0.0))
-    losses = F.when(delta < 0, -delta).otherwise(F.lit(0.0))
-    avg_gain = F.avg(gains).over(frame)
-    avg_loss = F.avg(losses).over(frame)
-    rsi = F.when(avg_loss == 0, F.lit(100.0)).otherwise(
-        F.lit(100.0) - F.lit(100.0) / (F.lit(1.0) + avg_gain / avg_loss)
-    )
-    return F.when(_buflen(spec) >= period + 1, rsi)
-
-
-def bollinger_cols(
-    spec: SeriesSpec, period: int = BB_PERIOD, num_std: float = BB_STDDEV
-) -> tuple[Column, Column, Column]:
-    """(upper, lower, middle) with population std (numpy ddof=0)."""
-    frame = spec.window().rowsBetween(-(period - 1), 0)
-    mid = F.avg(spec.price).over(frame)
-    std = F.stddev_pop(spec.price).over(frame)
-    gate = _buflen(spec) >= period
-    upper = F.when(gate, mid + F.lit(num_std) * std)
-    lower = F.when(gate, mid - F.lit(num_std) * std)
-    middle = F.when(gate, mid)
-    return upper, lower, middle
-
-
-def volatility_col(spec: SeriesSpec, period: int = VOL_PERIOD) -> Column:
-    """Annualized population std of returns over the WHOLE visible buffer."""
-    w = spec.window()
-    prev = F.lag(spec.price, 1).over(w)
-    ret = (F.col(spec.price) - prev) / prev
-    # Last BUFFER_SIZE prices yield BUFFER_SIZE-1 returns; stddev skips the
-    # NULL return on each partition's first row.
-    frame = w.rowsBetween(-(BUFFER_SIZE - 2), 0)
-    vol = F.stddev_pop(ret).over(frame) * F.lit(math.sqrt(TRADING_DAYS))
-    return F.when(_buflen(spec) >= period + 1, vol)
-
-
-def price_change_pct_col(spec: SeriesSpec) -> Column:
-    """(p - prev)/prev * 100 from the last two ticks (W8,
-    analytics/analytics_consumer.py:386-390)."""
-    prev = F.lag(spec.price, 1).over(spec.window())
-    return (F.col(spec.price) - prev) / prev * F.lit(100.0)
-
-
-def with_indicators(df: DataFrame, spec: SeriesSpec | None = None) -> DataFrame:
-    """Append the full indicator set as columns — the engine's equivalent of
-    the reference's ``get_all_indicators`` (technical_indicators.py:320-347).
-
-    One window partitioning (key, ordered by ts) serves every indicator, so
-    the physical plan sorts each partition once and evaluates all frames in a
-    single Window operator chain — no extra shuffles.
-    """
-    spec = spec or SeriesSpec()
-    w = spec.window()
-    buf_frame = w.rowsBetween(-(BUFFER_SIZE - 1), 0)
-    buflen = _buflen(spec)
-
-    df = df.withColumn("__buf", F.collect_list(spec.price).over(buf_frame))
-    ema_fast = F.when(buflen >= EMA_FAST, _ema_over_buffer("__buf", EMA_FAST))
-    ema_slow = F.when(buflen >= EMA_SLOW, _ema_over_buffer("__buf", EMA_SLOW))
-    bb_upper, bb_lower, bb_middle = bollinger_cols(spec)
-
-    # Stage the two EMA folds as real columns FIRST, then derive MACD from
-    # the staged columns: the seeded fold over the (≤1000-row) buffer is the
-    # most expensive expression here, and inlining it into macd/macd_signal/
-    # macd_histogram would evaluate it up to six times per row.  Catalyst
-    # keeps the stage (non-cheap exprs referenced >1× don't collapse).
-    # Value-safe: the MACD gate (≥35 rows) implies both EMA gates (12, 26).
-    staged = df.withColumn("ema_12", ema_fast).withColumn("ema_26", ema_slow)
-    macd_line = F.when(
-        buflen >= MACD_SLOW + MACD_SIGNAL, F.col("ema_12") - F.col("ema_26")
-    )
-
-    out = (
-        staged.withColumn("rsi_14", rsi_col(spec))
-        .withColumn("sma_20", sma_col(spec, SMA_FAST))
-        .withColumn("sma_50", sma_col(spec, SMA_SLOW))
-        .withColumn("bb_upper", bb_upper)
-        .withColumn("bb_lower", bb_lower)
-        .withColumn("bb_middle", bb_middle)
-        .withColumn("macd", macd_line)
-        .withColumn("macd_signal", macd_line)
-        .withColumn(
-            "macd_histogram",
-            F.when(macd_line.isNotNull(), F.lit(0.0)),
-        )
-        .withColumn("volatility", volatility_col(spec))
-        .withColumn("price_change_percent", price_change_pct_col(spec))
-        .drop("__buf")
-    )
-    base = [c for c in df.columns if c != "__buf"]
-    return out.select(*base, *IND_COLS)
-
-
-# ---------------------------------------------------------------------------
-# U1 — custom-indicator plug-in registry (reference BaseIndicator /
-# add_custom_indicator, technical_indicators.py:51-65,361-363).  A builder
-# maps (spec, period) -> Column; non-algebraic indicators can fall back to a
-# pandas_udf over a collected buffer.
-# ---------------------------------------------------------------------------
-IndicatorBuilder = Callable[[SeriesSpec, int], Column]
-
-_REGISTRY: dict[str, IndicatorBuilder] = {
-    "rsi": lambda spec, p: rsi_col(spec, p or RSI_PERIOD),
-    "sma": lambda spec, p: sma_col(spec, p or SMA_FAST),
-    "volatility": lambda spec, p: volatility_col(spec, p or VOL_PERIOD),
-}
-
-
-def add_custom_indicator(name: str, builder: IndicatorBuilder) -> None:
-    _REGISTRY[name.lower()] = builder
-
-
-def get_indicator(name: str) -> IndicatorBuilder:
-    return _REGISTRY[name.lower()]
-
-
-# ---------------------------------------------------------------------------
-# Grouped-map pandas path — linear-time per symbol; the scale path for very
-# long histories.  ``indicator_arrays`` also serves the streaming state handler.
-# ---------------------------------------------------------------------------
 
 
 def ema_series(prices: np.ndarray, period: int, buffer: int = BUFFER_SIZE) -> np.ndarray:
@@ -293,7 +126,7 @@ def indicator_arrays(prices: np.ndarray) -> dict[str, np.ndarray]:
     gains = pd.Series(np.where(delta > 0, delta, 0.0))
     losses = pd.Series(np.where(delta < 0, -delta, 0.0))
     # First row's delta is undefined: exclude it from the mean like the
-    # Window version does (avg skips NULL) by not counting it.
+    # SQL path does (its collected deltas skip NULL) by not counting it.
     gains.iloc[0] = np.nan
     losses.iloc[0] = np.nan
     avg_gain = gains.rolling(RSI_PERIOD, min_periods=1).mean().to_numpy()
@@ -343,8 +176,8 @@ def indicator_arrays(prices: np.ndarray) -> dict[str, np.ndarray]:
 def indicator_frame(pdf: pd.DataFrame, spec: SeriesSpec) -> pd.DataFrame:
     """Compute all indicators for ONE symbol's ticks (already sorted input not
     required — sorts by (ts, tiebreak)): ``pdf`` in that order with the
-    ``IND_COLS`` appended.  Mirrors ``with_indicators`` exactly;
-    cross-checked in tests/test_indicators.py.
+    ``IND_COLS`` appended.  Cross-checked against the SQL path in
+    tests/test_indicators.py.
     """
     pdf = pdf.sort_values([spec.ts, spec.tiebreak], kind="mergesort").reset_index(drop=True)
     ind = indicator_arrays(pdf[spec.price].to_numpy(dtype=np.float64))
@@ -353,8 +186,8 @@ def indicator_frame(pdf: pd.DataFrame, spec: SeriesSpec) -> pd.DataFrame:
 
 def indicators_apply_in_pandas(df: DataFrame, spec: SeriesSpec | None = None) -> DataFrame:
     """Scale-path indicator computation: one Arrow batch per symbol, linear
-    time, no O(buffer) per-row arrays.  Output schema = input + indicator
-    doubles (same names as ``with_indicators``)."""
+    time, no O(buffer) per-row arrays.  Output schema = input + one double
+    per ``IND_COLS`` name."""
     spec = spec or SeriesSpec()
     schema_parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
     schema_parts += [f"`{c}` double" for c in IND_COLS]

@@ -2,7 +2,7 @@
 
 Two tiers, matching plans/text_parity semantics exactly:
   * Column-expression tier (JVM, whole-stage codegen) for tokenization,
-    stats, quality, language-ID — zero Python in the hot path.
+    PII redaction and host/URL keys — zero Python in the hot path.
   * Arrow-batched pandas tier (``mapInPandas``) for hashing-heavy work
     (fingerprints, token hashes) where a numpy loop beats nested SQL
     lambda folds on very long documents.
@@ -23,34 +23,11 @@ from ..sources.readers import read_parquet_cached_schema as _read_pq
 
 P_MOD = 1_000_000_007
 
-EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "with"]
-LANG_MARKERS = {
-    "en": ["the", "a", "of", "and"],
-    "es": ["el", "la", "de", "los"],
-    "de": ["der", "die", "und", "das"],
-    "fr": ["le", "les", "et", "une"],
-}
-
 
 def tokens_col(text: Column | str = "text") -> Column:
     """Whitespace tokens with empties dropped (single-space normalized)."""
     c = F.col(text) if isinstance(text, str) else text
     return F.filter(F.split(c, " "), lambda t: t != "")
-
-
-def with_token_stats(df: DataFrame, text: str = "text") -> DataFrame:
-    toks = tokens_col(text)
-    n = F.size(toks)
-    total_len = F.aggregate(
-        F.transform(toks, lambda t: F.length(t).cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        df.withColumn("n_tokens", n)
-        .withColumn("n_chars_actual", F.length(text))
-        .withColumn("mean_token_len", total_len / n.cast("double"))
-    )
 
 
 # BPE pre-tokenizer split: letter runs | digit runs | single non-alnum glyph
@@ -64,42 +41,6 @@ def with_token_stats(df: DataFrame, text: str = "text") -> DataFrame:
 # identical pattern bytes).  \\s itself would differ: Java includes \\x0B,
 # RE2 does not.
 BPE_SPLIT_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \t\n\r\f]"
-
-
-def bpe_token_count_col(text: str = "text") -> Column:
-    """JVM-side BPE-ish token count: ``regexp_extract_all`` + ``size`` —
-    codegen'd, no Python."""
-    return F.size(F.expr(f"regexp_extract_all({text}, '{BPE_SPLIT_PATTERN}', 0)"))
-
-
-def stopword_ratio_col(text: str = "text", stopwords: list[str] | None = None) -> Column:
-    toks = tokens_col(text)
-    stops = F.size(F.filter(toks, lambda t: t.isin(*(stopwords or EN_STOPWORDS))))
-    return stops.cast("double") / F.size(toks).cast("double")
-
-
-def quality_score_col(text: str = "text") -> Column:
-    """0.5·min(1, n_tokens/50) + 0.5·min(1, stop_ratio/0.4) — the corpus
-    quality heuristic of plans/text_parity.sql_quality."""
-    toks = tokens_col(text)
-    n = F.size(toks).cast("double")
-    len_score = F.least(F.lit(1.0), n / F.lit(50.0))
-    stop_score = F.least(F.lit(1.0), stopword_ratio_col(text) / F.lit(0.4))
-    return F.lit(0.5) * len_score + F.lit(0.5) * stop_score
-
-
-def predicted_lang_col(text: str = "text") -> Column:
-    """Marker-stopword language ID, deterministic tie-break en>es>de>fr."""
-    toks = tokens_col(text)
-    hits = {
-        code: F.size(F.filter(toks, lambda t, m=markers: t.isin(*m)))
-        for code, markers in LANG_MARKERS.items()
-    }
-    best = F.greatest(*hits.values())
-    out = F.when(best == 0, F.lit("und"))
-    for code in LANG_MARKERS:  # insertion order = priority
-        out = out.when(hits[code] == best, F.lit(code))
-    return out
 
 
 def _poly_hash(token: str, mod: int = P_MOD) -> int:
@@ -751,13 +692,14 @@ def _curriculum_bigrams(
 def _train_curriculum_model_shared(
     docs: DataFrame, id_col: str = "doc_id", text: str = "text"
 ) -> tuple[DataFrame, DataFrame, int, DataFrame]:
-    """(bc, uc, v, bigp) — ``train_curriculum_model`` exposing its
+    """(bc, uc, v, bigp) — txt12's corpus bigram LM as persistable tables
+    (bigram counts, context counts, vocabulary size) plus its
     checkpointed bigram frame so init/rebuild can score the SAME corpus
-    without re-running the tokenize+window explosion.  The plain form
-    paid that explosion once per consumer (bc, uc, and v each re-derived
-    it — three full passes per train; a fourth for the score): the lazy
-    localCheckpoints below compute tok_rows and bigp once and every
-    consumer reads the pinned partitions.  Same expressions, same
+    without re-running the tokenize+window explosion.  Without the
+    checkpoints each consumer would pay that explosion (bc, uc, and v
+    each re-deriving it — three full passes per train; a fourth for the
+    score): the lazy localCheckpoints below compute tok_rows and bigp
+    once and every consumer reads the pinned partitions.  Same expressions, same
     values."""
     from pyspark.sql import Window
 
@@ -781,15 +723,6 @@ def _train_curriculum_model_shared(
     uc = bigp.groupBy("w1").agg(F.count(F.lit(1)).cast("bigint").alias("cu"))
     v = tok_rows.select("tok").distinct().count()
     return bc, uc, v, bigp
-
-
-def train_curriculum_model(
-    docs: DataFrame, id_col: str = "doc_id", text: str = "text"
-) -> tuple[DataFrame, DataFrame, int]:
-    """txt12's corpus bigram LM as persistable tables: (bc, uc, v) —
-    bigram counts, context counts, vocabulary size."""
-    bc, uc, v, _ = _train_curriculum_model_shared(docs, id_col, text)
-    return bc, uc, v
 
 
 def score_under_curriculum_model(

@@ -102,10 +102,6 @@ def char_code(dialect: str, s: str) -> str:
     return f"ascii({s})" if dialect == "spark" else f"unicode({s})"
 
 
-def arr_distinct(dialect: str, lst: str) -> str:
-    return f"array_distinct({lst})" if dialect == "spark" else f"list_distinct({lst})"
-
-
 def explode_from(dialect: str, table: str, lst_col: str, alias: str, keep: str) -> str:
     """FROM-clause explode: one output row per list element.
 

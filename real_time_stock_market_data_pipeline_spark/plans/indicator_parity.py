@@ -13,8 +13,10 @@ seeded-EMA recursion — is the *same text*, so both engines execute the same
 IEEE-754 op sequence and produce bit-identical doubles.  Built-in window
 AVG/STDDEV are deliberately avoided here: DuckDB evaluates sliding frames
 with segment trees (different summation order), which breaks exact hashing;
-sequential list folds do not.  The engine's fast path (operators/indicators)
-keeps the built-ins; tests cross-check the two within 1e-9.
+sequential list folds do not.  The engine's other indicator path, the
+pandas kernel in operators/indicators (``flagship`` and the stream), uses
+pandas rolling windows; tests/test_indicators.py cross-checks it against
+this path's r6-rounded values at ``atol=6e-7``.
 
 Reference semantics per indicator are documented in operators/indicators.py
 (population std, simple-mean RSI, EMA seeded at the visible buffer head,
@@ -65,16 +67,6 @@ def ema_expr(dialect: str, lst: str, period: int) -> str:
     m = f"({_d('2.0')} / {_d(f'{period + 1}.0')})"
     body = f"x * {m} + acc * ({_d('1.0')} - {m})"
     return seeded_fold(dialect, lst, body)
-
-
-def mean_var_exprs(dialect: str, lst: str, n: str) -> tuple[str, str]:
-    """(mean, variance) via sequential folds: sum and sum-of-squares.
-    Population variance = s2/n − mean²; clamped ≥ 0 for fp safety."""
-    s1 = fold(dialect, lst, "acc + x")
-    s2 = fold(dialect, lst, "acc + x * x")
-    mean = f"({s1}) / {n}"
-    var = f"greatest(({s2}) / {n} - (({s1}) / {n}) * (({s1}) / {n}), {_d('0.0')})"
-    return mean, var
 
 
 # ---------------------------------------------------------------------------
@@ -177,7 +169,8 @@ FROM f
 
 
 def mean_var_from_sums(s1: str, s2: str, n: str) -> tuple[str, str]:
-    """Same formula as mean_var_exprs but over pre-staged sum columns."""
+    """(mean, population variance) from pre-staged sum and sum-of-squares
+    columns: s2/n − mean², clamped ≥ 0 for fp safety."""
     mean = f"({s1}) / {n}"
     var = f"greatest(({s2}) / {n} - (({s1}) / {n}) * (({s1}) / {n}), {_d('0.0')})"
     return mean, var

@@ -1,11 +1,10 @@
-"""Cross-checks of the three indicator implementations:
+"""Cross-checks of the two indicator implementations:
 
-  1. fast JVM Window path   — operators.indicators.with_indicators
-  2. parity SQL path        — plans.indicator_parity (oracle-checked)
-  3. linear pandas path     — operators.indicators.indicators_apply_in_pandas
+  1. parity SQL path        — plans.indicator_parity (oracle-checked)
+  2. linear pandas path     — operators.indicators.indicators_apply_in_pandas
 
-(1) and (3) must agree with (2) within float tolerance (they use built-in
-two-pass std / pandas rolling, the parity path uses sequential folds).
+(2) must agree with (1) within float tolerance (it uses pandas rolling
+windows, the parity path uses sequential folds and r6 rounding).
 Also verifies reference quirks directly on hand-built series.
 """
 
@@ -16,7 +15,6 @@ import math
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from real_time_stock_market_data_pipeline_spark.operators import indicators as ind
 from real_time_stock_market_data_pipeline_spark.operators.relational import (
@@ -27,43 +25,24 @@ from real_time_stock_market_data_pipeline_spark.sources.readers import (
     ticks_from_events,
 )
 
-IND_COLS = [
-    "rsi_14", "sma_20", "sma_50", "ema_12", "ema_26",
-    "bb_upper", "bb_lower", "bb_middle",
-    "macd", "macd_signal", "macd_histogram",
-    "volatility", "price_change_percent",
-]
-
-
 def _sorted_pdf(df):
     pdf = df.toPandas().sort_values(["company_id", "trade_datetime", "tick_id"])
     return pdf.reset_index(drop=True)
 
 
 @pytest.fixture(scope="module")
-def three_ways(spark, sf_dir):
+def two_ways(spark, sf_dir):
     ticks = ticks_from_events(spark, sf_dir).filter(valid_tick_predicate())
-    fast = _sorted_pdf(ind.with_indicators(ticks, TICK_SPEC))
     from real_time_stock_market_data_pipeline_spark.plans.queries import QUERIES
 
     parity = _sorted_pdf(QUERIES["w_all_indicators"](spark, sf_dir))
     pandas_path = _sorted_pdf(ind.indicators_apply_in_pandas(ticks, TICK_SPEC))
-    return fast, parity, pandas_path
+    return parity, pandas_path
 
 
-@pytest.mark.parametrize("col", IND_COLS)
-def test_fast_path_matches_parity(three_ways, col):
-    fast, parity, _ = three_ways
-    a = fast[col].to_numpy(dtype=float)
-    b = parity[col].to_numpy(dtype=float)
-    assert len(a) == len(b) > 0
-    # parity path rounds to 6 decimals (r6); allow half that granularity
-    assert np.allclose(a, b, rtol=0, atol=6e-7, equal_nan=True), col
-
-
-@pytest.mark.parametrize("col", IND_COLS)
-def test_pandas_path_matches_parity(three_ways, col):
-    _, parity, pp = three_ways
+@pytest.mark.parametrize("col", ind.IND_COLS)
+def test_pandas_path_matches_parity(two_ways, col):
+    parity, pp = two_ways
     a = pp[col].to_numpy(dtype=float)
     b = parity[col].to_numpy(dtype=float)
     assert len(a) == len(b) > 0
@@ -71,18 +50,17 @@ def test_pandas_path_matches_parity(three_ways, col):
     assert np.allclose(a, b, rtol=0, atol=6e-7, equal_nan=True), col
 
 
-def test_reference_quirks_on_known_series(spark):
+def test_reference_quirks_on_known_series():
     """Hand-checkable series: monotonically rising prices."""
     n = 60
-    rows = [
-        (i, "X", (pd.Timestamp("2024-01-01") + pd.Timedelta(minutes=i)).to_pydatetime(),
-         100.0 + i, 10)
-        for i in range(n)
-    ]
-    df = spark.createDataFrame(
-        rows, "tick_id long, company_id string, trade_datetime timestamp, "
-        "current_price double, volume long")
-    out = _sorted_pdf(ind.with_indicators(df, TICK_SPEC))
+    pdf = pd.DataFrame({
+        "tick_id": np.arange(n),
+        "company_id": "X",
+        "trade_datetime": pd.Timestamp("2024-01-01") + pd.to_timedelta(np.arange(n), "min"),
+        "current_price": 100.0 + np.arange(n),
+        "volume": 10,
+    })
+    out = ind.indicator_frame(pdf, TICK_SPEC)
 
     # Rising series: no losses → RSI exactly 100 once gated (rn>=15)
     assert out.loc[: 13, "rsi_14"].isna().all()

@@ -1077,3 +1077,68 @@ def test_zip_import_caches_are_touched_only_in_lazy_zip():
             f"'zipimport' entered {path.relative_to(root)} — change the zip "
             "importer in lazy_zip instead"
         )
+
+
+def test_every_package_function_has_a_caller():
+    """Every top-level function and class of the package is decorated (a
+    ``@register`` query is called through the registry) or referenced by
+    a statement other than its own definition: by name, by attribute or
+    as a string, in the package, ``tools/``, ``perfbench/``, ``bench.py``,
+    ``scale_probe.py``, ``__spark_entry__.py`` or ``tests/``.  Code that
+    nothing calls, not even a test, is dead weight; pin the package free
+    of it."""
+    import ast
+    import collections
+    import pathlib
+
+    import real_time_stock_market_data_pipeline_spark as pkg
+
+    # jdbc_append is the Postgres sink of the reference pipeline's storage
+    # legs; it needs a live database, which no test environment has.
+    uncallable_here = {"jdbc_append"}
+
+    root = pathlib.Path(pkg.__file__).parent
+    repo = root.parent
+    sources = [
+        *root.rglob("*.py"),
+        *(repo / "tools").rglob("*.py"),
+        *(repo / "perfbench").rglob("*.py"),
+        *(repo / "tests").rglob("*.py"),
+        repo / "bench.py",
+        repo / "scale_probe.py",
+        repo / "__spark_entry__.py",
+    ]
+
+    def names_in(node) -> set[str]:
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                out.add(n.attr)
+            elif isinstance(n, ast.alias):
+                out.add(n.name.rpartition(".")[2])
+            elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+                out.add(n.value)
+        return out
+
+    # How many top-level statements reference each name.
+    refs: collections.Counter[str] = collections.Counter()
+    defs = []
+    for path in sources:
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for stmt in tree.body:
+            used = names_in(stmt)
+            refs.update(used)
+            is_def = isinstance(
+                stmt, ast.FunctionDef | ast.AsyncFunctionDef | ast.ClassDef
+            )
+            if path.is_relative_to(root) and is_def and not stmt.decorator_list:
+                defs.append((path.relative_to(repo), stmt.name, stmt.name in used))
+
+    uncalled = sorted(
+        f"{path}::{name}"
+        for path, name, self_ref in defs
+        if refs[name] - self_ref == 0 and name not in uncallable_here
+    )
+    assert not uncalled, f"nothing calls {uncalled} — delete them"

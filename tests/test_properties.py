@@ -1,4 +1,5 @@
-"""Hypothesis property tests: the JVM indicator path must agree with a
+"""Hypothesis property tests: the pandas indicator kernel
+(``indicator_frame``) must agree with a
 straight-line numpy transcription of the reference math on ARBITRARY price
 series, not just the fixture corpus — and structural operators must hold
 their invariants on any input."""
