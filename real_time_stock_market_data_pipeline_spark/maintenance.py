@@ -17,7 +17,6 @@ MERGE INTO (noted in README).
 from __future__ import annotations
 
 import os
-import re
 import shutil
 import uuid
 from collections.abc import Callable, Sequence
@@ -29,6 +28,7 @@ from contextlib import contextmanager
 
 from .functions.scalars import dsum, r6
 from .operators.relational import latest_per_group
+from .sources.readers import _is_uri
 from .sources.readers import read_parquet_cached_schema as _read_pq
 
 
@@ -174,8 +174,9 @@ def _require_local_path(path: str, op: str) -> None:
     the DRIVER-LOCAL filesystem.  A scheme-prefixed URI (hdfs://, s3a://,
     even file://) that ``spark.read.parquet`` would happily accept must be
     rejected up front — otherwise the renames would silently operate on a
-    similarly-named local directory while Spark wrote elsewhere."""
-    if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", path):
+    similarly-named local directory while Spark wrote elsewhere.  A
+    Windows drive path (``C:\\tables\\t``) is local, as for the readers."""
+    if _is_uri(path):
         raise ValueError(
             f"{op} swaps directories with os.rename and supports only plain "
             f"driver-local filesystem paths; got scheme-prefixed {path!r}. "
@@ -197,12 +198,22 @@ def _sibling_dirs(path: str, tag: str) -> list[str]:
     )
 
 
+def _require_no_orphans(path: str) -> None:
+    """Refuse to start a swap while orphaned staging/old siblings exist —
+    the single-writer precondition every swap operation shares."""
+    leftovers = _sibling_dirs(path, "staging") + _sibling_dirs(path, "old")
+    if leftovers:
+        raise RuntimeError(
+            f"orphaned staging/old directories from an interrupted "
+            f"upsert/compaction: {leftovers}; run recover_upsert({path!r}) first"
+        )
+
+
 def _partition_entries(d: str) -> list[str]:
     return sorted(
         e for e in os.listdir(d)
         if "=" in e and os.path.isdir(os.path.join(d, e))
     )
-
 
 
 _COMMIT_MARKER = "_UPSERT_COMMIT"
@@ -215,6 +226,56 @@ def _mark_staging_complete(staging: str) -> None:
     suppresses it), and recovery must never mistake a durable staging for
     an incomplete one — or vice versa."""
     open(os.path.join(staging, _COMMIT_MARKER), "w").close()
+
+
+def staging_dir(path: str) -> str:
+    """A fresh ``<path>__staging_<uuid>`` sibling to write a swap into."""
+    return f"{path}__staging_{uuid.uuid4().hex}"
+
+
+def swap_in(
+    path: str, staging: str, entries: Sequence[str] | None = None
+) -> None:
+    """Install a fully written ``staging`` at ``path``: the ONE crash-safe
+    store swap.  The commit marker lands first (looked up at call time,
+    so tests can kill the swap right after it), then ``_move_in`` does
+    the renames.  Every crash window is repaired by ``recover_upsert``."""
+    _mark_staging_complete(staging)
+    _move_in(path, staging, entries)
+
+
+def _move_in(
+    path: str, staging: str, entries: Sequence[str] | None = None
+) -> None:
+    """The renames of a marked swap, shared with ``recover_upsert``'s
+    roll-forward.  ``entries=None`` swaps the whole store: displace it
+    (if present) to an ``__old_`` sibling, install the staging, delete
+    the old tree.  Otherwise swaps only the named ``col=value`` entries:
+    each displaced entry goes to one ``__old_`` trash, the staged entry
+    (if the staging has it) is installed, and the trash and staging are
+    deleted only after the whole loop succeeds.  The drained staging is
+    unmarked first: a crash during cleanup then leaves an unmarked
+    staging that recovery deletes, never a marked one with nothing left
+    to install (which ``recover_upsert`` refuses to roll forward)."""
+    old = f"{path}__old_{uuid.uuid4().hex}"
+    if entries is None:
+        if os.path.exists(path):
+            os.rename(path, old)
+        os.rename(staging, path)
+        if os.path.exists(old):
+            shutil.rmtree(old)
+        return
+    os.makedirs(old)
+    for entry in entries:
+        dst = os.path.join(path, entry)
+        staged = os.path.join(staging, entry)
+        if os.path.exists(dst):
+            os.rename(dst, os.path.join(old, entry))
+        if os.path.exists(staged):
+            os.rename(staged, dst)
+    os.remove(os.path.join(staging, _COMMIT_MARKER))
+    shutil.rmtree(staging, ignore_errors=True)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def upsert_parquet(
@@ -257,30 +318,19 @@ def upsert_parquet(
         # a key row must stay in one partition, or the anti-join can miss it
         raise ValueError(f"partition_col {partition_col!r} must be one of keys={list(keys)}")
     _require_local_path(path, "upsert_parquet")
-    leftovers = _sibling_dirs(path, "staging") + _sibling_dirs(path, "old")
-    if leftovers:
-        raise RuntimeError(
-            f"orphaned staging/old directories from an interrupted upsert: "
-            f"{leftovers}; run recover_upsert({path!r}) before upserting"
-        )
+    _require_no_orphans(path)
     from .sources.readers import read_parquet_if_exists
 
     store: DataFrame | None = read_parquet_if_exists(spark, path)
 
     if partition_col is None or store is None:
         merged = merge_upsert(store, updates, keys, order_col, tiebreak)
-        staging = f"{path}__staging_{uuid.uuid4().hex}"
+        staging = staging_dir(path)
         writer = merged.write.mode("overwrite")
         if partition_col is not None:
             writer = writer.partitionBy(partition_col)
         writer.parquet(staging)
-        _mark_staging_complete(staging)
-        old = f"{path}__old_{uuid.uuid4().hex}"
-        if os.path.exists(path):
-            os.rename(path, old)
-        os.rename(staging, path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        swap_in(path, staging)
         return
 
     # The store's partition dtype is RE-INFERRED from directory names at
@@ -316,46 +366,20 @@ def upsert_parquet(
         # store was written flat — renaming partition dirs in next to flat
         # part files would corrupt it; full swap converts the layout instead
         merged = merge_upsert(store, updates, keys, order_col, tiebreak)
-        staging = f"{path}__staging_{uuid.uuid4().hex}"
+        staging = staging_dir(path)
         merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-        _mark_staging_complete(staging)
-        old = f"{path}__old_{uuid.uuid4().hex}"
-        os.rename(path, old)
-        os.rename(staging, path)
-        shutil.rmtree(old)
+        swap_in(path, staging)
         return
     existing = store.filter(F.col(partition_col).isin(touched))
     merged = merge_upsert(existing, updates, keys, order_col, tiebreak)
-    staging = f"{path}__staging_{uuid.uuid4().hex}"
+    staging = staging_dir(path)
     merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-    _mark_staging_complete(staging)
-    # move each staged partition_col=value directory into the store,
-    # replacing only the touched ones (naming comes from the writer itself,
-    # so value formatting/escaping always agrees with the store layout).
-    # Displaced originals go to a trash dir that is deleted ONLY after the
-    # whole swap succeeds — on a failed rename they stay recoverable there.
-    trash = f"{path}__old_{uuid.uuid4().hex}"
-    os.makedirs(trash)
-    for entry in os.listdir(staging):
-        if not entry.startswith(f"{partition_col}="):
-            continue
-        dst = os.path.join(path, entry)
-        if os.path.exists(dst):
-            os.rename(dst, os.path.join(trash, entry))
-        os.rename(os.path.join(staging, entry), dst)
-    shutil.rmtree(trash, ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)
-
-
-def _require_no_orphans(path: str) -> None:
-    """Refuse to start a swap while orphaned staging/old siblings exist —
-    the single-writer precondition every swap operation shares."""
-    leftovers = _sibling_dirs(path, "staging") + _sibling_dirs(path, "old")
-    if leftovers:
-        raise RuntimeError(
-            f"orphaned staging/old directories from an interrupted "
-            f"upsert/compaction: {leftovers}; run recover_upsert({path!r}) first"
-        )
+    # swap in each staged partition_col=value directory, replacing only
+    # the touched ones (naming comes from the writer itself, so value
+    # formatting/escaping always agrees with the store layout)
+    swap_in(path, staging, [
+        e for e in os.listdir(staging) if e.startswith(f"{partition_col}=")
+    ])
 
 
 def _data_files(d: str) -> list[str]:
@@ -367,19 +391,16 @@ def _data_files(d: str) -> list[str]:
 
 
 def _flat_swap(path: str, merged: DataFrame) -> None:
-    """The flat-store arm of the shared crash-safe swap: write ``merged``
-    to a staging sibling, commit-mark, displace, install.  ONE
-    implementation on purpose — every compaction/rewrite that swaps a
-    whole directory must stay byte-compatible with ``recover_upsert``'s
-    repair rule, and a protocol fix applied to one copy but not another
-    would silently re-open a crash window."""
-    staging = f"{path}__staging_{uuid.uuid4().hex}"
+    """Rewrite a flat store from ``merged``: write it to a
+    ``staging_dir`` sibling and install it with ``swap_in``.  The swap
+    itself has ONE implementation, ``swap_in``/``_move_in`` above, which
+    every store swap in the package goes through — each must stay
+    byte-compatible with ``recover_upsert``'s repair rule, and a protocol
+    fix applied to one copy but not another would silently re-open a
+    crash window."""
+    staging = staging_dir(path)
     merged.write.mode("overwrite").parquet(staging)
-    _mark_staging_complete(staging)
-    old = f"{path}__old_{uuid.uuid4().hex}"
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
+    swap_in(path, staging)
 
 
 def compact_parquet(
@@ -442,7 +463,7 @@ def compact_parquet(
             plan.append((e, need, len(files)))
     if not plan:
         return {}
-    staging = f"{path}__staging_{uuid.uuid4().hex}"
+    staging = staging_dir(path)
     summary: dict[str, tuple[int, int]] = {}
     for e, need, n_before in plan:
         # partition-dir files carry no partition column, and are written
@@ -450,15 +471,7 @@ def compact_parquet(
         part = _read_pq(spark, os.path.join(path, e)).coalesce(need)
         part.write.mode("overwrite").parquet(os.path.join(staging, e))
         summary[e] = (n_before, len(_data_files(os.path.join(staging, e))))
-    _mark_staging_complete(staging)
-    trash = f"{path}__old_{uuid.uuid4().hex}"
-    os.makedirs(trash)
-    for e, _, _ in plan:
-        dst = os.path.join(path, e)
-        os.rename(dst, os.path.join(trash, e))
-        os.rename(os.path.join(staging, e), dst)
-    shutil.rmtree(trash, ignore_errors=True)
-    shutil.rmtree(staging, ignore_errors=True)
+    swap_in(path, staging, [e for e, _, _ in plan])
     return summary
 
 
@@ -515,7 +528,7 @@ def maybe_compact_table(
     spark: SparkSession,
     path: str,
     id_col: str | None = None,
-    max_files: int = AUTO_COMPACT_FILES,
+    max_files: int | None = None,
     target_file_bytes: int = 128 << 20,
 ) -> dict[str, tuple[int, int]]:
     """File-count compaction trigger — the piece that makes compaction
@@ -537,7 +550,7 @@ def maybe_compact_table(
     their own OPTIMIZE cadence).  An interrupted previous rewrite is
     repaired first via ``recover_upsert`` — the same one rule every swap
     consumer uses — so a crash inside auto-compaction never wedges the
-    sink."""
+    sink.  ``max_files=None`` reads ``AUTO_COMPACT_FILES`` at call time."""
     heal_if_interrupted(path)
     if not os.path.isdir(path):
         return {}
@@ -546,7 +559,7 @@ def maybe_compact_table(
         n = sum(len(_data_files(os.path.join(path, e))) for e in entries)
     else:
         n = len(_data_files(path))
-    if n <= max_files:
+    if n <= (AUTO_COMPACT_FILES if max_files is None else max_files):
         return {}
     if id_col is not None and not entries:
         return compact_doc_keyed_table(spark, path, id_col, target_file_bytes)
@@ -657,15 +670,7 @@ def recover_upsert(
         else:
             staged_parts = _partition_entries(staging)
             if staged_parts and _partition_entries(path):
-                trash = f"{path}__old_{uuid.uuid4().hex}"
-                os.makedirs(trash)
-                for entry in staged_parts:
-                    dst = os.path.join(path, entry)
-                    if os.path.exists(dst):
-                        os.rename(dst, os.path.join(trash, entry))
-                    os.rename(os.path.join(staging, entry), dst)
-                shutil.rmtree(trash)
-                shutil.rmtree(staging)
+                _move_in(path, staging, staged_parts)
                 actions.append(
                     f"rolled forward: moved {len(staged_parts)} staged "
                     f"partition dir(s) from {staging} into the store"
@@ -686,10 +691,7 @@ def recover_upsert(
                         f"{staging} is empty but store {path} holds "
                         f"partitioned data; resolve manually"
                     )
-                displaced = f"{path}__old_{uuid.uuid4().hex}"
-                os.rename(path, displaced)
-                os.rename(staging, path)
-                shutil.rmtree(displaced)
+                _move_in(path, staging)
                 actions.append(f"rolled forward: full swap of {staging}")
     olds = _sibling_dirs(path, "old")
     if os.path.exists(path):
@@ -736,7 +738,7 @@ def heal_if_interrupted(path: str, for_read: bool = False) -> list[str]:
     corrupting data — both parties perform the identical swap).  Hold
     rebuilds to the documented exclusive-writer contract to avoid that
     benign-but-noisy race."""
-    if re.match(r"^[A-Za-z][A-Za-z0-9+.-]*:", path):
+    if _is_uri(path):
         return []
     if not (_sibling_dirs(path, "staging") or _sibling_dirs(path, "old")):
         return []

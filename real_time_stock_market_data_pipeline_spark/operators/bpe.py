@@ -334,14 +334,12 @@ def update_segmentation_table(
 
 def segmentation_table_sink(
     merges: list[tuple[str, str, int]], path: str, text: str = "text",
-    auto_compact_files: int | None = None,
 ):
     """``foreachBatch`` writer maintaining the segmentation table from a
     DOCUMENT STREAM: each micro-batch runs ``update_segmentation_table``,
-    so per batch only unseen words are segmented and appended.
-    ``auto_compact_files`` schedules ``maintenance.maybe_compact_table``
-    on the word-keyed table between batches (see
-    ``dedup.signature_table_sink``).
+    so per batch only unseen words are segmented and appended.  Between
+    batches ``maintenance.maybe_compact_table`` compacts the word-keyed
+    table (see ``dedup.signature_table_sink``).
 
     Delivery semantics: foreachBatch is at-least-once, but the anti-join
     update is IDEMPOTENT — a replayed batch finds all its words already
@@ -349,13 +347,11 @@ def segmentation_table_sink(
     the batch-built state without transactional coordination (pinned by
     tests/test_streaming.py: stream-built ≡ batch-built, and a full
     replay appends zero rows)."""
-    from ..maintenance import AUTO_COMPACT_FILES, maybe_compact_table
-
-    bound = AUTO_COMPACT_FILES if auto_compact_files is None else auto_compact_files
+    from ..maintenance import maybe_compact_table
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         update_segmentation_table(batch_df, merges, path, text)
-        maybe_compact_table(batch_df.sparkSession, path, "word", bound)
+        maybe_compact_table(batch_df.sparkSession, path, "word")
 
     return write_batch
 

@@ -805,7 +805,6 @@ def update_signature_table(
 def signature_table_sink(
     path: str, id_col: str = "doc_id", text: str = "text", n: int = 3,
     band_size: int = BAND_SIZE,
-    auto_compact_files: int | None = None,
 ):
     """``foreachBatch`` writer maintaining the signature table from a
     DOCUMENT STREAM: each micro-batch runs ``update_signature_table``, so
@@ -815,18 +814,15 @@ def signature_table_sink(
     coordination (pinned by tests/test_streaming.py: stream-built ≡
     batch-built, and a full replay appends zero rows).
 
-    ``auto_compact_files`` (None = ``maintenance.AUTO_COMPACT_FILES``)
-    schedules ``maintenance.maybe_compact_table`` between batches, so the
-    anti-join+append file count stays bounded for the life of the sink;
-    pass 0-or-negative semantics are not supported — use a huge bound to
-    effectively disable."""
-    from ..maintenance import AUTO_COMPACT_FILES, maybe_compact_table
-
-    bound = AUTO_COMPACT_FILES if auto_compact_files is None else auto_compact_files
+    Between batches ``maintenance.maybe_compact_table`` compacts the
+    table once it holds more than ``maintenance.AUTO_COMPACT_FILES``
+    files, so the anti-join+append file count stays bounded for the life
+    of the sink."""
+    from ..maintenance import maybe_compact_table
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         update_signature_table(batch_df, path, id_col, text, n, band_size)
-        maybe_compact_table(batch_df.sparkSession, path, id_col, bound)
+        maybe_compact_table(batch_df.sparkSession, path, id_col)
 
     return write_batch
 
@@ -918,21 +914,18 @@ def update_test_shingle_table(
 def test_shingle_table_sink(
     path: str, id_col: str = "doc_id", text: str = "text",
     n: int = DECONTAMINATION_NGRAM,
-    auto_compact_files: int | None = None,
 ):
     """``foreachBatch`` writer maintaining the test-shingle table from a
     TEST-DOCUMENT STREAM: at-least-once redelivery is idempotent via the
     anti-join (stream-built ≡ batch-built and a full replay appends zero
-    rows — tests/test_streaming.py).  ``auto_compact_files`` schedules
-    ``maintenance.maybe_compact_table`` between batches (see
+    rows — tests/test_streaming.py).  Between batches
+    ``maintenance.maybe_compact_table`` compacts the table (see
     ``signature_table_sink``)."""
-    from ..maintenance import AUTO_COMPACT_FILES, maybe_compact_table
-
-    bound = AUTO_COMPACT_FILES if auto_compact_files is None else auto_compact_files
+    from ..maintenance import maybe_compact_table
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         update_test_shingle_table(batch_df, path, id_col, text, n)
-        maybe_compact_table(batch_df.sparkSession, path, id_col, bound)
+        maybe_compact_table(batch_df.sparkSession, path, id_col)
 
     return write_batch
 

@@ -1196,20 +1196,17 @@ def update_media_fingerprint_table(
 
 def media_fingerprint_table_sink(
     path: str, id_col: str = "doc_id", hash_col: str = "dhash",
-    auto_compact_files: int | None = None,
 ):
     """``foreachBatch`` writer maintaining the fingerprint table from a
     hashed-media STREAM — at-least-once redelivery idempotent via the
     anti-join (stream-built ≡ batch-built, replay appends zero rows).
-    ``auto_compact_files`` schedules ``maintenance.maybe_compact_table``
-    between batches (see ``dedup.signature_table_sink``)."""
-    from ..maintenance import AUTO_COMPACT_FILES, maybe_compact_table
-
-    bound = AUTO_COMPACT_FILES if auto_compact_files is None else auto_compact_files
+    Between batches ``maintenance.maybe_compact_table`` compacts the
+    table (see ``dedup.signature_table_sink``)."""
+    from ..maintenance import maybe_compact_table
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         update_media_fingerprint_table(batch_df, path, id_col, hash_col)
-        maybe_compact_table(batch_df.sparkSession, path, id_col, bound)
+        maybe_compact_table(batch_df.sparkSession, path, id_col)
 
     return write_batch
 

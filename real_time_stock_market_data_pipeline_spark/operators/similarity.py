@@ -552,7 +552,6 @@ def ivf_index_sink(
     vec_id: str = "vec_id",
     vec: str = "embedding",
     centroid_id: str = "centroid_id",
-    auto_compact_files: int | None = None,
     meta_cols: tuple[str, ...] | list[str] = (),
 ):
     """``foreachBatch`` writer maintaining a persisted IVF index from a
@@ -563,21 +562,17 @@ def ivf_index_sink(
     coordination (pinned by tests/test_streaming.py: stream-built ≡
     batch-built, and a full replay appends zero rows).  Call
     ``init_ivf_index`` with the codebook before starting the stream.
-    ``auto_compact_files`` schedules ``maintenance.maybe_compact_table``
-    on the hive-partitioned lists between batches (per-list bin-packing —
-    the lists keep their centroid_id directory layout)."""
-    from ..maintenance import AUTO_COMPACT_FILES, maybe_compact_table
-
-    bound = AUTO_COMPACT_FILES if auto_compact_files is None else auto_compact_files
+    Between batches ``maintenance.maybe_compact_table`` bin-packs the
+    hive-partitioned lists per list (they keep their centroid_id
+    directory layout)."""
+    from ..maintenance import maybe_compact_table
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         update_ivf_index(
             batch_df.sparkSession, batch_df, path, vec_id, vec, centroid_id,
             meta_cols,
         )
-        maybe_compact_table(
-            batch_df.sparkSession, f"{path}/lists", None, bound
-        )
+        maybe_compact_table(batch_df.sparkSession, f"{path}/lists")
 
     return write_batch
 
@@ -599,9 +594,9 @@ def rebuild_ivf_index(
     that says WHEN, this is the repair.  A rebuild is the ONE operation
     allowed to change assignments, so it must be all-or-nothing: the new
     tree (centroids + re-encoded lists, metadata columns carried over
-    automatically) is written to a ``__staging_`` sibling, durability-
-    marked, and installed with the same two-rename swap + commit-marker
-    protocol as ``maintenance.upsert_parquet`` — every crash window is
+    automatically) is written to a ``maintenance.staging_dir`` sibling
+    and installed by ``maintenance.swap_in`` (commit marker, then two
+    renames), as ``maintenance.upsert_parquet`` is — every crash window is
     repaired by ``heal_if_interrupted`` (run here first, and by
     ``search_ivf_index``/``update_ivf_index`` before every read), so a
     reader always sees the OLD index or the NEW one, never a mix or a
@@ -616,24 +611,18 @@ def rebuild_ivf_index(
     (n_iter Lloyd passes), one assignment pass, one partitioned write —
     the same as the original build, amortized over however long the
     rebuilt quantizer serves."""
-    import uuid as _uuid
-
     from ..maintenance import (
-        _mark_staging_complete,
         _require_local_path,
-        _sibling_dirs,
+        _require_no_orphans,
         heal_if_interrupted,
+        staging_dir,
+        swap_in,
     )
     from .clustering import kmeans_fit
 
     _require_local_path(path, "rebuild_ivf_index")
     heal_if_interrupted(path)
-    leftovers = _sibling_dirs(path, "staging") + _sibling_dirs(path, "old")
-    if leftovers:
-        raise RuntimeError(
-            f"orphaned staging/old directories {leftovers} survive healing; "
-            "resolve manually before rebuilding"
-        )
+    _require_no_orphans(path)
     heal_if_interrupted(f"{path}/lists")  # a mid-swap compaction crash
     lists = _read_pq(spark, f"{path}/lists")
     meta = [c for c in lists.columns if c not in (vec_id, vec, centroid_id)]
@@ -654,7 +643,7 @@ def rebuild_ivf_index(
         if centroid_id != "centroid_id":
             cents_df = cents_df.withColumnRenamed("centroid_id", centroid_id)
         cents = _collect_codebook(cents_df, centroid_id, vec)
-        staging = f"{path}__staging_{_uuid.uuid4().hex}"
+        staging = staging_dir(path)
         cents_df.select(F.col(centroid_id), F.col(vec)).write.mode(
             "overwrite"
         ).parquet(f"{staging}/centroids")
@@ -669,11 +658,7 @@ def rebuild_ivf_index(
             .partitionBy(centroid_id)
             .parquet(f"{staging}/lists")
         )
-        _mark_staging_complete(staging)
-        old = f"{path}__old_{_uuid.uuid4().hex}"
-        os.rename(path, old)
-        os.rename(staging, path)
-        shutil.rmtree(old)
+        swap_in(path, staging)
         return {"n_vectors": int(n_vectors.result()), "k": int(k)}
 
 
@@ -1328,24 +1313,19 @@ def pq_codes_sink(
     path: str,
     vec_id: str = "vec_id",
     vec: str = "embedding",
-    auto_compact_files: int | None = None,
 ):
     """``foreachBatch`` writer maintaining the PQ code table from a VECTOR
     STREAM — at-least-once redelivery is idempotent via the anti-join
     (stream-built ≡ batch-built, replay appends zero rows; pinned by
     tests/test_streaming.py).  Call ``init_pq_index`` with trained
-    codebooks before starting the stream.  ``auto_compact_files``
-    schedules ``maintenance.maybe_compact_table`` on the code table
-    between batches (see ``dedup.signature_table_sink``)."""
-    from ..maintenance import AUTO_COMPACT_FILES, maybe_compact_table
-
-    bound = AUTO_COMPACT_FILES if auto_compact_files is None else auto_compact_files
+    codebooks before starting the stream.  Between batches
+    ``maintenance.maybe_compact_table`` compacts the code table (see
+    ``dedup.signature_table_sink``)."""
+    from ..maintenance import maybe_compact_table
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         update_pq_codes(batch_df.sparkSession, batch_df, path, vec_id, vec)
-        maybe_compact_table(
-            batch_df.sparkSession, f"{path}/codes", vec_id, bound
-        )
+        maybe_compact_table(batch_df.sparkSession, f"{path}/codes", vec_id)
 
     return write_batch
 
@@ -1367,23 +1347,17 @@ def rebuild_pq_codes(
     re-encodes exactly the accumulated vec_ids and partial coverage
     fails loudly).  Quantizer geometry defaults to the standing
     codebooks'."""
-    import uuid as _uuid
-
     from ..maintenance import (
-        _mark_staging_complete,
         _require_local_path,
-        _sibling_dirs,
+        _require_no_orphans,
         heal_if_interrupted,
+        staging_dir,
+        swap_in,
     )
 
     _require_local_path(path, "rebuild_pq_codes")
     heal_if_interrupted(path)
-    leftovers = _sibling_dirs(path, "staging") + _sibling_dirs(path, "old")
-    if leftovers:
-        raise RuntimeError(
-            f"orphaned staging/old directories {leftovers} survive healing; "
-            "resolve manually before rebuilding"
-        )
+    _require_no_orphans(path)
     heal_if_interrupted(f"{path}/codes")
     old_cbs = load_pq_codebooks(spark, path)
     ids = _read_pq(spark, f"{path}/codes").select(vec_id)
@@ -1408,7 +1382,7 @@ def rebuild_pq_codes(
             f"rebuild corpus covers {n_acc} of the code table's {n_codes} "
             f"vectors — every accumulated vec_id must be re-encodable"
         )
-    staging = f"{path}__staging_{_uuid.uuid4().hex}"
+    staging = staging_dir(path)
     # the tiny staged codebook write is independent of the corpus-sized
     # encode write (disjoint staging subdirs of a not-yet-served root):
     # overlap them (guide §2.6); the durability marker still lands
@@ -1423,11 +1397,7 @@ def rebuild_pq_codes(
             .write.mode("overwrite")
             .parquet(f"{staging}/codes")
         )
-    _mark_staging_complete(staging)
-    old = f"{path}__old_{_uuid.uuid4().hex}"
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
+    swap_in(path, staging)
     # repoint the codebook memo at the installed path (the staging-path
     # entry init_pq_index primed was renamed away): the rebuilt index's
     # first search/update skips its re-collect job
@@ -1817,23 +1787,17 @@ def rebuild_ivfpq_index(
     rebuild is when the index re-sizes); the PQ geometry (m/k) is
     dimension-bound, not corpus-bound, and defaults to the standing
     codebooks'."""
-    import uuid as _uuid
-
     from ..maintenance import (
-        _mark_staging_complete,
         _require_local_path,
-        _sibling_dirs,
+        _require_no_orphans,
         heal_if_interrupted,
+        staging_dir,
+        swap_in,
     )
 
     _require_local_path(path, "rebuild_ivfpq_index")
     heal_if_interrupted(path)
-    leftovers = _sibling_dirs(path, "staging") + _sibling_dirs(path, "old")
-    if leftovers:
-        raise RuntimeError(
-            f"orphaned staging/old directories {leftovers} survive healing; "
-            "resolve manually before rebuilding"
-        )
+    _require_no_orphans(path)
     heal_if_interrupted(f"{path}/index")
     _, old_fine = load_ivfpq_quantizers(spark, path)
     index = _read_pq(spark, f"{path}/index")
@@ -1894,7 +1858,7 @@ def rebuild_ivfpq_index(
             n_iter=n_iter,
             dim=dim,
         )
-    staging = f"{path}__staging_{_uuid.uuid4().hex}"
+    staging = staging_dir(path)
     # the two tiny quantizer-level writes are independent of the
     # corpus-sized encode write (disjoint staging subdirs): overlap them
     # (guide §2.6); the durability marker lands after ALL writes return
@@ -1911,11 +1875,7 @@ def rebuild_ivfpq_index(
             .partitionBy("list_id")
             .parquet(f"{staging}/index")
         )
-    _mark_staging_complete(staging)
-    old = f"{path}__old_{_uuid.uuid4().hex}"
-    os.rename(path, old)
-    os.rename(staging, path)
-    shutil.rmtree(old)
+    swap_in(path, staging)
     # repoint the codebook memos at the installed path: the rebuilt
     # index's first search (the dq5/dq4 rebuilt gate, emb14's post-
     # rebuild serve) skips two re-collect jobs
@@ -2153,14 +2113,13 @@ def _purge_partitioned_tombstones(
     stores are doc-keyed under a partition column, so the staged-
     partition swap, the zero-survivor branch, and the clear-tombstones-
     last recovery contract are identical."""
-    import shutil as _shutil
-    import uuid as _uuid
-
     from ..maintenance import (
-        _mark_staging_complete,
+        _partition_entries,
         _require_local_path,
         _require_no_orphans,
         heal_if_interrupted,
+        staging_dir,
+        swap_in,
     )
     from ..sources.readers import read_parquet_if_exists
 
@@ -2175,7 +2134,7 @@ def _purge_partitioned_tombstones(
     if index is None:
         # a prior zero-survivor purge removed the whole table; the
         # standing tombstones are its recovery signal — clear them now
-        _shutil.rmtree(f"{root}/tombstones", ignore_errors=True)
+        shutil.rmtree(f"{root}/tombstones", ignore_errors=True)
         return {"n_purged": 0, "n_lists_rewritten": 0}
     doomed = index.join(t_ids, vec_id, "left_semi")
     # touched partitions AND the purge metric in ONE job (guide §1.2,
@@ -2192,10 +2151,8 @@ def _purge_partitioned_tombstones(
         keep = index.filter(F.col(part_col).isin(touched)).join(
             t_ids, vec_id, "left_anti"
         )
-        staging = f"{index_path}__staging_{_uuid.uuid4().hex}"
+        staging = staging_dir(index_path)
         keep.write.mode("overwrite").partitionBy(part_col).parquet(staging)
-        from ..maintenance import _partition_entries
-
         if not _partition_entries(staging):
             # Every row of every touched list is tombstoned: there are no
             # survivor partitions to install, so the staging/marker swap
@@ -2208,33 +2165,21 @@ def _purge_partitioned_tombstones(
             # dirs directly and clear tombstones LAST, so a crash
             # mid-removal leaves the remaining rows still tombstoned
             # (never served) and the next purge resumes idempotently.
-            _shutil.rmtree(staging, ignore_errors=True)
+            shutil.rmtree(staging, ignore_errors=True)
             for lid in touched:
-                _shutil.rmtree(
+                shutil.rmtree(
                     os.path.join(index_path, f"{part_col}={lid}"),
                     ignore_errors=True,
                 )
             if not _partition_entries(index_path):
                 # every list was touched and doomed: nothing survives —
                 # remove the empty table dir so readers see absent-as-empty
-                _shutil.rmtree(index_path, ignore_errors=True)
+                shutil.rmtree(index_path, ignore_errors=True)
         else:
-            _mark_staging_complete(staging)
-            trash = f"{index_path}__old_{_uuid.uuid4().hex}"
-            os.makedirs(trash)
-            for lid in touched:
-                entry = f"{part_col}={lid}"
-                dst = os.path.join(index_path, entry)
-                staged = os.path.join(staging, entry)
-                if os.path.exists(dst):
-                    os.rename(dst, os.path.join(trash, entry))
-                if os.path.exists(staged):
-                    # writer-formatted partition dir: survivors re-installed
-                    os.rename(staged, dst)
-                # else: every row of this list was deleted — dir stays removed
-            _shutil.rmtree(trash, ignore_errors=True)
-            _shutil.rmtree(staging, ignore_errors=True)
-    _shutil.rmtree(f"{root}/tombstones", ignore_errors=True)
+            # a touched list with survivors is re-installed from the
+            # writer-formatted staged dir; one with none stays removed
+            swap_in(index_path, staging, [f"{part_col}={lid}" for lid in touched])
+    shutil.rmtree(f"{root}/tombstones", ignore_errors=True)
     return {"n_purged": int(n_purged), "n_lists_rewritten": len(touched)}
 
 
@@ -2242,27 +2187,21 @@ def ivfpq_index_sink(
     path: str,
     vec_id: str = "vec_id",
     vec: str = "embedding",
-    auto_compact_files: int | None = None,
     meta_cols: tuple[str, ...] | list[str] = (),
 ):
     """``foreachBatch`` writer maintaining the composite index from a
     VECTOR STREAM — at-least-once redelivery idempotent via the anti-join
     (stream-built ≡ batch-built, replay appends zero rows).  Call
     ``init_ivfpq_index`` with trained quantizers before starting.
-    ``auto_compact_files`` schedules ``maintenance.maybe_compact_table``
-    on the index table between batches (see
-    ``dedup.signature_table_sink``)."""
-    from ..maintenance import AUTO_COMPACT_FILES, maybe_compact_table
-
-    bound = AUTO_COMPACT_FILES if auto_compact_files is None else auto_compact_files
+    Between batches ``maintenance.maybe_compact_table`` compacts the
+    index table (see ``dedup.signature_table_sink``)."""
+    from ..maintenance import maybe_compact_table
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         update_ivfpq_index(
             batch_df.sparkSession, batch_df, path, vec_id, vec, meta_cols
         )
-        maybe_compact_table(
-            batch_df.sparkSession, f"{path}/index", vec_id, bound
-        )
+        maybe_compact_table(batch_df.sparkSession, f"{path}/index", vec_id)
 
     return write_batch
 
@@ -2893,24 +2832,18 @@ def rebuild_semantic_index(
     one-shot SemDeDup, amortized over the rebuilt index's lifetime.
     Crash-safe via the shared staging/commit-marker swap; every reader
     heals the index root first."""
-    import uuid as _uuid
-
     from ..maintenance import (
-        _mark_staging_complete,
         _require_local_path,
-        _sibling_dirs,
+        _require_no_orphans,
         heal_if_interrupted,
+        staging_dir,
+        swap_in,
     )
     from .clustering import kmeans_fit
 
     _require_local_path(path, "rebuild_semantic_index")
     heal_if_interrupted(path)
-    leftovers = _sibling_dirs(path, "staging") + _sibling_dirs(path, "old")
-    if leftovers:
-        raise RuntimeError(
-            f"orphaned staging/old directories {leftovers} survive healing; "
-            "resolve manually before rebuilding"
-        )
+    _require_no_orphans(path)
     heal_if_interrupted(f"{path}/assigned")
     heal_if_interrupted(f"{path}/pairs")
     acc = (
@@ -2938,7 +2871,7 @@ def rebuild_semantic_index(
         pairs = _pairs_from_assignment(
             assigned, threshold, vec_id, vec, arrow
         ).localCheckpoint(eager=False)
-        staging = f"{path}__staging_{_uuid.uuid4().hex}"
+        staging = staging_dir(path)
         cents_df.select(F.col("centroid_id"), F.col(vec)).write.mode(
             "overwrite"
         ).parquet(f"{staging}/centroids")
@@ -2948,11 +2881,7 @@ def rebuild_semantic_index(
             # the pairs directory materializes with the first dup pair — the
             # update contract's empty-store rule, preserved across rebuilds
             pairs.write.mode("overwrite").parquet(f"{staging}/pairs")
-        _mark_staging_complete(staging)
-        old = f"{path}__old_{_uuid.uuid4().hex}"
-        os.rename(path, old)
-        os.rename(staging, path)
-        shutil.rmtree(old)
+        swap_in(path, staging)
         return {
             "n_vectors": int(n_vectors.result()),
             "k": int(k),
@@ -2965,30 +2894,22 @@ def semantic_index_sink(
     threshold: float = 0.95,
     vec_id: str = "vec_id",
     vec: str = "embedding",
-    auto_compact_files: int | None = None,
 ):
     """``foreachBatch`` writer maintaining the semantic-dedup index from a
     VECTOR STREAM — at-least-once redelivery idempotent via the
     anti-join (stream-built ≡ batch-built, replay appends zero rows to
     both tables).  Call ``init_semantic_index`` with trained centroids
-    before starting.  ``auto_compact_files`` schedules
-    ``maintenance.maybe_compact_table`` on the assigned table between
-    batches (the pairs table is collision-sized — compact it on the same
-    trigger)."""
-    from ..maintenance import AUTO_COMPACT_FILES, maybe_compact_table
-
-    bound = AUTO_COMPACT_FILES if auto_compact_files is None else auto_compact_files
+    before starting.  Between batches ``maintenance.maybe_compact_table``
+    compacts the assigned table (the pairs table is collision-sized —
+    compacted on the same trigger)."""
+    from ..maintenance import maybe_compact_table
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         update_semantic_index(
             batch_df.sparkSession, batch_df, path, threshold, vec_id, vec
         )
-        maybe_compact_table(
-            batch_df.sparkSession, f"{path}/assigned", vec_id, bound
-        )
-        maybe_compact_table(
-            batch_df.sparkSession, f"{path}/pairs", None, bound
-        )
+        maybe_compact_table(batch_df.sparkSession, f"{path}/assigned", vec_id)
+        maybe_compact_table(batch_df.sparkSession, f"{path}/pairs")
 
     return write_batch
 

@@ -63,8 +63,8 @@ from ..concurrency import overlap
 def tombstone_path(table_path: str) -> str:
     """Sibling tombstone dir for a FLAT table (the table path itself is
     a parquet dir, so tombstones cannot live inside it).  The ``__``
-    sibling is invisible to ``maintenance._sibling_dirs`` orphan checks
-    (those match only ``__staging_``/``__old_``)."""
+    sibling is invisible to the orphan checks in ``maintenance`` (those
+    match only the swap's own staging and old sibling names)."""
     return f"{table_path}__tombstones"
 
 

@@ -279,13 +279,12 @@ def update_bm25_postings(
     is (tok, df) — Heaps-law sublinear in the corpus), never
     corpus-sized.  On Delta/Iceberg the swap becomes a real MERGE INTO."""
     import os
-    import shutil
-    import uuid
 
     from ..maintenance import (
-        _mark_staging_complete,
         _require_local_path,
         heal_if_interrupted,
+        staging_dir,
+        swap_in,
     )
     from ..plans.dialect import split_ws  # leaf module (tok_hash precedent)
     from ..sources.readers import read_parquet_if_exists
@@ -293,7 +292,7 @@ def update_bm25_postings(
     spark = batch_df.sparkSession
     tf_path = os.path.join(path, "tf")
     df_path = os.path.join(path, "df")
-    # the df swap (and _read_bm25_hwm / heal) uses os.rename on these
+    # the df swap (and _read_bm25_hwm / heal) renames these local
     # paths — a scheme-prefixed path would silently rename a
     # similarly-named DRIVER-LOCAL dir while Spark wrote elsewhere
     _require_local_path(df_path, "update_bm25_postings")
@@ -345,7 +344,7 @@ def update_bm25_postings(
                     )
                 )
                 merged = merge_upsert(existing, updates, ["tok"])
-            staging = f"{df_path}__staging_{uuid.uuid4().hex}"
+            staging = staging_dir(df_path)
             merged.write.mode("overwrite").parquet(staging)
             with open(os.path.join(staging, BM25_HWM_FILE), "w") as f:
                 f.write(str(batch_id))
@@ -355,13 +354,7 @@ def update_bm25_postings(
             if td_hwm >= 0:
                 with open(os.path.join(staging, BM25_TD_HWM_FILE), "w") as f:
                     f.write(str(td_hwm))
-            _mark_staging_complete(staging)
-            old = f"{df_path}__old_{uuid.uuid4().hex}"
-            if os.path.exists(df_path):
-                os.rename(df_path, old)
-            os.rename(staging, df_path)
-            if os.path.exists(old):
-                shutil.rmtree(old)
+            swap_in(df_path, staging)
         if n_new:
             tf_rows.write.mode("append").parquet(tf_path)
         return {
@@ -507,9 +500,10 @@ def purge_bm25_postings(spark, path: str, id_col: str = "doc_id") -> dict:
 
     from ..maintenance import (
         _flat_swap,
-        _mark_staging_complete,
         _require_local_path,
         heal_if_interrupted,
+        staging_dir,
+        swap_in,
     )
     from ..sources.readers import read_parquet_if_exists
 
@@ -534,8 +528,6 @@ def purge_bm25_postings(spark, path: str, id_col: str = "doc_id") -> dict:
     n_dec = n_drop = 0
     existing = read_parquet_if_exists(spark, df_path)
     if existing is not None and pending.first() is not None:
-        import uuid
-
         deltas = (
             tf.join(
                 F.broadcast(pending.select(id_col).distinct()),
@@ -559,7 +551,7 @@ def purge_bm25_postings(spark, path: str, id_col: str = "doc_id") -> dict:
         n_dec = deltas.join(existing, "tok", "left_semi").count()
         n_drop = existing.count() - merged.count()
         new_hwm = int(tombs.agg(F.max("td_epoch")).first()[0])
-        staging = f"{df_path}__staging_{uuid.uuid4().hex}"
+        staging = staging_dir(df_path)
         if merged.isEmpty():
             # every token's df reached zero: no parquet data to stage —
             # hand-build the staging so the hwm files still swap in
@@ -573,11 +565,7 @@ def purge_bm25_postings(spark, path: str, id_col: str = "doc_id") -> dict:
                 f.write(str(ingest_hwm))
         with open(os.path.join(staging, BM25_TD_HWM_FILE), "w") as f:
             f.write(str(new_hwm))
-        _mark_staging_complete(staging)
-        old = f"{df_path}__old_{uuid.uuid4().hex}"
-        os.rename(df_path, old)
-        os.rename(staging, df_path)
-        shutil.rmtree(old)
+        swap_in(df_path, staging)
     doomed = tf.join(t_ids, id_col, "left_semi")
     n_tf = doomed.count()
     if n_tf:
@@ -599,7 +587,6 @@ def bm25_postings_sink(
     path: str,
     id_col: str = "doc_id",
     text: str = "text",
-    auto_compact_files: int | None = None,
 ):
     """``foreachBatch`` writer maintaining the BM25 posting tables from a
     DOCUMENT STREAM — the streaming twin of txt23's batch API and the
@@ -617,19 +604,17 @@ def bm25_postings_sink(
     restarts ids at 0 ≤ hwm, correctly skipping df merges whose deltas
     are already durable.
 
-    ``auto_compact_files`` schedules ``maintenance.maybe_compact_table``
-    on the insert-only tf table between batches (the df table is
-    rewritten per merge and never accretes files)."""
+    Between batches ``maintenance.maybe_compact_table`` compacts the
+    insert-only tf table (the df table is rewritten per merge and never
+    accretes files)."""
     import os
 
-    from ..maintenance import AUTO_COMPACT_FILES, maybe_compact_table
-
-    bound = AUTO_COMPACT_FILES if auto_compact_files is None else auto_compact_files
+    from ..maintenance import maybe_compact_table
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         update_bm25_postings(batch_df, path, batch_id, id_col, text)
         maybe_compact_table(
-            batch_df.sparkSession, os.path.join(path, "tf"), id_col, bound
+            batch_df.sparkSession, os.path.join(path, "tf"), id_col
         )
 
     return write_batch
@@ -959,14 +944,8 @@ def update_curriculum_shards(
     writes only changed partitions.  No single-partition window over
     doc-sized input at any size."""
     import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
 
-    from ..maintenance import (
-        _mark_staging_complete,
-        _require_local_path,
-        heal_if_interrupted,
-    )
+    from ..maintenance import _require_local_path, heal_if_interrupted
     from ..sources.readers import read_parquet_if_exists
 
     docs_path = _os.path.join(path, "docs")
@@ -1048,11 +1027,7 @@ def _curriculum_reshard_swap(
     rewrite shard with no surviving rows has its store directory
     displaced without replacement (zero-survivor branch).  Returns the
     number of partitions rewritten."""
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
-
-    from ..maintenance import _mark_staging_complete
+    from ..maintenance import staging_dir, swap_in
 
     allrows = _with_shards(
         untouched.unionByName(reranked.select(*untouched.columns)), n_shards
@@ -1084,23 +1059,9 @@ def _curriculum_reshard_swap(
     out = allrows.filter(F.col("shard_id").isin(rewrite)).select(
         *_CURRICULUM_DOC_COLS, "shard_id"
     )
-    staging = f"{docs_path}__staging_{_uuid.uuid4().hex}"
+    staging = staging_dir(docs_path)
     out.write.mode("overwrite").partitionBy("shard_id").parquet(staging)
-    _mark_staging_complete(staging)
-    trash = f"{docs_path}__old_{_uuid.uuid4().hex}"
-    _os.makedirs(trash)
-    staged = {
-        e for e in _os.listdir(staging) if e.startswith("shard_id=")
-    }
-    for shard in rewrite:
-        entry = f"shard_id={shard}"
-        dst = _os.path.join(docs_path, entry)
-        if _os.path.exists(dst):
-            _os.rename(dst, _os.path.join(trash, entry))
-        if entry in staged:
-            _os.rename(_os.path.join(staging, entry), dst)
-    _shutil.rmtree(trash, ignore_errors=True)
-    _shutil.rmtree(staging, ignore_errors=True)
+    swap_in(docs_path, staging, [f"shard_id={shard}" for shard in rewrite])
     return len(rewrite)
 
 
@@ -1270,26 +1231,18 @@ def rebuild_curriculum_store(
     store equals ``init_curriculum_store`` on the accumulated corpus
     (pinned by test — same model, same scores, same layout).  Returns
     ``{"n_docs", "vocab"}``."""
-    import os as _os
-    import shutil as _shutil
-    import uuid as _uuid
-
     from ..maintenance import (
-        _mark_staging_complete,
         _require_local_path,
-        _sibling_dirs,
+        _require_no_orphans,
         heal_if_interrupted,
+        staging_dir,
+        swap_in,
     )
     from ..sources.readers import read_parquet_if_exists
 
     _require_local_path(path, "rebuild_curriculum_store")
     heal_if_interrupted(path)
-    leftovers = _sibling_dirs(path, "staging") + _sibling_dirs(path, "old")
-    if leftovers:
-        raise RuntimeError(
-            f"orphaned staging/old directories {leftovers} survive healing; "
-            "resolve manually before rebuilding"
-        )
+    _require_no_orphans(path)
     heal_if_interrupted(f"{path}/docs")
     standing = _read_pq(spark, f"{path}/docs").select("doc_id")
     tombs = read_parquet_if_exists(spark, f"{path}/tombstones")
@@ -1324,7 +1277,7 @@ def rebuild_curriculum_store(
             f"rebuild corpus covers {n_acc} of the store's {n_standing} "
             "docs — every accumulated doc_id must be re-scorable"
         )
-    staging = f"{path}__staging_{_uuid.uuid4().hex}"
+    staging = staging_dir(path)
     bc.write.mode("overwrite").parquet(f"{staging}/model/bc")
     uc.write.mode("overwrite").parquet(f"{staging}/model/uc")
     spark.createDataFrame([(int(v),)], "v bigint").write.mode(
@@ -1343,9 +1296,5 @@ def rebuild_curriculum_store(
     sharded.select(*_CURRICULUM_DOC_COLS, "shard_id").write.mode(
         "overwrite"
     ).partitionBy("shard_id").parquet(f"{staging}/docs")
-    _mark_staging_complete(staging)
-    old = f"{path}__old_{_uuid.uuid4().hex}"
-    _os.rename(path, old)
-    _os.rename(staging, path)
-    _shutil.rmtree(old)
+    swap_in(path, staging)
     return {"n_docs": int(n_acc), "vocab": int(v)}

@@ -72,6 +72,7 @@ from .embedding_parity import (
     _d16_bands_union,
     _d16_emb_double,
 )
+from .fixtures import scratch_store
 from .queries import QUERIES
 from .text_parity import _bands_sql, _shingle_cte_over, _sigs_over
 from ..sources.readers import read_parquet_cached_schema as _read_pq
@@ -285,11 +286,7 @@ def _dq6_contamination_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     update_media_fingerprint_table, each family's production check-time
     shape), the semantic gate runs srp_decontaminate with the benchmark
     broadcast, and the verdict is four left equi-joins on doc_id."""
-    import atexit
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from ..operators.dedup import (
         contaminated_docs_from_table,
@@ -333,12 +330,7 @@ def _dq6_contamination_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     train_docs = frame("SELECT doc_id, text FROM train_docs").localCheckpoint(
         eager=False
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_audit",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = scratch_store("audit", sf_dir)
     p_ex, p_bd, p_mm = (os.path.join(root, k) for k in ("sh", "sig", "fp"))
     test_media = _synthetic_bmp_media(
         test_docs.select("doc_id"), "doc_id"
@@ -516,11 +508,7 @@ def _dd18_corpus_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     leg's serial chain).  No leg operator mutates session-global state
     (the dq5 invariant — all file ops target leg-private stores); each
     table comparison is ONE action (symmetric exceptAll union)."""
-    import atexit
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from ..operators.dedup import (
         keep_latest_dedup,
@@ -596,12 +584,7 @@ def _dd18_corpus_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumnRenamed("doc_id", "vec_id")
         .localCheckpoint(eager=False)
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_takedown",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = scratch_store("takedown", sf_dir)
 
     def count(path: str) -> int:
         t = read_parquet_if_exists(spark, path)
@@ -1596,11 +1579,7 @@ def _dq9_takedown_compliance(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitoring layer above it (dq4/dq5's monitor-vs-lifecycle split,
     applied to deletion).  Every check is request-sized broadcast
     joins + single-row aggregates."""
-    import atexit
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from ..operators.dedup import (
         update_signature_table,
@@ -1623,12 +1602,7 @@ def _dq9_takedown_compliance(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(g,) for g in DQ9_GHOSTS], "doc_id long"
     )
     request = requested.unionByName(ghosts).localCheckpoint(eager=False)
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_compliance",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = scratch_store("compliance", sf_dir)
     p_sig = os.path.join(root, "sig")
     p_sh = os.path.join(root, "sh")
     p_fp = os.path.join(root, "fp")
@@ -1711,12 +1685,6 @@ def _dq10_curriculum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     after ``rebuild_curriculum_store`` retrains and swaps the
     model+docs tree (rebuild_ivfpq_index's root-staging protocol).
     Output: (phase, segment, n_docs, gate_ok), one row each."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..operators.text import (
         curriculum_oov_share,
         init_curriculum_store,
@@ -1741,12 +1709,7 @@ def _dq10_curriculum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(salad_text).alias("text"),
     ).localCheckpoint(eager=False)
     union = docs.unionByName(salad).localCheckpoint(eager=False)
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_dq10",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = scratch_store("dq10", sf_dir)
     init_curriculum_store(spark, docs, root)
     update_curriculum_shards(spark, salad, root)
     seg = F.when(

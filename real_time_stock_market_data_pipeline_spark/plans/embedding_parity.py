@@ -31,6 +31,7 @@ from .dialect import (
     seq,
     transform,
 )
+from .fixtures import scratch_store
 from .queries import QUERIES
 from ..sources.readers import read_parquet_cached_schema as _read_pq
 
@@ -541,11 +542,7 @@ def _emb17_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     compared in-plan (full-outer count gate, emb14's pattern).  The
     planted projection keeps the oracle id-arithmetic (organic pairs:
     none at the 0.95 threshold — see _emb15_semantic_dedup)."""
-    import atexit
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from ..operators.similarity import (
         init_semantic_index,
@@ -573,12 +570,7 @@ def _emb17_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents_df = spark.createDataFrame(
         cents, "centroid_id int, embedding array<double>"
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_semidx",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = scratch_store("semidx", sf_dir)
     path = os.path.join(root, "index")
     # the one-shot gate twin depends only on (corpus, cents) — never on
     # the store — so it materializes overlapping the three sequential
@@ -662,12 +654,6 @@ def _emb18_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-plan gate (emb8's pattern), plus an every-hit-matches-the-filter
     check.  Oracle pins both gates TRUE and the full k results per query
     (label 7 holds ≥45 vectors at every sf, spread across lists)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..operators.similarity import (
         build_ivf_index,
         ivf_topk,
@@ -682,12 +668,7 @@ def _emb18_filtered_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session-memoized league fit (plans/fixtures, r18 optimization) —
     # bit-identical to kmeans_fit(emb, k=8, n_iter=1)
     cents = shared_kmeans_fit(spark, sf_dir, k=8, n_iter=1)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_ivf_filtered",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_store("ivf_filtered", sf_dir)
     build_ivf_index(emb, cents, path, meta_cols=("label",))
     from_index = search_ivf_index(
         spark, path, queries_df, k=10, n_probe=7,
@@ -758,12 +739,6 @@ def _emb19_filtered_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     + a replay that must append nothing) so the filtered path and the
     ingest path are exercised together.  Oracle pins the gates TRUE and
     full k per query (label 7 holds ≥45 vectors at every sf)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import Window
 
     from ..operators.similarity import (
@@ -783,12 +758,7 @@ def _emb19_filtered_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .fixtures import shared_ivfpq_fit
 
     coarse, fine = shared_ivfpq_fit(spark, sf_dir)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_ivfpq_filtered",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_store("ivfpq_filtered", sf_dir)
     init_ivfpq_index(spark, coarse, fine, path)
     for r in range(3):
         update_ivfpq_index(
@@ -1040,11 +1010,7 @@ def _dq4_index_recall_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     floor.  Output: one row per (phase, segment) with the gate —
     deterministic (seeded fit, fixed data), so the oracle pins the
     truth table: drift detected standing, repaired after rebuild."""
-    import atexit
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from pyspark.sql import Window
 
@@ -1073,12 +1039,7 @@ def _dq4_index_recall_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
     corpus = old.unionByName(new).localCheckpoint(eager=False)
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_dq4idx",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = scratch_store("dq4idx", sf_dir)
     path = os.path.join(root, "index")
     # pre-drift-era fit memoized per (application, sf_dir, params) — the
     # dq5_fixture_ivfpq_fit contract on the SAME planted rendering
@@ -1220,11 +1181,7 @@ def _dq5_serving_drift_monitors(spark: SparkSession, sf_dir: str) -> DataFrame:
     holds pre-drift, FAILS on the drifted segment standing, and clears
     on both segments after its rebuild.  Output: one row per
     (family, phase, segment)."""
-    import atexit
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from pyspark.sql import Window
 
@@ -1283,12 +1240,7 @@ def _dq5_serving_drift_monitors(spark: SparkSession, sf_dir: str) -> DataFrame:
     old, new = old.result(), new.result()
     corpus = old.unionByName(new)
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_dq5idx",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = scratch_store("dq5idx", sf_dir)
     seg_col = F.when(
         F.col("vec_id") >= 2 * DQ4_PLANT_BASE, F.lit("post_drift")
     ).otherwise(F.lit("pre_drift"))
@@ -1729,11 +1681,7 @@ def _emb21_index_deletion(spark: SparkSession, sf_dir: str) -> DataFrame:
     - after purge, results are unchanged, the physical row count drops
       by exactly the deleted count, and the tombstone table is gone
       (serving back on the zero-anti-join fast path)."""
-    import atexit
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from ..operators.similarity import (
         delete_from_ivfpq_index,
@@ -1753,12 +1701,7 @@ def _emb21_index_deletion(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .fixtures import shared_ivfpq_fit
 
     coarse, fine = shared_ivfpq_fit(spark, sf_dir)
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_ivfpq_del",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = scratch_store("ivfpq_del", sf_dir)
     path = os.path.join(root, "main")
     # The deletion twin (gate B's reference index) touches ONLY its own
     # store root — independent of the main chain until the gate join —
@@ -2043,12 +1986,6 @@ def _emb24_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall/candidate NUMBERS depend on the k-means clustering and stay
     in-plan; the oracle pins the workload size, the grid, and the three
     gates (the dq5 truth-table pattern)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql import Window
 
     from ..operators.similarity import (
@@ -2072,12 +2009,7 @@ def _emb24_probe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents_df = fixture_kmeans_fit(
         spark, sf_dir, "embeddings_double", corpus, k=EMB24_LISTS, n_iter=1
     )
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_emb24",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_store("emb24", sf_dir)
     build_ivf_index(corpus, cents_df, path)
     cents = _collect_codebook(
         _read_pq(spark, f"{path}/centroids"), "centroid_id", "embedding"

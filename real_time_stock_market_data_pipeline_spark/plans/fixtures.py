@@ -16,9 +16,18 @@ Only driver-side codebook values are cached, never a DataFrame (see
 ``store_cache``).  Consumers that need the encoded index (emb13)
 re-encode per call under the cached quantizers and hold their own
 per-execution checkpoint.
+
+``scratch_store`` hands out the one kind of directory the lifecycle
+queries write: a fresh store under the temp dir, removed at exit.
 """
 
 from __future__ import annotations
+
+import atexit
+import os
+import shutil
+import tempfile
+import uuid
 
 from pyspark.sql import SparkSession
 
@@ -159,3 +168,18 @@ def shared_pq_fit(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
         spark, sf_dir, "embeddings", load_table(spark, sf_dir, "embeddings"),
         m=PQ_M, k=PQ_K, n_iter=3,
     )
+
+
+def scratch_store(tag: str, sf_dir: str) -> str:
+    """A fresh directory for a query's scratch store:
+    ``<tmp>/real_time_stock_market_data_pipeline_spark_<tag>/<sf>-<uuid>``.
+    Unique per call, so concurrent runs (parallel test workers,
+    interleaved bench repeats) never write over each other's store.  It is removed at interpreter exit, not on return, because
+    the frame a query returns reads the store lazily."""
+    path = os.path.join(
+        tempfile.gettempdir(),
+        f"real_time_stock_market_data_pipeline_spark_{tag}",
+        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
+    )
+    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    return path

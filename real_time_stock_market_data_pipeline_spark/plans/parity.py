@@ -6,7 +6,6 @@ first differing cells so regressions are debuggable.
 
 from __future__ import annotations
 
-import math
 from dataclasses import dataclass, field
 
 import duckdb
@@ -86,15 +85,12 @@ def compare_frames(name: str, sp: pd.DataFrame, du: pd.DataFrame) -> ParityResul
 def check_query(
     name: str,
     spark_df: DataFrame,
-    oracle: str | None,
+    oracle: str,
     con: duckdb.DuckDBPyConnection,
 ) -> ParityResult:
-    sp = spark_df.toPandas()
-    if oracle is None:
-        ok = len(sp) >= 0
-        return ParityResult(name=name, ok=ok, spark_rows=len(sp), oracle_rows=-1)
-    du = con.execute(oracle).fetchdf()
-    return compare_frames(name, sp, du)
+    return compare_frames(
+        name, spark_df.toPandas(), con.execute(oracle).fetchdf()
+    )
 
 
 def run_parity(
@@ -111,7 +107,7 @@ def run_parity(
         if only and name not in only:
             continue
         try:
-            results.append(check_query(name, fn(spark, sf_dir), ORACLES.get(name), con))
+            results.append(check_query(name, fn(spark, sf_dir), ORACLES[name], con))
         except Exception as e:  # pragma: no cover - debugging aid
             results.append(ParityResult(name=name, ok=False, errors=[f"EXCEPTION: {e}"]))
     return results
@@ -119,7 +115,6 @@ def run_parity(
 
 def main() -> int:
     import argparse
-    import math  # noqa: F811
 
     from ..session import get_spark
 

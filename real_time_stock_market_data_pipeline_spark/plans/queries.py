@@ -32,6 +32,7 @@ from ..operators.relational import (
 )
 from ..sources.readers import load_table, ticks_from_events
 from ..sources.readers import read_parquet_cached_schema as _read_pq
+from .fixtures import scratch_store
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 QUERIES: dict[str, QueryFn] = {}
@@ -1115,18 +1116,11 @@ def s13_model_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     symbol.  Driver row checks the registry semantics: one model per
     trainable symbol, scored prediction finite, predicted_date = latest
     tick + 1 day."""
-    import os
-    import tempfile
-
     from ..ml.persistence import load_models, save_models, score_latest, train_models
 
     ticks = _valid_ticks(spark, sf_dir)
     models = train_models(ticks)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_models",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = scratch_store("models", sf_dir)
     save_models(models, path)
     scored = score_latest(ticks, load_models(spark, path))
     pre = scored.select(
@@ -1156,9 +1150,6 @@ def s14_arima_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     freshly-fitted forecast's step-1 value (an end-to-end persist→reload→
     score consistency check; the fold replays the fit's addition order, so
     tolerance is only guarding float-environment drift)."""
-    import os
-    import tempfile
-
     from ..ml.persistence import (
         load_models,
         save_models,
@@ -1167,11 +1158,7 @@ def s14_arima_registry(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ticks = _valid_ticks(spark, sf_dir)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_arima_models",
-        os.path.basename(os.path.normpath(sf_dir)),
-    )
+    path = scratch_store("arima_models", sf_dir)
     save_models(train_arima_models(ticks), path)
     scored = score_arima_1step(load_models(spark, path))
     fc1 = u2_arima_forecast_full(spark, sf_dir).filter(F.col("step") == 1).select(
@@ -1450,12 +1437,6 @@ def emb8_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins it TRUE.  Recall@10 for this exact codebook/probe config is
     already hash-gated by ``emb5_ivf_trained_recall``; repeating the
     brute-force pass here would only re-buy that answer for ~1.5 s."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..operators.similarity import build_ivf_index, ivf_topk, search_ivf_index
     from .fixtures import shared_kmeans_fit
 
@@ -1468,16 +1449,7 @@ def emb8_ivf_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pays the converged fit there).  Session-memoized (plans/fixtures,
     # r18 optimization) — bit-identical to kmeans_fit(emb, k=8, n_iter=1).
     cents = shared_kmeans_fit(spark, sf_dir, k=8, n_iter=1)
-    # per-run unique path: two concurrent runs (parallel test workers, the
-    # driver's interleaved bench repeats) must not overwrite each other's
-    # index mid-search.  Cleanup is atexit — the returned frame reads the
-    # index lazily, so the directory must outlive this function.
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_ivf_index",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_store("ivf_index", sf_dir)
     build_ivf_index(emb, cents, path)
     from_index = search_ivf_index(spark, path, queries_df, k=10, n_probe=7)
     fresh = ivf_topk(queries_df, emb, cents, k=10, n_probe=7)
@@ -1511,12 +1483,6 @@ def emb10_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     design: three update passes build the index AND the independent
     in-memory twin re-scores the corpus for the gate — the dd9/emb8
     two-pass-verification league."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..operators.similarity import (
         init_ivf_index,
         ivf_topk,
@@ -1532,12 +1498,7 @@ def emb10_incremental_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session-memoized league fit (plans/fixtures, r18 optimization) —
     # bit-identical to kmeans_fit(emb, k=8, n_iter=1)
     cents = shared_kmeans_fit(spark, sf_dir, k=8, n_iter=1)
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_ivf_incr",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_store("ivf_incr", sf_dir)
     init_ivf_index(cents, path)
     b1 = emb.filter("vec_id % 2 = 0")
     b2 = emb.filter("vec_id % 2 = 1")
@@ -1672,12 +1633,6 @@ def txt9_bpe_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     column, computed in-plan, oracle pins TRUE).  This is the 100 TB
     steady-state tokenization shape: per batch, segmentation work
     proportional to NEW vocabulary only."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..operators.bpe import (
         apply_bpe,
         apply_bpe_with_table,
@@ -1689,12 +1644,7 @@ def txt9_bpe_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges = train_bpe_merges(docs, n_merges=20)
     b1 = docs.filter("doc_id % 2 = 0")
     b2 = docs.filter("doc_id % 2 = 1")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_segmap",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_store("segmap", sf_dir)
     m1 = update_segmentation_table(b1, merges, path)
     m2 = update_segmentation_table(b2, merges, path)
     tot_table = (
@@ -1725,12 +1675,6 @@ def dd9_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dedup family: steady-state ingest signatures new docs only, so
     per-batch cost is independent of corpus size.  Reference analogue:
     the producer's seen-set dedup cache (producer/producer.py:244-251)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..operators.dedup import (
         candidate_pairs_from_table,
         minhash_candidate_pairs,
@@ -1740,12 +1684,7 @@ def dd9_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     b1 = docs.filter("doc_id % 2 = 0")
     b2 = docs.filter("doc_id % 2 = 1")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_sigtab",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_store("sigtab", sf_dir)
     m1 = update_signature_table(b1, path)
     m2 = update_signature_table(b2, path)
     m3 = update_signature_table(b1, path)  # replay: must append nothing
@@ -1882,12 +1821,6 @@ def dd11_incremental_decontamination(spark: SparkSession, sf_dir: str) -> DataFr
     proportional to NEW eval material, not the accumulated test corpus.
     Reference analogue: the producer's exists-check before insert
     (producer/producer.py:368-380)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..operators.dedup import (
         DECONTAMINATION_NGRAM,
         contaminated_docs_from_table,
@@ -1903,12 +1836,7 @@ def dd11_incremental_decontamination(spark: SparkSession, sf_dir: str) -> DataFr
     train = docs.filter(bucket < SPLIT_BOUNDS["train"][1])
     t1 = test.filter("doc_id % 2 = 0")
     t2 = test.filter("doc_id % 2 = 1")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_testshingles",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_store("testshingles", sf_dir)
     m1 = update_test_shingle_table(t1, path)
     m2 = update_test_shingle_table(t2, path)
     m3 = update_test_shingle_table(t1, path)  # replay: must append nothing
@@ -1976,12 +1904,6 @@ def dd12_neardup_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     one full-outer-join action (gate column; oracle recomputes the whole
     banding independently in DuckDB).  Reference analogue: the same
     exists-check shape as dd10/dd11 (producer/producer.py:368-380)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..operators.dedup import (
         DECON_BAND_SIZE,
         DECON_PLANT_BASE,
@@ -2014,12 +1936,7 @@ def dd12_neardup_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     train_all = train.unionByName(planted)
     t1 = test.filter("doc_id % 2 = 0")
     t2 = test.filter("doc_id % 2 = 1")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_testbands",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_store("testbands", sf_dir)
     kw = dict(band_size=DECON_BAND_SIZE)
     update_signature_table(t1, path, **kw)
     update_signature_table(t2, path, **kw)
@@ -2095,11 +2012,7 @@ def mm10_crossmodal_decontamination(spark: SparkSession, sf_dir: str) -> DataFra
     accumulated table must equal a one-shot build, checked in-plan
     (gate column).  Reference analogue: the same exists-check shape
     (producer/producer.py:368-380) on perceptual keys."""
-    import atexit
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from ..operators.dedup import DECON_PLANT_BASE, DECON_PLANT_STRIDE
     from ..operators.multimodal import (
@@ -2126,12 +2039,7 @@ def mm10_crossmodal_decontamination(spark: SparkSession, sf_dir: str) -> DataFra
     hashed_train = image_dhash(train_media.unionByName(planted)).select(
         "doc_id", "dhash"
     )
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_mediafp",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = scratch_store("mediafp", sf_dir)
     path = os.path.join(root, "incremental")
     update_media_fingerprint_table(hashed_test.filter("doc_id % 2 = 0"), path)
     update_media_fingerprint_table(hashed_test.filter("doc_id % 2 = 1"), path)
@@ -2197,11 +2105,7 @@ def mm11_triad_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     derivability (mm7/mm8/mm10's pattern).  Reference analogue: the
     exists-check shape (producer/producer.py:368-380) on perceptual
     keys across every asset type the pipeline carries."""
-    import atexit
     import os
-    import shutil
-    import tempfile
-    import uuid
 
     from ..operators.dedup import DECON_PLANT_BASE, DECON_PLANT_STRIDE
     from ..operators.multimodal import (
@@ -2268,12 +2172,7 @@ def mm11_triad_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hashed_train = triad(train_docs, "doc_id").unionByName(planted)
 
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_triadfp",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = scratch_store("triadfp", sf_dir)
     path = os.path.join(root, "table")
     update_media_fingerprint_table(
         hashed_test.filter("media_id % 8 < 4"), path, "media_id", "fp64"
@@ -2319,12 +2218,6 @@ def emb14_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes-as-string) tuples (gate column; oracle pins TRUE and the
     batch counts).  Reference analogue: the producer's exists-check
     before insert (producer/producer.py:368-380)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..operators.similarity import (
         init_ivfpq_index,
         ivfpq_encode,
@@ -2335,12 +2228,7 @@ def emb14_incremental_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     b1 = emb.filter("vec_id % 2 = 0")
     b2 = emb.filter("vec_id % 2 = 1")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_ivfpqtab",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_store("ivfpqtab", sf_dir)
     # n_iter=0 (seed-only quantizers): the gate is accumulated ≡ one-shot
     # under the SAME quantizers, so codebook QUALITY is irrelevant to
     # what it checks (recall quality is emb13's gate) — every Lloyd pass
@@ -2405,12 +2293,6 @@ def dd13_compacted_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay_zero_after_compaction (the anti-join still sees every id),
     and n_rows — the exact distinct (doc, 13-gram) count the oracle
     re-derives in DuckDB from the same split + shingle machinery."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..maintenance import compact_doc_keyed_table
     from ..operators.dedup import update_test_shingle_table
     from ..operators.sampling import SPLIT_BOUNDS, hash_bucket_col
@@ -2419,12 +2301,7 @@ def dd13_compacted_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = hash_bucket_col()
     lo, hi = SPLIT_BOUNDS["test"]
     test = docs.filter((bucket >= lo) & (bucket < hi)).select("doc_id", "text")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_compacttab",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_store("compacttab", sf_dir)
     for k in range(3):
         update_test_shingle_table(
             test.filter(f"doc_id % 3 = {k}").repartition(4), path
@@ -2616,12 +2493,6 @@ def emb12_incremental_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     RAM-resident serving tier ingests 8-byte codes per new vector and
     never rewrites old ones.  Reference analogue: the producer's
     exists-check before insert (producer/producer.py:368-380)."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..operators.similarity import (
         init_pq_index,
         pq_encode,
@@ -2632,12 +2503,7 @@ def emb12_incremental_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     b1 = emb.filter("vec_id % 2 = 0")
     b2 = emb.filter("vec_id % 2 = 1")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_pqtab",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_store("pqtab", sf_dir)
     # session-memoized league fit (plans/fixtures, r18 optimization) —
     # bit-identical to the default pq_fit(emb)
     cbs = shared_pq_fit(spark, sf_dir)

@@ -41,6 +41,7 @@ from .dialect import (
     tok_hash,
     transform,
 )
+from .fixtures import scratch_store
 from .queries import QUERIES
 from ..sources.readers import read_parquet_cached_schema as _read_pq
 
@@ -2251,24 +2252,13 @@ def _txt19_incremental_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame
     docs being cleaned).  The driver hash pins table-driven cleaning ≡
     an independent one-shot recompute — per-doc accounting AND rebuilt
     text — plus the replay-zero flag."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..operators.dedup import (
         span_dedup_from_table,
         update_test_shingle_table,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_spantab",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_store("spantab", sf_dir)
     for r in range(3):
         update_test_shingle_table(docs.filter(F.col("doc_id") % 3 == r), path)
     replay = update_test_shingle_table(
@@ -4010,24 +4000,13 @@ def _txt23_incremental_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     not to the accumulated corpus — completing the incremental-twin
     family across words (txt9), docs (dd9), vectors (emb10), test
     n-grams (dd11) with the first MERGE-maintained member."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..operators.text import update_bm25_postings
 
     docs = load_table(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("documents")
     b1 = docs.filter("doc_id % 2 = 0")
     b2 = docs.filter("doc_id % 2 = 1")
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_bm25",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, path, ignore_errors=True)
+    path = scratch_store("bm25", sf_dir)
     m1 = update_bm25_postings(b1, path, batch_id=1)
     m2 = update_bm25_postings(b2, path, batch_id=2)
     m3 = update_bm25_postings(b1, path, batch_id=1)  # at-least-once replay
@@ -5133,12 +5112,6 @@ def _sp21_incremental_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full corpus (replaying era A exercises the anti-join
     idempotence; era B is the genuinely-new mass), manifest read from
     the physical shard partitions."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..operators.text import (
         curriculum_manifest,
         init_curriculum_store,
@@ -5146,12 +5119,7 @@ def _sp21_incremental_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents").filter("text IS NOT NULL")
-    root = os.path.join(
-        tempfile.gettempdir(),
-        "real_time_stock_market_data_pipeline_spark_sp21",
-        f"{os.path.basename(os.path.normpath(sf_dir))}-{uuid.uuid4().hex}",
-    )
-    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    root = scratch_store("sp21", sf_dir)
     init_curriculum_store(spark, docs.filter("doc_id % 5 <> 4"), root)
     update_curriculum_shards(spark, docs, root)
     return curriculum_manifest(spark, root)

@@ -630,7 +630,9 @@ def test_read_if_exists_heals_interrupted_first_write(spark, tmp_path):
     assert read_parquet_if_exists(spark, good).count() == 3
 
 
-def test_sink_auto_compaction_bounds_files_long_run(spark, sf_dir, tmp_path):
+def test_sink_auto_compaction_bounds_files_long_run(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """The r10 verdict's item 4: compact_doc_keyed_table existed but
     nothing SCHEDULED it, so a long-lived sink still accreted one file
     set per batch.  The sinks now call maintenance.maybe_compact_table
@@ -654,7 +656,8 @@ def test_sink_auto_compaction_bounds_files_long_run(spark, sf_dir, tmp_path):
     train = docs.filter(b < SPLIT_BOUNDS["train"][1]).select("doc_id", "text")
 
     path = str(tmp_path / "shingletab_auto")
-    write_batch = dedup.test_shingle_table_sink(path, auto_compact_files=6)
+    monkeypatch.setattr(mnt, "AUTO_COMPACT_FILES", 6)
+    write_batch = dedup.test_shingle_table_sink(path)
 
     def data_files() -> int:
         return sum(
@@ -940,3 +943,123 @@ def test_observed_count_in_update_replay_keeps_n_batch(spark, tmp_path):
     assert first == {"n_batch": n, "n_new": n}
     replay = update_pq_codes(spark, emb, path)
     assert replay == {"n_batch": n, "n_new": 0}
+
+
+def test_require_local_path_shares_the_readers_uri_rule():
+    """The swap and the readers agree on what a URI is (a 2+ character
+    scheme): a Windows drive path is local, a real scheme is refused."""
+    import real_time_stock_market_data_pipeline_spark.maintenance as mnt
+
+    mnt._require_local_path(r"C:\tables\t", "op")
+    for uri in ("s3a://b/t", "file:///x"):
+        with pytest.raises(ValueError, match="driver-local"):
+            mnt._require_local_path(uri, "op")
+
+
+def _tree(root):
+    """{relative file path: bytes} under ``root`` (empty when absent)."""
+    import os
+
+    out = {}
+    for d, _, files in os.walk(root):
+        for f in files:
+            p = os.path.join(d, f)
+            with open(p, "rb") as fh:
+                out[os.path.relpath(p, root)] = fh.read()
+    return out
+
+
+def _swap_fixture(base, entries):
+    """A store and a fully written staging for one arm of ``_move_in``:
+    the whole-store arm replaces a flat store; the entries arm replaces
+    ``k=1``, adds ``k=4`` and leaves ``k=2`` untouched."""
+    import os
+
+    import real_time_stock_market_data_pipeline_spark.maintenance as mnt
+
+    def put(p, data):
+        os.makedirs(os.path.dirname(p), exist_ok=True)
+        with open(p, "wb") as fh:
+            fh.write(data)
+
+    path = os.path.join(base, "store")
+    staging = mnt.staging_dir(path)
+    if entries is None:
+        put(os.path.join(path, "part-0.parquet"), b"old")
+        put(os.path.join(staging, "part-0.parquet"), b"new")
+        put(os.path.join(staging, "part-1.parquet"), b"new1")
+    else:
+        for e in ("k=1", "k=2"):
+            put(os.path.join(path, e, "part-0.parquet"), b"old" + e.encode())
+        for e in entries:
+            put(os.path.join(staging, e, "part-0.parquet"), b"new" + e.encode())
+    return path, staging
+
+
+# (arm, kill point): "mark" dies just before / after the commit marker,
+# an int N fails the Nth os.rename, "cleanup" fails the first rmtree
+_WHOLE, _ENTRIES = None, ["k=1", "k=4"]
+_SWAP_KILLS = (
+    [("whole", k) for k in ("before_mark", "after_mark", 1, 2, "cleanup")]
+    + [("entries", k) for k in ("before_mark", "after_mark", 1, 2, 3, "cleanup")]
+)
+
+
+@pytest.mark.parametrize("arm,kill", _SWAP_KILLS)
+def test_swap_killed_anywhere_heals_to_pre_or_post_state(
+    tmp_path, monkeypatch, arm, kill
+):
+    """Failure injection for the one store swap, both arms of
+    ``_move_in``: kill it before or after the commit marker, at every
+    rename (after the displace, after each entry's move) or in cleanup,
+    then heal.  The store is exactly the pre-swap state (no marker:
+    rolled back) or exactly the post-swap state of an uninterrupted
+    twin (marked: rolled forward), never a mix, and no sibling is left.
+    (An entry that is displaced without a staged replacement, a purge's
+    zero-survivor list, is healed by its tombstones instead:
+    tests/test_takedown.py.)"""
+    import os
+
+    import real_time_stock_market_data_pipeline_spark.maintenance as mnt
+
+    entries = _WHOLE if arm == "whole" else _ENTRIES
+    twin_dir, crash_dir = tmp_path / "twin", tmp_path / "crash"
+    twin_dir.mkdir()
+    crash_dir.mkdir()
+    twin, twin_staging = _swap_fixture(str(twin_dir), entries)
+    mnt.swap_in(twin, twin_staging, entries)
+    post = _tree(twin)
+    path, staging = _swap_fixture(str(crash_dir), entries)
+    pre = _tree(path)
+    assert pre != post
+
+    real_mark, real_rename = mnt._mark_staging_complete, os.rename
+    renames = {"n": 0}
+
+    def mark(s):
+        if kill == "before_mark":
+            raise RuntimeError("killed")
+        real_mark(s)
+        if kill == "after_mark":
+            raise RuntimeError("killed")
+
+    def rename(src, dst):
+        renames["n"] += 1
+        if renames["n"] == kill:
+            raise RuntimeError("killed")
+        real_rename(src, dst)
+
+    def rmtree(*a, **k):
+        raise RuntimeError("killed")
+
+    monkeypatch.setattr(mnt, "_mark_staging_complete", mark)
+    monkeypatch.setattr(mnt.os, "rename", rename)
+    if kill == "cleanup":
+        monkeypatch.setattr(mnt.shutil, "rmtree", rmtree)
+    with pytest.raises(RuntimeError, match="killed"):
+        mnt.swap_in(path, staging, entries)
+    monkeypatch.undo()
+
+    assert mnt.heal_if_interrupted(path)  # the kill left something to heal
+    assert _tree(path) == (pre if kill == "before_mark" else post)
+    assert sorted(os.listdir(crash_dir)) == ["store"]

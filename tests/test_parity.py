@@ -19,16 +19,14 @@ def duck(sf_dir):
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, sf_dir, duck, name):
-    res = check_query(name, QUERIES[name](spark, sf_dir), ORACLES.get(name), duck)
+    res = check_query(name, QUERIES[name](spark, sf_dir), ORACLES[name], duck)
     assert res.ok, f"{name}: {res.errors}"
 
 
-def test_every_query_has_oracle_or_is_documented():
-    # queries without an oracle get only the weaker rows-only check;
-    # keep that set explicit so it never grows silently.
-    rows_only = set(QUERIES) - set(ORACLES)
-    allowed = {name for name in rows_only if name.startswith(("u2_", "u3_", "u4_", "t_"))}
-    assert rows_only == allowed, f"missing oracles: {rows_only - allowed}"
+def test_every_query_has_an_oracle():
+    # check_query has no rows-only fallback: every query is compared
+    # against its DuckDB oracle, and every oracle names a query
+    assert set(QUERIES) == set(ORACLES)
 
 
 def test_registration_order_matches_rotate_window():

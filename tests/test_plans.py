@@ -583,6 +583,35 @@ def test_threads_start_only_in_the_concurrency_module():
             )
 
 
+def test_store_swaps_only_in_maintenance():
+    """A store swap has one implementation, ``maintenance.swap_in``: only
+    that module names, renames or marks a store directory, so a protocol
+    fix reaches every swap and ``recover_upsert`` repairs them all by one
+    rule.  Scratch stores have one helper, ``plans.fixtures.scratch_store``.
+    Pin the package free of hand-written copies of either."""
+    import pathlib
+
+    import real_time_stock_market_data_pipeline_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    rules = {
+        root / "maintenance.py": (
+            "os.rename", "__staging_", "__old_", "_mark_staging_complete(",
+        ),
+        root / "plans" / "fixtures.py": ("tempfile", "atexit"),
+    }
+    for owner, pats in rules.items():
+        for path in sorted(root.rglob("*.py")):
+            if path == owner:
+                continue
+            src = path.read_text()
+            for pat in pats:
+                assert pat not in src, (
+                    f"{pat!r} entered {path.relative_to(root)} — use "
+                    f"{owner.relative_to(root)} instead"
+                )
+
+
 def test_session_memo_lives_only_in_store_cache():
     """Caching has one mechanism, ``store_cache``: one dict keyed by the
     application id, one file witness, one rule per entry kind.  A memo
