@@ -696,6 +696,7 @@ def search_ivf_index(
     from pyspark.sql import Window
 
     from ..maintenance import heal_if_interrupted
+    from .takedown import store_tombstone_path, without_tombstones
 
     # heal-before-read (r12 discipline), now at the index ROOT too: a
     # rebuild_ivf_index killed mid-swap leaves the whole index displaced
@@ -725,16 +726,14 @@ def search_ivf_index(
     probed_ids = sorted(
         r[0] for r in probes.select(centroid_id).distinct().collect()
     )
-    lists = all_lists.filter(F.col(centroid_id).isin(probed_ids))
     # tombstone-aware serving (delete_from_ivf_index): deleted vectors
     # drop out before scoring, so results equal an index that never
     # contained them (assignment is per-vector pure, so deletion
-    # commutes).  Deletion-sized broadcast; absent = zero plan change.
-    tombs = read_parquet_if_exists(spark, f"{path}/tombstones")
-    if tombs is not None:
-        lists = lists.join(
-            F.broadcast(tombs.select(vec_id).distinct()), vec_id, "left_anti"
-        )
+    # commutes)
+    lists = without_tombstones(
+        all_lists.filter(F.col(centroid_id).isin(probed_ids)),
+        spark, store_tombstone_path(path), vec_id,
+    )
     if where is not None:
         lists = lists.filter(where)
     scored = (
@@ -1916,6 +1915,7 @@ def search_ivfpq_index(
 
     The probed-ids collect is bounded by n_lists, never the corpus."""
     from ..maintenance import heal_if_interrupted
+    from .takedown import store_tombstone_path, without_tombstones
 
     # heal-before-read at the index ROOT: a rebuild_ivfpq_index killed
     # mid-swap rolls forward here; for_read preserves a live writer's
@@ -1945,17 +1945,14 @@ def search_ivfpq_index(
     probed_ids = sorted(
         r[0] for r in probes.select("list_id").distinct().collect()
     )
-    index = all_index.filter(F.col("list_id").isin(probed_ids))
     # tombstone-aware serving (delete_from_ivfpq_index): deleted vectors
     # drop out BEFORE shortlist selection, so results equal an index that
     # never contained them (encoding is per-vector, so deletion commutes
-    # — emb21's in-plan twin gate).  The table is deletion-sized and
-    # broadcast; absent table = zero plan change.
-    tombs = read_parquet_if_exists(spark, f"{path}/tombstones")
-    if tombs is not None:
-        index = index.join(
-            F.broadcast(tombs.select(vec_id).distinct()), vec_id, "left_anti"
-        )
+    # — emb21's in-plan twin gate)
+    index = without_tombstones(
+        all_index.filter(F.col("list_id").isin(probed_ids)),
+        spark, store_tombstone_path(path), vec_id,
+    )
     if where is not None:
         index = index.filter(where)
     return ivfpq_search(
@@ -1973,8 +1970,8 @@ def delete_from_ivfpq_index(
     """Logically DELETE vectors from the persisted IVF-PQ serving index —
     the retraction/right-to-be-forgotten step the insert-only ingest
     contract cannot express.  Deletions append to an insert-only
-    TOMBSTONE table at ``{path}/tombstones``; ``search_ivfpq_index``
-    anti-joins it (broadcast, deletion-sized) so a tombstoned vector
+    TOMBSTONE table inside the index root (``takedown.append_tombstones``);
+    ``search_ivfpq_index`` anti-joins it so a tombstoned vector
     can never be served, and ``purge_ivfpq_tombstones`` later removes
     the codes physically.  Only ids PRESENT in the index tombstone
     (semi-join): an id the ingest contract never admitted has nothing
@@ -1995,24 +1992,12 @@ def delete_from_ivfpq_index(
     column + one anti-join against the deletion-sized tombstone table +
     an append ∝ the batch.  Nothing corpus-sized is rewritten — that is
     purge's (amortized, partition-pruned) job."""
-    from ..maintenance import heal_if_interrupted
-    from ..sources.readers import read_parquet_if_exists
-    from .takedown import _append_new_tombstones
+    from .takedown import append_tombstones, store_tombstone_path
 
-    heal_if_interrupted(path)
-    heal_if_interrupted(f"{path}/index")
-    batch = ids.select(vec_id).distinct()
-    # metric count overlaps the semi-join/append chain (§2.6)
-    with overlap() as o:
-        n_batch = o.submit("delete_from_ivfpq_index/n_batch", batch.count)
-        index = read_parquet_if_exists(spark, f"{path}/index")
-        if index is None:
-            return {"n_batch_ids": n_batch.result(), "n_new_tombstones": 0}
-        present = batch.join(index.select(vec_id), vec_id, "left_semi")
-        n_new = _append_new_tombstones(
-            spark, present, f"{path}/tombstones", vec_id
-        )
-        return {"n_batch_ids": n_batch.result(), "n_new_tombstones": n_new}
+    return append_tombstones(
+        spark, ids, f"{path}/index", store_tombstone_path(path), vec_id,
+        "delete_from_ivfpq_index", heal=(path, f"{path}/index"),
+    )
 
 
 def purge_ivfpq_tombstones(
@@ -2053,29 +2038,17 @@ def delete_from_ivf_index(
     r16 verdict flagged as the family's symmetry gap: the serving-tier
     IVF-PQ index had deletion (``delete_from_ivfpq_index``) while the
     flat rung did not.  Identical contract: ids present in the lists
-    tombstone into ``{path}/tombstones`` (semi-join, replay-idempotent
+    tombstone into the index root (semi-join, replay-idempotent
     via the anti-join), ``search_ivf_index`` anti-joins them so a
     deleted vector can never be served, ``purge_ivf_tombstones`` later
     removes the rows physically.  Returns ``{"n_batch_ids",
     "n_new_tombstones"}``."""
-    from ..maintenance import heal_if_interrupted
-    from ..sources.readers import read_parquet_if_exists
-    from .takedown import _append_new_tombstones
+    from .takedown import append_tombstones, store_tombstone_path
 
-    heal_if_interrupted(path)
-    heal_if_interrupted(f"{path}/lists")
-    batch = ids.select(vec_id).distinct()
-    # metric count overlaps the semi-join/append chain (§2.6)
-    with overlap() as o:
-        n_batch = o.submit("delete_from_ivf_index/n_batch", batch.count)
-        lists = read_parquet_if_exists(spark, f"{path}/lists")
-        if lists is None:
-            return {"n_batch_ids": n_batch.result(), "n_new_tombstones": 0}
-        present = batch.join(lists.select(vec_id), vec_id, "left_semi")
-        n_new = _append_new_tombstones(
-            spark, present, f"{path}/tombstones", vec_id
-        )
-        return {"n_batch_ids": n_batch.result(), "n_new_tombstones": n_new}
+    return append_tombstones(
+        spark, ids, f"{path}/lists", store_tombstone_path(path), vec_id,
+        "delete_from_ivf_index", heal=(path, f"{path}/lists"),
+    )
 
 
 def purge_ivf_tombstones(
@@ -2107,7 +2080,7 @@ def _purge_partitioned_tombstones(
     op_name: str,
 ) -> dict[str, int]:
     """Shared partition-pruned purge over a hive-partitioned index table
-    with a ``{root}/tombstones`` sibling — the body behind
+    with a tombstone table inside ``root`` — the body behind
     ``purge_ivfpq_tombstones`` (partitioned on ``list_id``) and
     ``purge_ivf_tombstones`` (partitioned on ``centroid_id``); both
     stores are doc-keyed under a partition column, so the staged-
@@ -2122,11 +2095,13 @@ def _purge_partitioned_tombstones(
         swap_in,
     )
     from ..sources.readers import read_parquet_if_exists
+    from .takedown import store_tombstone_path
 
     _require_local_path(index_path, op_name)
     heal_if_interrupted(root)
     heal_if_interrupted(index_path)
-    tombs = read_parquet_if_exists(spark, f"{root}/tombstones")
+    t_path = store_tombstone_path(root)
+    tombs = read_parquet_if_exists(spark, t_path)
     if tombs is None:
         return {"n_purged": 0, "n_lists_rewritten": 0}
     t_ids = tombs.select(vec_id).distinct()
@@ -2134,7 +2109,7 @@ def _purge_partitioned_tombstones(
     if index is None:
         # a prior zero-survivor purge removed the whole table; the
         # standing tombstones are its recovery signal — clear them now
-        shutil.rmtree(f"{root}/tombstones", ignore_errors=True)
+        shutil.rmtree(t_path, ignore_errors=True)
         return {"n_purged": 0, "n_lists_rewritten": 0}
     doomed = index.join(t_ids, vec_id, "left_semi")
     # touched partitions AND the purge metric in ONE job (guide §1.2,
@@ -2179,7 +2154,7 @@ def _purge_partitioned_tombstones(
             # a touched list with survivors is re-installed from the
             # writer-formatted staged dir; one with none stays removed
             swap_in(index_path, staging, [f"{part_col}={lid}" for lid in touched])
-    shutil.rmtree(f"{root}/tombstones", ignore_errors=True)
+    shutil.rmtree(t_path, ignore_errors=True)
     return {"n_purged": int(n_purged), "n_lists_rewritten": len(touched)}
 
 

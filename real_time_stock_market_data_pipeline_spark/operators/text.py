@@ -372,8 +372,8 @@ def takedown_bm25_postings(
 ) -> dict[str, int]:
     """Logically DELETE documents from the BM25 posting tables — the
     takedown arm of txt23's merge-maintained state (``operators.
-    takedown`` module note).  Ids present in the tf table enter
-    ``{path}/tombstones`` stamped with a monotonically increasing
+    takedown`` module note).  Ids present in the tf table enter the
+    root's tombstone table stamped with a monotonically increasing
     TAKEDOWN EPOCH; ``bm25_tf_minus_tombstones`` excludes them from
     serving immediately, and ``purge_bm25_postings`` later removes the
     tf rows and DECREMENTS the df table (the family's first
@@ -391,49 +391,31 @@ def takedown_bm25_postings(
     "n_new_tombstones"}``."""
     import os
 
-    from ..maintenance import (
-        _require_local_path,
-        heal_if_interrupted,
-    )
-    from ..sources.readers import read_parquet_if_exists
+    from ..maintenance import _require_local_path
+    from .takedown import append_tombstones, store_tombstone_path
 
     tf_path = os.path.join(path, "tf")
     df_path = os.path.join(path, "df")
     _require_local_path(df_path, "takedown_bm25_postings")
-    heal_if_interrupted(tf_path)
-    heal_if_interrupted(df_path)
-    t_path = os.path.join(path, "tombstones")
-    batch = ids.select(id_col).distinct()
-    # metric count overlaps the semi-join/epoch/append chain (§2.6)
-    with overlap() as o:
-        n_batch = o.submit("takedown_bm25_postings/n_batch", batch.count)
-        tf = read_parquet_if_exists(spark, tf_path)
-        if tf is None:
-            return {"n_batch_ids": n_batch.result(), "n_new_tombstones": 0}
-        present = batch.join(tf.select(id_col), id_col, "left_semi")
-        standing = read_parquet_if_exists(spark, t_path)
+
+    def stamp(new: DataFrame, standing: DataFrame | None) -> DataFrame:
+        # one epoch past both the committed _td_hwm and every standing one
         epoch = _read_bm25_hwm(df_path, BM25_TD_HWM_FILE)
         if standing is not None:
             prior = standing.agg(F.max("td_epoch")).first()[0]
             epoch = max(epoch, -1 if prior is None else int(prior))
-            present = present.join(
-                standing.select(id_col).distinct(), id_col, "left_anti"
-            )
-        new = present.withColumn("td_epoch", F.lit(epoch + 1).cast("bigint"))
-        new = new.persist()
-        try:
-            n_new = new.count()
-            if n_new:
-                new.write.mode("append").parquet(t_path)
-        finally:
-            new.unpersist()
-        return {"n_batch_ids": n_batch.result(), "n_new_tombstones": n_new}
+        return new.withColumn("td_epoch", F.lit(epoch + 1).cast("bigint"))
+
+    return append_tombstones(
+        spark, ids, tf_path, store_tombstone_path(path), id_col,
+        "takedown_bm25_postings", heal=(tf_path, df_path), stamp=stamp,
+    )
 
 
 def bm25_tf_minus_tombstones(spark, path: str, id_col: str = "doc_id"):
     """The tf table with tombstoned docs excluded — the read-side serving
-    contract between takedown and purge (broadcast anti-join,
-    deletion-sized; zero plan change with no tombstones).  The df table
+    contract between takedown and purge (``takedown.without_tombstones``;
+    zero plan change with no tombstones).  The df table
     stays at its pre-takedown counts until the purge applies the
     decrements — documented staleness that only perturbs idf weighting,
     never resurfaces a deleted doc; post-purge df is exact
@@ -442,16 +424,12 @@ def bm25_tf_minus_tombstones(spark, path: str, id_col: str = "doc_id"):
     import os
 
     from ..sources.readers import read_parquet_if_exists
+    from .takedown import store_tombstone_path, without_tombstones
 
     tf = read_parquet_if_exists(spark, os.path.join(path, "tf"))
     if tf is None:
         return None
-    tombs = read_parquet_if_exists(spark, os.path.join(path, "tombstones"))
-    if tombs is None:
-        return tf
-    return tf.join(
-        F.broadcast(tombs.select(id_col).distinct()), id_col, "left_anti"
-    ).select(*tf.columns)
+    return without_tombstones(tf, spark, store_tombstone_path(path), id_col)
 
 
 def read_bm25_df(spark, path: str) -> DataFrame:
@@ -483,8 +461,9 @@ def purge_bm25_postings(spark, path: str, id_col: str = "doc_id") -> dict:
        ``_hwm``, preserved) commit atomically with the swap, so a
        replayed purge finds no pending epochs and skips the merge —
        decrements can never double-apply.
-    2. tf rewrite SECOND: drop the tombstoned docs' rows (flat swap;
-       naturally idempotent — a replay's anti-join removes nothing).
+    2. tf rewrite SECOND: drop the tombstoned docs' rows
+       (``takedown.purge_flat``; naturally idempotent — a replay's
+       anti-join removes nothing).
     3. tombstones cleared LAST — the standing recovery signal for every
        crash window above.
 
@@ -499,20 +478,20 @@ def purge_bm25_postings(spark, path: str, id_col: str = "doc_id") -> dict:
     import shutil
 
     from ..maintenance import (
-        _flat_swap,
         _require_local_path,
         heal_if_interrupted,
         staging_dir,
         swap_in,
     )
     from ..sources.readers import read_parquet_if_exists
+    from .takedown import purge_flat, store_tombstone_path
 
     tf_path = os.path.join(path, "tf")
     df_path = os.path.join(path, "df")
     _require_local_path(df_path, "purge_bm25_postings")
     heal_if_interrupted(tf_path)
     heal_if_interrupted(df_path)
-    t_path = os.path.join(path, "tombstones")
+    t_path = store_tombstone_path(path)
     tombs = read_parquet_if_exists(spark, t_path)
     if tombs is None:
         return {"n_purged_tf": 0, "n_df_rows_decremented": 0,
@@ -522,18 +501,13 @@ def purge_bm25_postings(spark, path: str, id_col: str = "doc_id") -> dict:
         shutil.rmtree(t_path, ignore_errors=True)
         return {"n_purged_tf": 0, "n_df_rows_decremented": 0,
                 "n_df_rows_dropped": 0}
-    t_ids = tombs.select(id_col).distinct()
     hwm = _read_bm25_hwm(df_path, BM25_TD_HWM_FILE)
     pending = tombs.filter(F.col("td_epoch") > hwm)
     n_dec = n_drop = 0
     existing = read_parquet_if_exists(spark, df_path)
     if existing is not None and pending.first() is not None:
         deltas = (
-            tf.join(
-                F.broadcast(pending.select(id_col).distinct()),
-                id_col,
-                "left_semi",
-            )
+            tf.join(pending.select(id_col).distinct(), id_col, "left_semi")
             .groupBy("tok")
             .agg(F.count(F.lit(1)).cast("bigint").alias("delta"))
         )
@@ -566,18 +540,7 @@ def purge_bm25_postings(spark, path: str, id_col: str = "doc_id") -> dict:
         with open(os.path.join(staging, BM25_TD_HWM_FILE), "w") as f:
             f.write(str(new_hwm))
         swap_in(df_path, staging)
-    doomed = tf.join(t_ids, id_col, "left_semi")
-    n_tf = doomed.count()
-    if n_tf:
-        if n_tf == tf.count():
-            shutil.rmtree(tf_path, ignore_errors=True)
-        else:
-            _flat_swap(
-                tf_path,
-                tf.join(F.broadcast(t_ids), id_col, "left_anti").select(
-                    *tf.columns
-                ),
-            )
+    n_tf = purge_flat(spark, tf_path, t_path, id_col)
     shutil.rmtree(t_path, ignore_errors=True)
     return {"n_purged_tf": int(n_tf), "n_df_rows_decremented": int(n_dec),
             "n_df_rows_dropped": int(n_drop)}
@@ -868,25 +831,19 @@ def load_curriculum_model(spark, path: str) -> tuple[DataFrame, DataFrame, int]:
 def read_curriculum_docs(spark, path: str) -> DataFrame:
     """Tombstone-aware doc-level read of the curriculum store — what a
     training loader scans (one ``shard_id=`` directory per phase,
-    directory-pruned): heal-before-read, then the broadcast anti-join
-    against standing tombstones (zero plan change while none exist)."""
+    directory-pruned): heal-before-read, then the anti-join against
+    standing tombstones (zero plan change while none exist)."""
     from ..maintenance import heal_if_interrupted
-    from ..sources.readers import read_parquet_if_exists
+    from .takedown import store_tombstone_path, without_tombstones
 
     # root heal FIRST: rebuild_curriculum_store swaps the whole
     # model+docs tree at the root, so a mid-swap crash leaves the root
     # absent with a marked root staging pending
     heal_if_interrupted(path, for_read=True)
     heal_if_interrupted(f"{path}/docs", for_read=True)
-    docs = _read_pq(spark, f"{path}/docs")
-    tombs = read_parquet_if_exists(spark, f"{path}/tombstones")
-    if tombs is not None:
-        docs = docs.join(
-            F.broadcast(tombs.select("doc_id").distinct()),
-            "doc_id",
-            "left_anti",
-        )
-    return docs
+    return without_tombstones(
+        _read_pq(spark, f"{path}/docs"), spark, store_tombstone_path(path)
+    )
 
 
 def curriculum_manifest(spark, path: str) -> DataFrame:
@@ -1074,36 +1031,22 @@ def takedown_curriculum_store(
     """Logically DELETE documents from the curriculum store — the
     takedown arm the launch layer needs for symmetry with every other
     persisted family (operators.takedown module note).  Ids present in
-    the doc table tombstone into ``{path}/tombstones`` (semi-join,
+    the doc table tombstone into the store root (semi-join,
     replay-idempotent via the standing anti-join);
     ``curriculum_manifest`` and any loader read exclude them
-    immediately via the broadcast anti-join, and
+    immediately (``read_curriculum_docs``), and
     ``purge_curriculum_tombstones`` later removes the rows physically
     AND repairs the global rank.  Returns ``{"n_batch_ids",
     "n_new_tombstones"}``."""
-    import os as _os
+    from .takedown import append_tombstones, store_tombstone_path
 
-    from ..maintenance import heal_if_interrupted
-    from ..sources.readers import read_parquet_if_exists
-    from .takedown import _append_new_tombstones
-
-    docs_path = _os.path.join(path, "docs")
-    heal_if_interrupted(path)  # rebuild swaps the root
-    heal_if_interrupted(docs_path)
-    batch = ids.select(id_col).distinct()
-    # metric count overlaps the semi-join/append chain (§2.6)
-    with overlap() as o:
-        n_batch = o.submit("takedown_curriculum_store/n_batch", batch.count)
-        docs = read_parquet_if_exists(spark, docs_path)
-        if docs is None:
-            return {"n_batch_ids": n_batch.result(), "n_new_tombstones": 0}
-        present = batch.join(
-            docs.select(F.col("doc_id").alias(id_col)), id_col, "left_semi"
-        ).select(F.col(id_col).alias("doc_id"))
-        n_new = _append_new_tombstones(
-            spark, present, _os.path.join(path, "tombstones"), "doc_id"
-        )
-        return {"n_batch_ids": n_batch.result(), "n_new_tombstones": n_new}
+    docs_path = f"{path}/docs"
+    return append_tombstones(
+        spark, ids, docs_path, store_tombstone_path(path), id_col,
+        "takedown_curriculum_store",
+        heal=(path, docs_path),  # rebuild swaps the root
+        key="doc_id",
+    )
 
 
 def purge_curriculum_tombstones(spark, path: str) -> dict[str, int]:
@@ -1126,9 +1069,10 @@ def purge_curriculum_tombstones(spark, path: str) -> dict[str, int]:
 
     from ..maintenance import _require_local_path, heal_if_interrupted
     from ..sources.readers import read_parquet_if_exists
+    from .takedown import store_tombstone_path
 
     docs_path = _os.path.join(path, "docs")
-    t_path = _os.path.join(path, "tombstones")
+    t_path = store_tombstone_path(path)
     _require_local_path(docs_path, "purge_curriculum_tombstones")
     heal_if_interrupted(path)  # rebuild swaps the root
     heal_if_interrupted(docs_path)
@@ -1140,7 +1084,7 @@ def purge_curriculum_tombstones(spark, path: str) -> dict[str, int]:
         _shutil.rmtree(t_path, ignore_errors=True)
         return {"n_purged": 0, "n_shards_rewritten": 0}
     t_ids = tombs.select("doc_id").distinct()
-    doomed = docs.join(F.broadcast(t_ids), "doc_id", "left_semi").select(
+    doomed = docs.join(t_ids, "doc_id", "left_semi").select(
         "bucket", F.col("shard_id").cast("bigint").alias("shard_id")
     )
     # the purge metric, touched buckets AND doomed shards in ONE job
@@ -1156,7 +1100,7 @@ def purge_curriculum_tombstones(spark, path: str) -> dict[str, int]:
         return {"n_purged": 0, "n_shards_rewritten": 0}
     touched = sorted({r["bucket"] for r in per_bs})
     doomed_shards = {int(r["shard_id"]) for r in per_bs}
-    remaining = docs.join(F.broadcast(t_ids), "doc_id", "left_anti").select(
+    remaining = docs.join(t_ids, "doc_id", "left_anti").select(
         *_CURRICULUM_DOC_COLS,
         F.col("shard_id").cast("bigint").alias("old_shard"),
     )
@@ -1238,20 +1182,16 @@ def rebuild_curriculum_store(
         staging_dir,
         swap_in,
     )
-    from ..sources.readers import read_parquet_if_exists
+    from .takedown import store_tombstone_path, without_tombstones
 
     _require_local_path(path, "rebuild_curriculum_store")
     heal_if_interrupted(path)
     _require_no_orphans(path)
     heal_if_interrupted(f"{path}/docs")
-    standing = _read_pq(spark, f"{path}/docs").select("doc_id")
-    tombs = read_parquet_if_exists(spark, f"{path}/tombstones")
-    if tombs is not None:
-        standing = standing.join(
-            F.broadcast(tombs.select("doc_id").distinct()),
-            "doc_id",
-            "left_anti",
-        )
+    standing = without_tombstones(
+        _read_pq(spark, f"{path}/docs").select("doc_id"),
+        spark, store_tombstone_path(path),
+    )
     # coverage-validation counts are pure reads independent of the
     # retrain: overlap them with the train (guide §2.6, the
     # rebuild_ivfpq_index discipline) and validate before any write —

@@ -1690,6 +1690,7 @@ def _emb21_index_deletion(spark: SparkSession, sf_dir: str) -> DataFrame:
         search_ivfpq_index,
         update_ivfpq_index,
     )
+    from ..operators.takedown import store_tombstone_path
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 100 == 0).select(
@@ -1773,7 +1774,7 @@ def _emb21_index_deletion(spark: SparkSession, sf_dir: str) -> DataFrame:
     purge_ok = (
         (diff2.n_diff or 0) == 0
         and n_before - n_after == pg["n_purged"]
-        and not os.path.exists(os.path.join(path, "tombstones"))
+        and not os.path.exists(store_tombstone_path(path))
     )
     n_q = queries.count()
     return spark.createDataFrame(

@@ -896,7 +896,6 @@ def mm6_png_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build(batches):
         import numpy as np
-        import pandas as pd_
 
         for pdf in batches:
             pdf = pdf.copy()

@@ -1108,8 +1108,6 @@ def sql_capped_per_group(dialect: str) -> str:
     """SP3 — deterministic per-language cap (operators/sampling
     capped_per_group): at most 40 docs per lang, ranked by the id hash
     (stable pseudo-random, so the cut is unbiased and reproducible)."""
-    from ..operators.sampling import N_BUCKETS  # noqa: F401  (parity of constants)
-
     h = tok_hash(dialect, "CAST(doc_id AS STRING)")
     return f"""
 WITH ranked AS (

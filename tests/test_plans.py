@@ -588,7 +588,10 @@ def test_store_swaps_only_in_maintenance():
     that module names, renames or marks a store directory, so a protocol
     fix reaches every swap and ``recover_upsert`` repairs them all by one
     rule.  Scratch stores have one helper, ``plans.fixtures.scratch_store``.
-    Pin the package free of hand-written copies of either."""
+    Tombstones have one, ``operators/takedown.py``: only it spells a
+    tombstone directory, so every append, read and purge goes through
+    its shared functions.  Pin the package free of hand-written copies
+    of any of them."""
     import pathlib
 
     import real_time_stock_market_data_pipeline_spark as pkg
@@ -599,6 +602,9 @@ def test_store_swaps_only_in_maintenance():
             "os.rename", "__staging_", "__old_", "_mark_staging_complete(",
         ),
         root / "plans" / "fixtures.py": ("tempfile", "atexit"),
+        root / "operators" / "takedown.py": (
+            "/tombstones", '"tombstones"', "__tombstones",
+        ),
     }
     for owner, pats in rules.items():
         for path in sorted(root.rglob("*.py")):
@@ -1171,3 +1177,42 @@ def test_every_package_function_has_a_caller():
         if refs[name] - self_ref == 0 and name not in uncallable_here
     )
     assert not uncalled, f"nothing calls {uncalled} — delete them"
+
+
+def test_every_package_import_is_read():
+    """Every import in the package binds a name that something in its
+    scope reads: the module for a top-level import, the function (nested
+    functions included) for a local one.  An unread import is dead
+    weight, and a local one hides a stale dependency.  Re-exports in
+    ``__init__.py`` are the exemption."""
+    import ast
+    import pathlib
+
+    import real_time_stock_market_data_pipeline_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    scopes = (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+    unread = []
+
+    def check(path, scope) -> None:
+        reads = {n.id for n in ast.walk(scope) if isinstance(n, ast.Name)}
+        stack = list(ast.iter_child_nodes(scope))
+        while stack:
+            node = stack.pop()
+            if isinstance(node, scopes):
+                check(path, node)
+                continue
+            stack.extend(ast.iter_child_nodes(node))
+            if not isinstance(node, ast.Import | ast.ImportFrom):
+                continue
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            for alias in node.names:
+                bound = alias.asname or alias.name.partition(".")[0]
+                if bound not in reads:
+                    unread.append(f"{path.relative_to(root)}:{node.lineno} {bound}")
+
+    for path in sorted(root.rglob("*.py")):
+        if path.name != "__init__.py":
+            check(path, ast.parse(path.read_text(), filename=str(path)))
+    assert not unread, f"imports nothing reads: {sorted(unread)} — delete them"

@@ -105,35 +105,107 @@ def test_flat_table_all_rows_tombstoned_removes_table(spark, docs, tmp_path):
     assert [e for e in os.listdir(tmp_path) if e.startswith("sig__")] == []
 
 
-def test_flat_purge_crash_mid_swap_converges(spark, docs, tmp_path, monkeypatch):
-    """Kill the purge inside the staged swap (after the durability mark,
-    before the renames): tombstones still stand, heal rolls the staging
-    forward, and the re-run purge converges to the rebuilt state."""
-    from real_time_stock_market_data_pipeline_spark.operators.dedup import (
-        minhash_band_rows,
+# each arm of the shared flat purge (takedown.purge_flat) → the swap it
+# dies in: the semantic pairs and bm25 tf arms run second, after the
+# assigned / df swap has committed
+_FLAT_PURGE_ARMS = {
+    "doc_keyed": 1,
+    "pq_codes": 1,
+    "semantic_assigned": 1,
+    "semantic_pairs": 2,
+    "bm25_tf": 2,
+}
+
+
+def _flat_purge_arm(spark, docs, tmp_path, arm):
+    """Build one arm's store with standing tombstones; returns (purge,
+    table path, tombstone dir, the rebuilt table the purge must reach)."""
+    if arm == "doc_keyed":
+        from real_time_stock_market_data_pipeline_spark.operators.dedup import (
+            minhash_band_rows,
+        )
+
+        path = str(tmp_path / "sig")
+        update_signature_table(docs, path)
+        td.tombstone_doc_keyed_table(spark, _dels(docs), path)
+        rem = docs.filter("doc_id % 7 <> 3")
+        return (
+            lambda: td.purge_doc_keyed_table(spark, path),
+            path, td.tombstone_path(path), minhash_band_rows(rem, "doc_id", "text"),
+        )
+    if arm == "pq_codes":
+        emb = _emb(spark)
+        cbs = sim.pq_fit(emb, m=8, k=8, n_iter=1)
+        path, twin = str(tmp_path / "pq"), str(tmp_path / "pq2")
+        sim.init_pq_index(spark, cbs, path)
+        sim.update_pq_codes(spark, emb, path)
+        dels = emb.filter("vec_id % 9 = 2").select("vec_id")
+        td.takedown(spark, dels, {"pq": path}, id_col="vec_id")
+        sim.init_pq_index(spark, cbs, twin)
+        sim.update_pq_codes(spark, emb.join(dels, "vec_id", "left_anti"), twin)
+        codes = f"{path}/codes"
+        return (
+            lambda: td.purge_takedown(spark, {"pq": path}, id_col="vec_id"),
+            codes, td.tombstone_path(codes), spark.read.parquet(f"{twin}/codes"),
+        )
+    if arm.startswith("semantic_"):
+        root = str(tmp_path / "sem")
+        assigned = spark.range(20).select(
+            F.col("id").alias("vec_id"), F.lit(0).alias("cid")
+        )
+        assigned.write.parquet(f"{root}/assigned")
+        pairs = [(0, 1), (2, 3), (4, 5), (6, 7), (8, 9)]
+        spark.createDataFrame(pairs, "vec_a long, vec_b long").write.parquet(
+            f"{root}/pairs"
+        )
+        dels = spark.createDataFrame([(0,), (3,), (11,)], "vec_id long")
+        td.tombstone_semantic_index(spark, dels, root)
+        sub = arm.removeprefix("semantic_")
+        rebuilt = {
+            "assigned": assigned.join(dels, "vec_id", "left_anti"),
+            "pairs": spark.createDataFrame(pairs[2:], "vec_a long, vec_b long"),
+        }[sub]
+        return (
+            lambda: td.purge_semantic_index(spark, root),
+            f"{root}/{sub}", td.store_tombstone_path(root), rebuilt,
+        )
+    path = str(tmp_path / "bm")
+    update_bm25_postings(docs, path, 0)
+    takedown_bm25_postings(spark, _dels(docs), path)
+    tf2, _ = _bm25_rebuilt(spark, docs, tmp_path, "bm2")
+    return (
+        lambda: purge_bm25_postings(spark, path),
+        f"{path}/tf", td.store_tombstone_path(path), tf2,
     )
 
-    path = str(tmp_path / "sig")
-    update_signature_table(docs, path)
-    td.tombstone_doc_keyed_table(spark, _dels(docs), path)
+
+@pytest.mark.parametrize("arm", list(_FLAT_PURGE_ARMS))
+def test_flat_purge_crash_mid_swap_converges(
+    spark, docs, tmp_path, monkeypatch, arm
+):
+    """Kill each arm of the shared flat purge inside its staged swap
+    (after the durability mark, before the renames): tombstones still
+    stand, heal rolls the staging forward, and the re-run purge
+    converges to the rebuilt state."""
+    purge, table, t_path, rebuilt = _flat_purge_arm(spark, docs, tmp_path, arm)
 
     real_mark = mnt._mark_staging_complete
+    marks = {"n": 0}
 
     def mark_then_die(staging):
         real_mark(staging)
-        raise RuntimeError("killed after durability mark")
+        marks["n"] += 1
+        if marks["n"] == _FLAT_PURGE_ARMS[arm]:
+            raise RuntimeError("killed after durability mark")
 
     monkeypatch.setattr(mnt, "_mark_staging_complete", mark_then_die)
     with pytest.raises(RuntimeError, match="killed"):
-        td.purge_doc_keyed_table(spark, path)
+        purge()
     monkeypatch.undo()
-    assert os.path.exists(td.tombstone_path(path))  # recovery signal stands
-    td.purge_doc_keyed_table(spark, path)  # heals, then no-ops or finishes
-    assert not os.path.exists(td.tombstone_path(path))
-    rem = docs.filter("doc_id % 7 <> 3")
-    assert _tables_equal(
-        spark.read.parquet(path), minhash_band_rows(rem, "doc_id", "text")
-    )
+    assert os.path.exists(t_path)  # recovery signal stands
+    purge()  # heals, then no-ops or finishes
+    assert not os.path.exists(t_path)
+    assert _tables_equal(spark.read.parquet(table), rebuilt)
 
 
 def _bm25_rebuilt(spark, docs, tmp_path, name):
@@ -313,6 +385,8 @@ def test_takedown_umbrella_rejects_unknown_family(spark, docs, tmp_path):
         td.takedown(spark, docs.select("doc_id"), {"nope": str(tmp_path)})
     with pytest.raises(ValueError, match="unknown takedown family"):
         td.purge_takedown(spark, {"nope": str(tmp_path)})
+    with pytest.raises(ValueError, match="unknown takedown family"):
+        td.takedown_compliance(spark, docs.select("doc_id"), {"nope": str(tmp_path)})
 
 
 def test_gate_readers_are_tombstone_aware(spark, docs, tmp_path):
@@ -937,3 +1011,26 @@ def test_purge_semantic_single_scan_metrics(spark, tmp_path):
     assert res["n_purged_pairs"] == 2  # (0,1) and (2,3)
     left = spark.read.parquet(f"{root}/pairs")
     assert sorted(tuple(r) for r in left.collect()) == [(4, 5), (6, 7), (8, 9)]
+
+
+def test_purge_bm25_tf_single_scan_metrics(spark, tmp_path):
+    """n_purged_tf from the shared one-scan count equals the tombstoned
+    docs' tf rows; a purge that leaves no tf row removes the table."""
+    docs = spark.createDataFrame(
+        [(1, "alpha bravo"), (2, "bravo charlie"), (3, "delta")],
+        "doc_id int, text string",
+    )
+    path = str(tmp_path / "bm")
+    update_bm25_postings(docs, path, 0)
+    tf = spark.read.parquet(f"{path}/tf")
+    n_all, n_one = tf.count(), tf.filter("doc_id = 1").count()
+    takedown_bm25_postings(spark, docs.filter("doc_id = 1").select("doc_id"), path)
+    assert purge_bm25_postings(spark, path)["n_purged_tf"] == n_one
+    left = spark.read.parquet(f"{path}/tf")
+    assert left.count() == n_all - n_one
+    assert left.filter("doc_id = 1").isEmpty()
+    # zero survivors: every remaining tf row is tombstoned
+    takedown_bm25_postings(spark, docs.select("doc_id"), path)
+    assert purge_bm25_postings(spark, path)["n_purged_tf"] == n_all - n_one
+    assert read_parquet_if_exists(spark, f"{path}/tf") is None
+    assert not os.path.exists(td.store_tombstone_path(path))
