@@ -75,12 +75,19 @@ def main() -> None:
     runners = dict(QUERIES)  # includes "flagship": the entry plan's
     # registered projection (same pipeline + a constant-cost column select)
     samples: dict[str, list[float]] = {name: [] for name in runners}
+    # Janino compiles per pass (one CodegenMetrics sample per generated
+    # class): pass 1 fills the session's codegen cache, and a later pass
+    # compiles only classes whose source text differs from run to run
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles: list[int] = []
     for _ in range(n_runs):
+        before = codegen.METRIC_COMPILATION_TIME().getCount()
         for name, fn in runners.items():
             t0 = time.perf_counter()
             _force(fn(spark, sf_dir))
             samples[name].append(time.perf_counter() - t0)
             _release_persisted(spark)
+        compiles.append(codegen.METRIC_COMPILATION_TIME().getCount() - before)
     timings = {name: round(statistics.median(s), 3) for name, s in samples.items()}
     total = sum(statistics.median(s) for s in samples.values())
     # Per-query spread (r11 verdict item 6): cross-round comparisons on
@@ -114,6 +121,7 @@ def main() -> None:
         "sf": sf,
         "runs_per_query": n_runs,
         "aggregation": "median(interleaved)",
+        "codegen_compiles_per_pass": compiles,
     }
     # The full per-query map (~4.4 KB at 100+ queries) overflows the
     # driver's 2,000-char tail capture — r7's BENCH parsed:null root cause.

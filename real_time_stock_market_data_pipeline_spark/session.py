@@ -63,6 +63,15 @@ def get_spark(
             "org.apache.spark.sql.execution.streaming.checkpointing."
             "FileSystemBasedCheckpointFileManager",
         )
+        # Generated-class cache (static: fixed when the JVM's first session
+        # starts).  Spark's default holds 100 classes in 4 LRU segments,
+        # but the 12 dashboard reads alone need 152-174: at 100 every
+        # repeat pass re-runs Janino 110-148 times and the JIT compiles
+        # each new class again.  One pass of the whole query registry at
+        # sf0.001 compiles 4 905 classes with no cap; 8 192 holds it, at
+        # ≈ 40 MB of Metaspace (≈ 200 → ≈ 239 MB).  The dashboard's
+        # working set costs a few MB.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

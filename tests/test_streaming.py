@@ -325,7 +325,7 @@ def test_update_symbol_carries_state_across_batches():
     out of order (split over several frames, with tied times), each batch
     emits its new ticks in (time, tick_id) order with the indicators of the
     whole series so far (while the state still holds all of it), the state
-    keeps the last ``min(n, 1000)`` prices
+    keeps the last ``min(n, 1000)`` prices as raw float64 bytes
     and ``n_seen`` counts every tick."""
     import pandas as pd
 
@@ -362,9 +362,67 @@ def test_update_symbol_carries_state_across_batches():
                 assert np.array_equal(
                     emitted[c].to_numpy(), whole[c].to_numpy()[lo:hi], equal_nan=True
                 ), c
-        prices, n_seen = state.get
+        buffered, n_seen = state.get
         assert n_seen == hi
+        prices = np.frombuffer(buffered, dtype=np.float64)
         assert list(prices) == ticks["current_price"].tolist()[max(0, hi - BUFFER_SIZE):hi]
+
+
+def test_checkpoint_with_array_state_is_refused(spark, tmp_path, monkeypatch):
+    """A checkpoint whose indicator state was written in the earlier
+    ``prices array<double>`` layout fails the restarted query loudly
+    (Spark's state schema check) instead of being read as bytes."""
+    import pandas as pd
+    from pyspark.errors import StreamingQueryException
+
+    from real_time_stock_market_data_pipeline_spark.streaming import analytics
+
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+    os.makedirs(src)
+
+    def deliver(i):
+        ids = np.arange(i * 20, (i + 1) * 20)
+        pd.DataFrame({
+            "company_id": [f"S{k % 3}" for k in ids],
+            "tick_id": ids,
+            "trade_datetime": (pd.Timestamp("2024-01-02", tz="UTC")
+                               + pd.to_timedelta(ids, unit="min")).astype("datetime64[us, UTC]"),
+            "current_price": 100.0 + ids,
+            "volume": 10,
+        }).to_parquet(f"{src}/ticks-{i}.parquet", index=False)
+
+    stream = (
+        spark.readStream.schema(
+            "company_id string, tick_id long, trade_datetime timestamp, "
+            "current_price double, volume long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    handler = analytics._update_symbol
+
+    def update_array_state(key, batches, state):
+        class ArrayState:  # the handler's bytes, stored as array<double>
+            exists = state.exists
+
+            @property
+            def get(self):
+                prices, n_seen = state.get
+                return np.asarray(prices, dtype=np.float64).tobytes(), n_seen
+
+            def update(self, value):
+                state.update((np.frombuffer(value[0]).tolist(), value[1]))
+
+        return handler(key, batches, ArrayState())
+
+    monkeypatch.setattr(analytics, "STATE_SCHEMA", "prices array<double>, n_seen long")
+    monkeypatch.setattr(analytics, "_update_symbol", update_array_state)
+    deliver(0)
+    assert run_bounded_pipeline(stream, out, ckpt).exception() is None
+    monkeypatch.undo()
+
+    deliver(1)
+    with pytest.raises(StreamingQueryException, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"):
+        run_bounded_pipeline(stream, out, ckpt)
 
 
 def test_kafka_roundtrip_preserves_ticks(spark):
